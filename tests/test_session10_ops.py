@@ -337,6 +337,25 @@ def test_mmr_prefers_diverse_over_redundant(spark):
     assert all(p[2] is not None for p in picks)
 
 
+def test_mmr_ids_with_sql_metacharacters(spark):
+    """Chosen ids are excluded as typed values: string ids holding a
+    control character, quotes and backslashes are each picked exactly
+    once, in the planted a, c, b, d order (a, c and b are excluded in
+    later rounds)."""
+    from vanus_spark.llm.similarity import mmr_select
+
+    a, b, c, d = "bell\x07\n", 'it\'s "hi"', "C:\\tmp\\x", "plain"
+    rows = [
+        (a, [0.9, 0.436, 0.0]),
+        (b, [0.85, 0.527, 0.0]),
+        (c, [0.8, 0.0, 0.6]),
+        (d, [0.0, 1.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
+    picks = mmr_select(df, [1.0, 0.0, 0.0], k=4, lam=0.75)
+    assert [p[1] for p in picks] == [a, c, b, d]
+
+
 def test_mann_kendall_hand_computed(spark):
     """Strictly increasing [1..5]: S = 10, var = 5*4*15/18; with a
     tie [1,1,2]: S = 2, tie term 2*1*9 = 18, var = (66-18)/18."""

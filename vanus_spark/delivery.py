@@ -86,6 +86,18 @@ def no_retry_reason_col(status: Column) -> Column:
     )
 
 
+def _attempts_col() -> Column:
+    return F.coalesce(
+        F.col("attributes").getItem(ATTR_RETRY_ATTEMPTS).cast("int"), F.lit(0)
+    )
+
+
+def retriable_col(max_retry_attempts: int = 32, status_col: str = "status") -> Column:
+    """True where a failed delivery re-enters pending, false where it
+    is dead-lettered: the route split of ``route_failed_events``."""
+    return should_retry_col(F.col(status_col)) & (_attempts_col() < max_retry_attempts)
+
+
 def route_failed_events(
     failed: DataFrame,
     sub_id: str,
@@ -103,10 +115,8 @@ def route_failed_events(
     route split is two filters over one cached batch, no shuffle.
     """
     status = F.col(status_col)
-    attempts = F.coalesce(
-        F.col("attributes").getItem(ATTR_RETRY_ATTEMPTS).cast("int"), F.lit(0)
-    )
-    retriable = should_retry_col(status) & (attempts < max_retry_attempts)
+    attempts = _attempts_col()
+    retriable = retriable_col(max_retry_attempts, status_col)
     reason = F.coalesce(
         no_retry_reason_col(status),
         F.when(attempts >= max_retry_attempts, F.lit("MaxDeliveryAttemptExceeded")),

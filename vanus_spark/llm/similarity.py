@@ -958,10 +958,10 @@ def mmr_select(
     chosen: list[tuple] = []
     out: list[tuple] = []
     for i in range(k):
+        # ids filter as typed literals, never as SQL text: a string id
+        # holding a quote, backslash or control character stays data
         cands = (
-            base.where(
-                f"`{id_col}` NOT IN ({','.join(repr(c[0]) for c in chosen)})"
-            )
+            base.where(~F.col(id_col).isin([c[0] for c in chosen]))
             if chosen
             else base
         )

@@ -6,8 +6,8 @@ qualified name ``namespace_subsystem_name`` — e.g. the trigger
 worker's push counter is ``vanus_trigger_worker_push_event_number``
 with labels (trigger, eventbus, retry, result)
 (metrics/trigger.go:92-97). The engine keeps the equivalent per-loop
-totals (``DeliveryLoop.prom_counters``, accumulated by the same
-tagged-union aggregate that feeds ``metrics_df``); this module maps
+totals (``DeliveryLoop.prom_counters``, accumulated from the same
+per-tick observed counters that feed ``metrics_df``); this module maps
 them onto the reference's metric NAMES so an operator's dashboards
 and alert rules port unchanged:
 

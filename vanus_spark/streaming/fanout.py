@@ -94,11 +94,12 @@ class TriggerWorker:
         loop over it, release. Results keyed by sub_id.
 
         The unpersist in the finally block is only safe because each
-        DeliveryLoop.process_batch EAGERLY materializes its outputs
-        (localCheckpoint on pending/delivered inside the loop) before
-        returning — if that eager step is ever removed, results would
-        lazily re-read an unpersisted batch and the shared-scan
-        guarantee silently degrades to N re-scans."""
+        DeliveryLoop.process_batch EAGERLY materializes its work pass
+        (the transformed batch, as a localCheckpoint) and its sink pass
+        before returning, and every returned frame reads those — if
+        that eager step is ever removed, results would lazily re-read
+        an unpersisted batch and the shared-scan guarantee silently
+        degrades to N re-scans."""
         cached = batch_df.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             return {
@@ -129,7 +130,7 @@ class TriggerWorker:
                 batch_df, _dt.datetime.now(_dt.timezone.utc), tick_seconds
             )
             for sub_id, res in results.items():
-                self.loops[sub_id].delivered_count += res.delivered.count()
+                self.loops[sub_id].delivered_count += res.counts["delivered"]
             if on_tick:
                 on_tick(results)
 

@@ -7,38 +7,55 @@ failed events written to retry (timer) buses and a DLQ bus, and
 delayed events parked in the timing wheel.
 
 Spark design (SURVEY §7.4): ONE pending-events table replaces the 130
-timer eventbuses; each micro-batch:
+timer eventbuses; each micro-batch is one pass per side effect:
 
-  1. due = pending WHERE due_ts <= batch_time; carry the rest
-  2. fresh = filter(transform(batch)); transform errors -> DLQ route
-  3. deliver (due ∪ fresh) executor-side (mapInPandas over the sink
-     callable — no driver round-trip, partition-parallel)
-  4. failures -> route_failed_events -> retry rows re-enter pending
-     with the backoff schedule; dead rows append to the DLQ table
-  5. committed offset advances by the min-unacked rule
+  1. work pass: transform(filter(batch)) ∪ carried pending, each row
+     tagged send / park / transform-error (due_ts <= batch_time is
+     due; a future xvanusdeliverytime parks), materialized once
+     with an eager localCheckpoint
+  2. sink pass: the due rows — capped FIFO by (time, id) under
+     max_uack / rate_limit — delivered executor-side (mapInPandas over
+     the sink callable, no driver round-trip, partition-parallel),
+     materialized once
+  3. route: ok / retry / dead split the sink pass, transform errors
+     go to the DLQ; the new pending (parked ∪ retries with their
+     backoff ∪ capped overflow) is a lazy view over the two passes,
+     coalesced to the session's default parallelism
+  4. counters come from Observations on the two passes (no count
+     job); the previous tick's passes are released
 
 The loop is a pure function of (batch, pending, batch_time), so tests
 replay deterministic batches with logical timestamps (no wall clock),
 exactly like the reference's own unit strategy for the wheel.
 
 At scale: pending is small relative to throughput (only failures and
-delays), so the union is cheap; delivery parallelism = input
-partitions; the only shuffle is the offset aggregation (tiny,
-partial-agg). For exactly-once bookkeeping the delivered/dead tables
-would be Delta/Iceberg appends keyed by (eventlog, offset) — plain
-parquet appends here since those jars aren't in the test image.
+delays), so the union is cheap. A tick runs two jobs (the two passes),
+one more when rows die and the dead state is in memory (its own
+checkpoint), and one more under AQE when the interpreted transformer
+widens a narrow batch: ``repartition_for_compute`` adds a round-robin
+exchange, whose map stage AQE runs as a separate job. A max_uack /
+rate_limit cap adds the TakeOrdered exchange and the overflow's
+anti-join. Delivery parallelism = the work pass's partitions. For
+exactly-once bookkeeping the delivered/dead tables would be
+Delta/Iceberg appends keyed by (eventlog, offset) — plain parquet
+appends here since those jars aren't in the test image.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from vanus_spark.delivery import route_failed_events, split_due_events
+from vanus_spark.delivery import (
+    ERR_TRANSFORM_CODE,
+    ORDER_EVENT_CODE,
+    retriable_col,
+    route_failed_events,
+)
 from vanus_spark.model import ATTR_DELIVERY_TIME
 from vanus_spark.subscription import Subscription
 
@@ -48,13 +65,32 @@ SinkFn = Callable[[list[dict[str, Any]]], list[int]]
 
 @dataclass
 class SinkResult:
+    """What one tick did. The frames read the tick's materialized
+    passes and stay valid until the loop's next ``process_batch``,
+    which releases those passes."""
+
     delivered: DataFrame
     pending: DataFrame
     dead: DataFrame
     # newly-parked retries this tick (None for control-plane-gated
-    # ticks) — consumed by run_stream's counter aggregate, mirroring
-    # the reference's TriggerRetryEventCounter
+    # ticks), mirroring the reference's TriggerRetryEventCounter
     retried: DataFrame | None = None
+    # per-tick totals observed on the passes that did the work:
+    # pulled / delivered / retried / dead / pending
+    counts: dict[str, int] = field(default_factory=dict)
+
+
+# work-pass route tag: where each row of the tick goes
+_ROUTE = "_route"
+_SEND, _PARK, _TF_ERROR = "send", "park", "transform_error"
+
+
+def _release(checkpointed: DataFrame) -> None:
+    """Drop the blocks behind a frame returned by localCheckpoint, as
+    the context cleaner does for a garbage-collected RDD (RDD.unpersist
+    would also log that a local checkpoint cannot be recomputed)."""
+    jrdd = checkpointed._jdf.queryExecution().logical().rdd()
+    jrdd.context().unpersistRDD(jrdd.id(), False)
 
 
 _STATUS_SCHEMA_SUFFIX = ", status int, error string"
@@ -132,6 +168,9 @@ class DeliveryLoop:
             "due_ts", F.lit(None).cast("timestamp")
         ).limit(0)
         self.dead: DataFrame = self.empty_envelope
+        # this loop's local checkpoints: the last tick's work and sink
+        # passes, and the in-memory dead state
+        self._held: list[DataFrame] = []
         self.delivered_count = 0
         self.metrics: list[dict] = []
         # Prometheus-shaped counters (reference pkg/observability/
@@ -186,8 +225,10 @@ class DeliveryLoop:
     def process_batch(
         self, batch_df: DataFrame, batch_time, tick_seconds: float = 1.0
     ) -> SinkResult:
-        """One micro-batch tick; updates pending/dead state, returns
-        what happened (all DataFrames, lazily evaluated).
+        """One micro-batch tick; updates pending/dead state and returns
+        what happened. The tick is eager: the batch is transformed once
+        and the sink is called once, each in one materializing pass
+        whose observed counters become ``SinkResult.counts``.
 
         Backpressure/rate limiting are ENFORCED here, not passed
         through: ``config.max_uack`` (reference: offset/offset.go:29-63
@@ -205,74 +246,129 @@ class DeliveryLoop:
                     delivered=self.empty_envelope,
                     pending=self.pending,
                     dead=self.empty_envelope,
+                    counts={
+                        "pulled": batch_df.count(),
+                        "delivered": 0,
+                        "retried": 0,
+                        "dead": 0,
+                        "pending": self.pending.count(),
+                    },
                 )
-        # 1. transform: errors route to DLQ with TransformError
-        processed = self.sub.apply(batch_df)
-        fresh_ok = processed.where(~F.col("transform_error")).drop("transform_error")
+        now = F.lit(batch_time).cast("timestamp")
+        route = F.col(_ROUTE)
+        width = self.spark.sparkContext.defaultParallelism
+
+        # 1. work pass: the transformed batch and the carried pending,
+        # each row tagged with its route, materialized once. Transform
+        # errors route to the DLQ, future delivery times park, the rest
+        # is due now.
+        pulled, routed = Observation(), Observation()
+        fresh = self._with_due_ts(
+            self.sub.apply(batch_df.observe(pulled, F.count(F.lit(1)).alias("n")))
+        ).withColumn(
+            _ROUTE,
+            F.when(F.col("transform_error"), _TF_ERROR)
+            .when(F.col("due_ts") > now, _PARK)
+            .otherwise(_SEND),
+        ).drop("transform_error")
+        carried = self.pending.withColumn(
+            _ROUTE,
+            F.when(F.col("due_ts") <= now, _SEND).when(F.col("due_ts") > now, _PARK),
+        )
+        work = (
+            fresh.unionByName(carried)
+            .observe(
+                routed,
+                *[F.count(F.when(route == r, 1)).alias(r) for r in (_SEND, _PARK, _TF_ERROR)],
+            )
+            .localCheckpoint(eager=True)
+        )
+
+        # 2. sink pass over what is due, materialized once. Backpressure
+        # caps it (sort+limit is TakeOrdered — memory bounded by the
+        # cap, never a full global sort); the overflow parks below.
+        to_send = work.where(route == _SEND).drop(_ROUTE, "due_ts")
+        cap = self.sub.batch_cap(tick_seconds)
+        if cap is not None:
+            to_send = to_send.orderBy(F.col("time").asc_nulls_last(), "id").limit(cap)
+        status = F.col("status")
+        ok = (status >= 200) & (status < 300)
+        sent = _deliver_with_sink(to_send, self.sink_fn)
+        if self.sub.ordered:
+            # ordered mode: a failed send never retries — straight to
+            # DLQ with reason OrderEvent (reference: trigger.go:427-434)
+            sent = sent.withColumn("status", F.when(ok, status).otherwise(ORDER_EVENT_CODE))
+        retriable = retriable_col(self.sub.max_retry_attempts)
+        outcome = Observation()
+        sent = sent.observe(
+            outcome,
+            F.count(F.lit(1)).alias("sent"),
+            F.count(F.when(ok, 1)).alias("delivered"),
+            F.count(F.when(~ok & retriable, 1)).alias("retried"),
+            F.count(F.when(~ok & ~retriable, 1)).alias("dead"),
+        ).localCheckpoint(eager=True)
+
+        # 3. route: every frame below is a view over the two passes
+        retry, dead = route_failed_events(
+            sent.where(~ok), self.sub_id, batch_time, self.sub.max_retry_attempts
+        )
         tf_failed = (
-            processed.where(F.col("transform_error"))
-            .drop("transform_error")
-            .withColumn("status", F.lit(1))
+            work.where(route == _TF_ERROR)
+            .drop(_ROUTE, "due_ts")
+            .withColumn("status", F.lit(ERR_TRANSFORM_CODE))
             .withColumn("error", F.lit("transform error"))
         )
         _, tf_dead = route_failed_events(
             tf_failed, self.sub_id, batch_time, self.sub.max_retry_attempts
         )
-
-        # 2. delayed events in the fresh batch park in pending
-        fresh = self._with_due_ts(fresh_ok)
-        delayed = fresh.where(F.col("due_ts") > F.lit(batch_time).cast("timestamp"))
-        immediate = fresh.where(
-            F.col("due_ts").isNull() | (F.col("due_ts") <= F.lit(batch_time).cast("timestamp"))
-        )
-
-        # 3. due pending events rejoin the stream
-        due, still_pending = split_due_events(self.pending, batch_time)
-
-        to_send = immediate.unionByName(due).drop("due_ts")
-
-        # 3b. backpressure: cap what reaches the sender; overflow parks
-        # (sort+limit is TakeOrdered — memory bounded by the cap, never
-        # a full global sort)
-        cap = self.sub.batch_cap(tick_seconds)
-        throttled = None
-        if cap is not None:
-            sendable = (
-                to_send.orderBy(F.col("time").asc_nulls_last(), "id").limit(cap)
-            )
-            throttled = to_send.join(
-                sendable.select("id"), "id", "left_anti"
-            ).withColumn("due_ts", F.lit(batch_time).cast("timestamp"))
-            to_send = sendable
-
-        # 4. deliver executor-side, split by status
-        sent = _deliver_with_sink(to_send, self.sink_fn).cache()
-        ok = sent.where((F.col("status") >= 200) & (F.col("status") < 300)).drop(
-            "status", "error"
-        )
-        failed = sent.where((F.col("status") < 200) | (F.col("status") >= 300))
-        if self.sub.ordered:
-            # ordered mode: a failed send never retries — straight to
-            # DLQ with reason OrderEvent (reference: trigger.go:427-434)
-            failed = failed.withColumn("status", F.lit(-1))
-        retry, dead = route_failed_events(
-            failed, self.sub_id, batch_time, self.sub.max_retry_attempts
-        )
-
-        # 5. state: retries re-enter pending with their backoff due_ts
-        self.pending = still_pending.unionByName(
-            self._with_due_ts(retry)
-        ).unionByName(delayed)
-        if throttled is not None:
-            self.pending = self.pending.unionByName(throttled)
         new_dead = dead.unionByName(tf_dead)
+        # retries re-enter pending with their backoff due_ts; throttled
+        # overflow parks due now
+        pending = work.where(route == _PARK).drop(_ROUTE).unionByName(
+            self._with_due_ts(retry)
+        )
+        if cap is not None:
+            throttled = (
+                work.where(route == _SEND)
+                .drop(_ROUTE)
+                .join(sent.select("id"), "id", "left_anti")
+                .withColumn("due_ts", now)
+            )
+            pending = pending.unionByName(throttled)
+        # a fixed width: the union would otherwise add the batch's
+        # partitions to the carried ones on every tick
+        self.pending = pending.coalesce(width)
+
+        r, o = routed.get, outcome.get
+        counts = {
+            "pulled": pulled.get["n"],
+            "delivered": o["delivered"],
+            "retried": o["retried"],
+            "dead": o["dead"] + r[_TF_ERROR],
+            # parked + throttled overflow + new retries
+            "pending": r[_PARK] + r[_SEND] - o["sent"] + o["retried"],
+        }
         if self.state_dir:
             self._persist_state(new_dead)
-        else:
-            self.pending = self.pending.localCheckpoint(eager=True)
-            self.dead = self.dead.unionByName(new_dead).localCheckpoint(eager=True)
+        elif counts["dead"]:
+            self.dead = (
+                self.dead.unionByName(new_dead).coalesce(width).localCheckpoint(eager=True)
+            )
+        # the state now reads this tick's passes only: release the
+        # previous tick's (and a replaced dead state) — not before, so a
+        # tick that fails midway leaves the old state readable
+        stale, self._held = self._held, [work, sent]
+        if not self.state_dir and self.dead is not self.empty_envelope:
+            self._held.append(self.dead)
+        for df in stale:
+            if all(df is not h for h in self._held):
+                _release(df)
         return SinkResult(
-            delivered=ok, pending=self.pending, dead=new_dead, retried=retry
+            delivered=sent.where(ok).drop("status", "error"),
+            pending=self.pending,
+            dead=new_dead,
+            retried=retry,
+            counts=counts,
         )
 
     # ----- Structured Streaming wiring -------------------------------------
@@ -344,43 +440,22 @@ class DeliveryLoop:
 
             if heartbeat:
                 batch_df = batch_df.where(F.col("id") != self._HEARTBEAT_ID)
-            res = self.process_batch(
+            counts = self.process_batch(
                 batch_df, _dt.datetime.now(_dt.timezone.utc), tick_seconds
-            )
-            # force delivery + expose progress in ONE tagged-union job
-            # (the reference's TriggerDeliveryEventCounter surface:
-            # delivered / newly-dead / parked per tick)
-            tag_union = (
-                batch_df.select(F.lit("pulled").alias("k"))
-                .unionByName(res.delivered.select(F.lit("delivered").alias("k")))
-                .unionByName(res.dead.select(F.lit("dead").alias("k")))
-                .unionByName(res.pending.select(F.lit("pending").alias("k")))
-            )
-            if res.retried is not None:
-                tag_union = tag_union.unionByName(
-                    res.retried.select(F.lit("retry").alias("k"))
-                )
-            counts = {
-                r["k"]: r["n"]
-                for r in tag_union.groupBy("k")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
-            self.delivered_count += counts.get("delivered", 0)
-            self.prom_counters["pull_event_number"] += counts.get("pulled", 0)
-            self.prom_counters["push_event_number"] += counts.get(
-                "delivered", 0
-            )
-            self.prom_counters["retry_event_number"] += counts.get("retry", 0)
-            self.prom_counters["dead_letter_event_number"] += counts.get(
-                "dead", 0
-            )
+            ).counts
+            # the reference's TriggerDeliveryEventCounter surface:
+            # delivered / newly-dead / parked per tick
+            self.delivered_count += counts["delivered"]
+            self.prom_counters["pull_event_number"] += counts["pulled"]
+            self.prom_counters["push_event_number"] += counts["delivered"]
+            self.prom_counters["retry_event_number"] += counts["retried"]
+            self.prom_counters["dead_letter_event_number"] += counts["dead"]
             self.metrics.append(
                 {
                     "epoch": int(epoch_id),
-                    "delivered": counts.get("delivered", 0),
-                    "new_dead": counts.get("dead", 0),
-                    "pending": counts.get("pending", 0),
+                    "delivered": counts["delivered"],
+                    "new_dead": counts["dead"],
+                    "pending": counts["pending"],
                 }
             )
 
