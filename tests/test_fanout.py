@@ -104,3 +104,37 @@ def test_worker_run_stream_one_scan_all_subs(spark, tmp_path):
     q = w.run_stream(stream, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     assert w.delivered_counts() == {"c": 5, "p": 5}
+
+
+def test_worker_run_stream_exports_per_loop_counters(spark, tmp_path):
+    """Each loop under a streaming worker keeps the same counters and
+    metrics rows as a loop streamed on its own: every loop pulls the
+    whole shared batch, and pushes or retries only its own matches."""
+    src = tmp_path / "bus"
+    _envelope(
+        spark, [_row(i, "purchase" if i % 2 else "click") for i in range(10)]
+    ).coalesce(1).write.mode("overwrite").parquet(str(src))
+
+    from vanus_spark.sources.streams import read_envelope_stream
+
+    stream = read_envelope_stream(spark, str(src), "parquet")
+    w = TriggerWorker(spark)
+    w.register("p", {"filters": [{"exact": {"type": "purchase"}}]}, Recorder())
+    w.register("c", {"filters": [{"exact": {"type": "click"}}]}, Recorder(503))
+    q = w.run_stream(stream, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    assert w.loops["p"].prom_counters == {
+        "pull_event_number": 10,
+        "push_event_number": 5,
+        "retry_event_number": 0,
+        "dead_letter_event_number": 0,
+    }
+    assert w.loops["c"].prom_counters == {
+        "pull_event_number": 10,
+        "push_event_number": 0,
+        "retry_event_number": 5,
+        "dead_letter_event_number": 0,
+    }
+    assert w.delivered_counts() == {"c": 0, "p": 5}
+    last = max(w.loops["c"].metrics_df().collect())
+    assert (last.delivered, last.new_dead, last.pending) == (0, 0, 5)

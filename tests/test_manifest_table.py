@@ -592,3 +592,27 @@ def test_changes_missing_manifest_raises(spark, tmp_path):
     t = _mk(spark, tmp_path)
     with pytest.raises(FileNotFoundError):
         t.changes(1, 99)
+
+
+def test_vacuum_spares_an_uncommitted_generation(spark, tmp_path):
+    """A vacuum that runs while another handle is between writing its
+    generation and committing it must not delete that generation."""
+    from vanus_spark.sources.manifest_table import ManifestTable
+
+    a = _mk(spark, tmp_path)
+    b = ManifestTable(spark, a.path, "k", n_buckets=a.n_buckets)
+    upd = spark.createDataFrame([(3, 999)], "k long, v long")
+    bucket = upd.select(b._bucket_col().alias("_b")).first()["_b"]
+    rows = (
+        b.read(buckets=[bucket])
+        .join(upd.select("k"), "k", "left_anti")
+        .unionByName(upd)
+    )
+    gen, written = b._write_generation(rows)
+    a.vacuum(retain_epochs=1)
+    b._commit_buckets(
+        {bucket: b._mapping.get(bucket)}, {x: f"{gen}/_b={x}" for x in written}
+    )
+    assert b.fsck()["ok"]
+    fresh = ManifestTable(spark, a.path, "k", n_buckets=a.n_buckets)
+    assert {r.k: r.v for r in fresh.read().collect()}[3] == 999

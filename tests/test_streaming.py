@@ -466,6 +466,36 @@ def test_durable_dead_letter_accumulates(spark, tmp_path):
     assert loop2.dead.count() == 2
 
 
+def test_durable_epoch_marker_survives_a_failed_swap(spark, tmp_path, monkeypatch):
+    """The EPOCH marker is replaced atomically: a tick that fails at the
+    marker swap leaves the previous epoch and its pending table
+    restorable (an in-place write could leave an empty marker)."""
+    import os
+
+    state = str(tmp_path / "state3")
+    loop = DeliveryLoop(
+        spark, Subscription.from_spec({}), FlakySink({"1"}), "sub-d3", state_dir=state
+    )
+    loop.process_batch(_envelope(spark, [_row(1)]), T0)  # epoch 1: "1" parks
+
+    real_replace = os.replace
+
+    def crash_at_marker(src, dst):
+        if dst.endswith("EPOCH"):
+            raise OSError("crash at the marker swap")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash_at_marker)
+    with pytest.raises(OSError):
+        loop.process_batch(_envelope(spark, [_row(2)]), T0 + dt.timedelta(seconds=1))
+    monkeypatch.undo()
+    loop2 = DeliveryLoop(
+        spark, Subscription.from_spec({}), FlakySink(set()), "sub-d3", state_dir=state
+    )
+    assert loop2._epoch == 1
+    assert [r.id for r in loop2.pending.collect()] == ["1"]
+
+
 def test_max_uack_caps_each_tick_and_drains_fifo(spark):
     """max_uack (reference: offset/offset.go:29-63) bounds what reaches
     the sender per tick; the overflow parks and drains FIFO."""

@@ -356,6 +356,7 @@ def cmd_table(args):
     counterpart for the Spark-native store): fsck integrity report,
     OPTIMIZE-style small-file compaction, generation vacuum, and the
     commit history."""
+    from vanus_spark import commitlog
     from vanus_spark.sources.manifest_table import ManifestTable
 
     spark = _spark()
@@ -369,30 +370,14 @@ def cmd_table(args):
     elif args.action == "vacuum":
         print(json.dumps({"removed_generations": t.vacuum(args.retain)}))
     elif args.action == "history":
-        hist_dir = os.path.join(args.path, "manifests")
-        out = []
-        if os.path.isdir(hist_dir):
-            import re as _re
-
-            for name in sorted(
-                os.listdir(hist_dir),
-                key=lambda n: int(n[1:]) if n[1:].isdigit() else -1,
-            ):
-                if not _re.match(r"^m\d+$", name):
-                    continue
-                with open(os.path.join(hist_dir, name)) as f:
-                    body = f.read().split()
-                out.append(
-                    {
-                        "epoch": int(name[1:]),
-                        "buckets": sum(
-                            1
-                            for tok in body
-                            if ":" in tok and not tok.startswith("#")
-                        ),
-                    }
-                )
-        print(json.dumps(out))
+        print(
+            json.dumps(
+                [
+                    {"epoch": e, "buckets": len(commitlog.read(args.path, e).entries)}
+                    for e in commitlog.epochs(args.path)
+                ]
+            )
+        )
 
 
 def _load_config_file(path):

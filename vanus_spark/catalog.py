@@ -3,9 +3,10 @@ subscriptions (reference parity: server/controller/tenant/controller.go
 CreateNamespace/List/Get, eventbus + trigger controllers' CRUD).
 
 The reference persists this metadata in its etcd-like kv store behind
-the controller; here it is one JSON state document published with the
-same crash-safe discipline as the data tables: write-temp + atomic
-rename, epoch-fenced against concurrent writers under a lock file.
+the controller; here it is one JSON state document published through
+the same commit protocol as the data tables (``vanus_spark.commitlog``:
+write-temp + atomic rename, epoch-fenced against concurrent writers
+under a lock file).
 Metadata is control-plane-sized, so a single document (not a bucketed
 table) is the right shape.
 
@@ -30,6 +31,7 @@ import json
 import os
 import time
 
+from vanus_spark.commitlog import ConcurrentWriterError, fenced_swap
 from vanus_spark.snowflake import Snowflake
 
 
@@ -45,8 +47,7 @@ class ResourceInUseError(RuntimeError):
     pass
 
 
-class CatalogConcurrencyError(RuntimeError):
-    pass
+CatalogConcurrencyError = ConcurrentWriterError
 
 
 class ResourceCanNotOpError(RuntimeError):
@@ -99,31 +100,13 @@ class Catalog:
         self._epoch, self._state = self._load()
 
     def _commit(self) -> None:
-        lock = self.path + ".lock"
-        deadline = time.monotonic() + 10.0
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                if time.monotonic() > deadline:
-                    raise TimeoutError(f"catalog lock busy: {lock}")
-                time.sleep(0.01)
-        try:
-            live_epoch, _ = self._load()
-            if live_epoch != self._epoch:
-                raise CatalogConcurrencyError(
-                    f"catalog changed underneath: observed epoch "
-                    f"{self._epoch}, live {live_epoch}"
-                )
-            self._epoch += 1
-            tmp = self.path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"epoch": self._epoch, "state": self._state}, f)
-            os.replace(tmp, self.path)
-        finally:
-            os.close(fd)
-            os.unlink(lock)
+        self._epoch = fenced_swap(
+            self.path,
+            self.path + ".lock",
+            self._epoch,
+            lambda: self._load()[0],
+            lambda epoch: json.dumps({"epoch": epoch, "state": self._state}),
+        )
 
     # ----- CRUD ------------------------------------------------------------
 

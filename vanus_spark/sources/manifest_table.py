@@ -10,11 +10,12 @@ Layout on disk:
     <path>/manifests/mN          # manifest history (time travel)
     <path>/data/g<G>/_b=<B>/...  # generation directories, bucketed by key hash
 
-Commits are epoch-fenced optimistic concurrency (the dedup-ingest
-pattern, streaming/dedup_ingest.py): a writer that observed epoch E can
-only commit E+1 under a short-lived lock file; losers raise
-ConcurrentWriterError and their generation directories stay orphans.
-A crash before the COMMITTED swap leaves the table exactly as it was.
+Commits, manifest history, generation numbering and vacuum are the
+shared epoch-fenced commit log (``vanus_spark.commitlog``): a writer
+that observed epoch E can only commit E+1 under a short-lived lock
+file; losers raise ConcurrentWriterError and their generation
+directories stay orphans. A crash before the COMMITTED swap leaves the
+table exactly as it was.
 
 MERGE is partition-pruned copy-on-write: rows hash into ``n_buckets``
 by key, and an upsert rewrites ONLY the buckets that contain updated
@@ -29,15 +30,17 @@ layout choice: more buckets = finer rewrite granularity + more files.
 from __future__ import annotations
 
 import os
-import re
-import time
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from vanus_spark import commitlog
+from vanus_spark.commitlog import ConcurrentWriterError
 
-class ConcurrentWriterError(RuntimeError):
-    """Another writer committed since this writer last read the manifest."""
+
+def _buckets(entries: list[str]) -> dict[int, str]:
+    """Manifest entries ``bucket:dir`` -> {bucket: dir}."""
+    return {int(b): d for b, d in (e.split(":", 1) for e in entries)}
 
 
 class ManifestTable:
@@ -60,88 +63,32 @@ class ManifestTable:
         self.stats_cols = list(stats_cols or [])
         self._writer_id = uuid.uuid4().hex[:8]
         os.makedirs(path, exist_ok=True)
-        self._epoch, self._mapping, self._meta = self._read_manifest()
+        self.refresh()
 
     # ----- manifest --------------------------------------------------------
 
-    def _read_manifest(self) -> tuple[int, dict[int, str], dict[str, str]]:
-        p = f"{self.path}/COMMITTED"
-        if not os.path.exists(p):
-            return 0, {}, {}
-        epoch, mapping, meta = 0, {}, {}
-        with open(p) as f:
-            for tok in f.read().split():
-                if tok.startswith("#epoch="):
-                    epoch = int(tok[len("#epoch=") :])
-                elif tok.startswith("#meta:"):
-                    k, v = tok[len("#meta:") :].split("=", 1)
-                    meta[k] = v
-                elif tok.startswith("#"):
-                    continue
-                elif ":" in tok:
-                    b, d = tok.split(":", 1)
-                    mapping[int(b)] = d
-        return epoch, mapping, meta
-
     def refresh(self) -> None:
         """Re-read the live manifest (pick up other writers' commits)."""
-        self._epoch, self._mapping, self._meta = self._read_manifest()
+        m = commitlog.read(self.path)
+        self._epoch, self._mapping, self._meta = m.epoch, _buckets(m.entries), m.meta
 
     def _commit(
         self, mapping: dict[int, str], meta: dict[str, str] | None = None
     ) -> None:
-        lock = f"{self.path}/.COMMITTED.lock"
-        deadline = time.monotonic() + 10.0
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                if time.monotonic() > deadline:
-                    raise TimeoutError(f"manifest lock busy: {lock}")
-                time.sleep(0.01)
-        try:
-            live_epoch, _, live_meta = self._read_manifest()
-            if live_epoch != self._epoch:
-                raise ConcurrentWriterError(
-                    f"stale writer: observed epoch {self._epoch}, live "
-                    f"manifest is at epoch {live_epoch}"
-                )
-            new_epoch = self._epoch + 1
-            # commit metadata rides IN the atomic swap (exactly-once
-            # markers for stream batches); unspecified keys carry over
-            merged_meta = {**live_meta, **(meta or {})}
-            lines = (
-                [f"#epoch={new_epoch}"]
-                + [f"#meta:{k}={v}" for k, v in sorted(merged_meta.items())]
-                + [f"{b}:{d}" for b, d in sorted(mapping.items())]
-            )
-            content = "\n".join(lines)
-            hist = f"{self.path}/manifests"
-            os.makedirs(hist, exist_ok=True)
-            htmp = f"{hist}/.m{new_epoch}.tmp"
-            with open(htmp, "w") as f:
-                f.write(content)
-            os.replace(htmp, f"{hist}/m{new_epoch}")
-            tmp = f"{self.path}/.COMMITTED.tmp"
-            with open(tmp, "w") as f:
-                f.write(content)
-            os.replace(tmp, f"{self.path}/COMMITTED")  # commit point
-            self._epoch, self._mapping = new_epoch, dict(mapping)
-            self._meta = merged_meta
-        finally:
-            os.close(fd)
-            os.unlink(lock)
+        # commit metadata rides IN the atomic swap (exactly-once
+        # markers for stream batches); unspecified keys carry over —
+        # the fence guarantees self._meta is the live manifest's
+        merged_meta = {**self._meta, **(meta or {})}
+        self._epoch = commitlog.commit(
+            self.path,
+            self._epoch,
+            [f"{b}:{d}" for b, d in sorted(mapping.items())],
+            merged_meta,
+        )
+        self._mapping, self._meta = dict(mapping), merged_meta
 
     def _next_gen(self) -> int:
-        d = f"{self.path}/data"
-        gen = 0
-        if os.path.isdir(d):
-            for name in os.listdir(d):
-                m = re.match(r"^g(\d+)", name)
-                if m:
-                    gen = max(gen, int(m.group(1)))
-        return gen + 1
+        return commitlog.next_generation([f"{self.path}/data"])
 
     # ----- reads -----------------------------------------------------------
 
@@ -219,33 +166,16 @@ class ManifestTable:
         )
 
     def read_at_epoch(self, epoch: int) -> DataFrame:
-        p = f"{self.path}/manifests/m{epoch}"
-        with open(p) as f:
-            dirs = [
-                f"{self.path}/data/{tok.split(':', 1)[1]}"
-                for tok in f.read().split()
-                if ":" in tok and not tok.startswith("#")
-            ]
-        return self.spark.read.parquet(*dirs)
+        mapping = _buckets(commitlog.read(self.path, epoch).entries)
+        return self.spark.read.parquet(
+            *[f"{self.path}/data/{d}" for d in mapping.values()]
+        )
 
     def _mapping_at(self, epoch: int) -> dict[int, str]:
         """Bucket->dir mapping as of a committed epoch (manifest history)."""
         if epoch == self._epoch:
             return dict(self._mapping)
-        p = f"{self.path}/manifests/m{epoch}"
-        if not os.path.exists(p):
-            raise FileNotFoundError(
-                f"no manifest for epoch {epoch} (vacuumed or never committed): {p}"
-            )
-        mapping: dict[int, str] = {}
-        with open(p) as f:
-            for tok in f.read().split():
-                if tok.startswith("#"):
-                    continue
-                if ":" in tok:
-                    b, d = tok.split(":", 1)
-                    mapping[int(b)] = d
-        return mapping
+        return _buckets(commitlog.read(self.path, epoch).entries)
 
     def changes(self, from_epoch: int, to_epoch: int) -> DataFrame:
         """Row-level change feed between two committed epochs — the
@@ -628,33 +558,12 @@ class ManifestTable:
         return report
 
     def vacuum(self, retain_epochs: int = 1) -> int:
-        """Delete generation directories unreferenced by the last
-        ``retain_epochs`` manifests (and the live one). Returns the
-        number of directories removed."""
-        import shutil
-
-        keep_dirs: set[str] = set(self._mapping.values())
-        hist = f"{self.path}/manifests"
-        if os.path.isdir(hist):
-            epochs = sorted(
-                int(m.group(1))
-                for name in os.listdir(hist)
-                if (m := re.match(r"^m(\d+)$", name))
-            )
-            for e in epochs[-retain_epochs:]:
-                with open(f"{hist}/m{e}") as f:
-                    for tok in f.read().split():
-                        if ":" in tok and not tok.startswith("#"):
-                            keep_dirs.add(tok.split(":", 1)[1])
-        keep_gens = {d.split("/", 1)[0] for d in keep_dirs}
-        removed = 0
-        data = f"{self.path}/data"
-        if os.path.isdir(data):
-            for name in os.listdir(data):
-                if name not in keep_gens:
-                    shutil.rmtree(f"{data}/{name}")
-                    removed += 1
-        return removed
+        """Delete generation directories that neither the live manifest
+        nor the last ``retain_epochs`` manifests reference, and prune
+        the older manifest history (``commitlog.vacuum``: a concurrent
+        writer's uncommitted generation is never a candidate). Returns
+        the number of directories removed."""
+        return commitlog.vacuum(self.path, [f"{self.path}/data"], retain_epochs)
 
     def compact_files(
         self, max_files: int = 1, buckets: list[int] | None = None

@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from vanus_spark import commitlog
+from vanus_spark.commitlog import ConcurrentWriterError  # noqa: F401 (re-export)
 from vanus_spark.llm.dedup import (
     bucket_pairs,
     exact_dedup_rows,
@@ -45,14 +47,6 @@ _METRICS_FIELDS = [
     "rejected_vs_corpus",
     "accepted",
 ]
-
-
-class ConcurrentWriterError(RuntimeError):
-    """A second live writer committed state since this loop last read
-    the manifest — this loop's view is stale and its pending append
-    was computed against outdated dedup state. The loser's parquet
-    directories are writer-private orphans the restore path never
-    reads; re-instantiate the loop (re-reading COMMITTED) to continue."""
 
 
 class DedupIngestLoop:
@@ -112,112 +106,26 @@ class DedupIngestLoop:
 
     # ----- durable state ---------------------------------------------------
     #
-    # Manifest-committed appends (the no-extra-jars shape of a Delta/
+    # Manifest-committed appends through the shared commit log
+    # (``vanus_spark.commitlog``, the no-extra-jars shape of a Delta/
     # Iceberg transaction log): each batch writes its corpus AND sig
-    # rows into per-batch directories, then a single atomic rename of
-    # the COMMITTED manifest makes BOTH visible at once. A crash
-    # between the two parquet writes — or before the rename — leaves
-    # orphan directories the restore path never reads, so the two
-    # state tables can never disagree about which batches exist.
-    #
-    # Concurrency (the Raft-replicated store's job in the reference,
-    # server/store/raft/): the manifest carries an EPOCH that every
-    # commit increments under a short-lived lock file. A writer that
-    # observed epoch E can only commit epoch E+1; if another writer
-    # got there first the swap is rejected (ConcurrentWriterError) —
-    # optimistic concurrency control, the same shape as a Delta
-    # transaction-log version check. Batch directory names embed a
-    # per-writer token plus a monotonic generation (1 + max generation
-    # across every existing directory, committed or orphaned), so no
-    # two writes — concurrent or across compactions — ever target the
-    # same path, and mode("overwrite") can never destroy live state.
+    # rows into per-batch directories, then ONE epoch-fenced atomic
+    # swap of the COMMITTED manifest makes both visible at once. A
+    # crash between the two parquet writes — or before the swap —
+    # leaves orphan directories the restore path never reads, so the
+    # two state tables can never disagree about which batches exist.
+    # A loop whose commit is fenced (another writer committed since it
+    # read the manifest) raises ConcurrentWriterError; re-instantiate
+    # it to continue. Batch directory names embed a per-writer token
+    # plus the log's monotonic generation, so no two writes —
+    # concurrent or across compactions — ever target the same path,
+    # and mode("overwrite") can never destroy live state.
 
-    def _read_manifest(self) -> tuple[int, list[str]]:
-        """(epoch, committed batch dirs). Pre-epoch manifests (no
-        '#epoch' header) read as epoch 0."""
-        import os
-
-        path = f"{self.state_dir}/COMMITTED"
-        if not os.path.exists(path):
-            return 0, []
-        epoch, batches = 0, []
-        with open(path) as f:
-            for tok in f.read().split():
-                if tok.startswith("#epoch="):
-                    epoch = int(tok[len("#epoch=") :])
-                elif tok:
-                    batches.append(tok)
-        return epoch, batches
-
-    def _committed_batches(self) -> list[str]:
-        return self._read_manifest()[1]
-
-    def _next_gen(self) -> int:
-        """1 + max numeric generation across EVERY existing batch
-        directory (committed, orphaned, or mid-write) — a fresh name
-        can therefore never collide with a directory any reader or
-        concurrent writer can see."""
-        import os
-        import re
-
-        gen = 0
-        for kind in ("corpus", "sig"):
-            d = f"{self.state_dir}/{kind}"
-            if not os.path.isdir(d):
-                continue
-            for name in os.listdir(d):
-                m = re.match(r"^[bc](\d+)", name)
-                if m:
-                    gen = max(gen, int(m.group(1)))
-        return gen + 1
-
-    def _commit_manifest(self, batches: list[str]) -> None:
-        """Epoch-fenced atomic manifest swap: re-read the live epoch
-        under a lock file; a mismatch with the epoch this loop last
-        observed means another writer committed in between — reject
-        (the stale writer's directories stay unreferenced orphans)."""
-        import os
-        import time
-
-        lock = f"{self.state_dir}/.COMMITTED.lock"
-        deadline = time.monotonic() + 10.0
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                if time.monotonic() > deadline:
-                    raise TimeoutError(f"manifest lock busy: {lock}")
-                time.sleep(0.01)
-        try:
-            live_epoch, _ = self._read_manifest()
-            if live_epoch != self._epoch:
-                raise ConcurrentWriterError(
-                    f"stale writer: observed epoch {self._epoch}, "
-                    f"live manifest is at epoch {live_epoch}"
-                )
-            new_epoch = self._epoch + 1
-            content = "\n".join([f"#epoch={new_epoch}", *batches])
-            # history copy FIRST (time travel): a crash after it but
-            # before the COMMITTED swap leaves an orphan history file
-            # that the epoch's real commit simply overwrites later
-            hist_dir = f"{self.state_dir}/manifests"
-            os.makedirs(hist_dir, exist_ok=True)
-            htmp = f"{hist_dir}/.m{new_epoch}.tmp"
-            with open(htmp, "w") as f:
-                f.write(content)
-            os.replace(htmp, f"{hist_dir}/m{new_epoch}")
-            tmp = f"{self.state_dir}/.COMMITTED.tmp"
-            with open(tmp, "w") as f:
-                f.write(content)
-            os.replace(tmp, f"{self.state_dir}/COMMITTED")  # commit point
-            self._epoch = new_epoch
-        finally:
-            os.close(fd)
-            os.unlink(lock)
+    def _state_dirs(self) -> list[str]:
+        return [f"{self.state_dir}/corpus", f"{self.state_dir}/sig"]
 
     def _restore_state(self) -> None:
-        self._epoch, batches = self._read_manifest()
+        self._epoch, batches, _ = commitlog.read(self.state_dir)
         if batches:
             stored = self.spark.read.parquet(
                 *[f"{self.state_dir}/corpus/{b}" for b in batches]
@@ -248,8 +156,8 @@ class DedupIngestLoop:
     def _append_state(self, survivors: DataFrame, new_sig: DataFrame) -> None:
         digest = F.md5(normalize_text(F.col(self.text_col)))
         if self.state_dir:
-            batches = self._committed_batches()
-            b = f"b{self._next_gen()}-{self._writer_id}"
+            batches = commitlog.read(self.state_dir).entries
+            b = f"b{commitlog.next_generation(self._state_dirs())}-{self._writer_id}"
             store_c = (
                 survivors.withColumn("_ingest_digest", digest)
                 if self.lsh
@@ -259,7 +167,7 @@ class DedupIngestLoop:
                 f"{self.state_dir}/corpus/{b}"
             )
             new_sig.write.mode("overwrite").parquet(f"{self.state_dir}/sig/{b}")
-            self._commit_manifest([*batches, b])
+            self._epoch = commitlog.commit(self.state_dir, self._epoch, [*batches, b])
             self._restore_state()
         else:
             # DELTA-ONLY checkpointing: `survivors` arrives already
@@ -529,12 +437,10 @@ class DedupIngestLoop:
         folded."""
         if not self.state_dir:
             return 0  # in-memory state is already one checkpoint
-        import os
-
-        batches = self._committed_batches()
+        batches = commitlog.read(self.state_dir).entries
         if len(batches) <= 1:
             return 0
-        b = f"c{self._next_gen()}-{self._writer_id}"
+        b = f"c{commitlog.next_generation(self._state_dirs())}-{self._writer_id}"
         assert b not in batches  # fold target must never be live state
         store_c = (
             # re-attach the digest column for the folded directory
@@ -550,7 +456,7 @@ class DedupIngestLoop:
             f"{self.state_dir}/corpus/{b}"
         )
         self.sig.write.mode("overwrite").parquet(f"{self.state_dir}/sig/{b}")
-        self._commit_manifest([b])
+        self._epoch = commitlog.commit(self.state_dir, self._epoch, [b])
         self._restore_state()
         # the folded directories are NOT deleted here: older manifest
         # epochs still reference them (time travel); ``vacuum`` is the
@@ -562,29 +468,7 @@ class DedupIngestLoop:
 
     def epochs(self) -> list[int]:
         """Committed manifest epochs available for time travel."""
-        import os
-        import re
-
-        d = f"{self.state_dir}/manifests"
-        if not self.state_dir or not os.path.isdir(d):
-            return []
-        return sorted(
-            int(m.group(1))
-            for name in os.listdir(d)
-            if (m := re.match(r"^m(\d+)$", name))
-        )
-
-    def _epoch_batches(self, epoch: int) -> list[str]:
-        path = f"{self.state_dir}/manifests/m{epoch}"
-        import os
-
-        if not os.path.exists(path):
-            raise ValueError(
-                f"epoch {epoch} has no manifest (never committed, or its "
-                f"history was pruned by vacuum)"
-            )
-        with open(path) as f:
-            return [t for t in f.read().split() if t and not t.startswith("#")]
+        return commitlog.epochs(self.state_dir) if self.state_dir else []
 
     def corpus_at_epoch(self, epoch: int) -> DataFrame:
         """The accepted corpus EXACTLY as of manifest epoch ``epoch`` —
@@ -593,7 +477,13 @@ class DedupIngestLoop:
         if ``vacuum`` already reclaimed them."""
         import os
 
-        batches = self._epoch_batches(epoch)
+        try:
+            batches = commitlog.read(self.state_dir, epoch).entries
+        except FileNotFoundError:
+            raise ValueError(
+                f"epoch {epoch} has no manifest (never committed, or its "
+                f"history was pruned by vacuum)"
+            ) from None
         paths = [f"{self.state_dir}/corpus/{b}" for b in batches]
         missing = [p for p in paths if not os.path.isdir(p)]
         if missing:
@@ -604,54 +494,15 @@ class DedupIngestLoop:
         return self.spark.read.parquet(*paths).drop("_ingest_digest")
 
     def vacuum(self, retain_epochs: int = 1) -> int:
-        """Retention GC: delete every batch directory not referenced by
-        the last ``retain_epochs`` manifests (the live COMMITTED is
-        always retained), then prune the unretained manifest history.
-        Returns the number of directories deleted.
-
-        Safe against in-flight writers: only directories whose
-        generation is <= the max generation referenced by RETAINED
-        manifests are candidates — a concurrent append's directories
-        always carry a strictly higher generation, so they can never
-        be mistaken for garbage."""
+        """Retention GC (``commitlog.vacuum``): delete every batch
+        directory not referenced by the last ``retain_epochs`` manifests
+        (the live COMMITTED is always retained), then prune the
+        unretained manifest history. Safe against in-flight writers,
+        whose directories carry a higher generation than any retained
+        one. Returns the number of directories deleted."""
         if not self.state_dir:
             return 0
-        import os
-        import re
-        import shutil
-
-        eps = self.epochs()
-        retained = set(eps[-max(1, retain_epochs):])
-        live_epoch, live_batches = self._read_manifest()
-        referenced = set(live_batches)
-        for e in retained:
-            referenced.update(self._epoch_batches(e))
-        max_gen = 0
-        for b in referenced:
-            m = re.match(r"^[bc](\d+)", b)
-            if m:
-                max_gen = max(max_gen, int(m.group(1)))
-        deleted = 0
-        for kind in ("corpus", "sig"):
-            d = f"{self.state_dir}/{kind}"
-            if not os.path.isdir(d):
-                continue
-            for name in os.listdir(d):
-                m = re.match(r"^[bc](\d+)", name)
-                if (
-                    m
-                    and name not in referenced
-                    and int(m.group(1)) <= max_gen
-                ):
-                    shutil.rmtree(os.path.join(d, name), ignore_errors=True)
-                    deleted += 1
-        for e in eps:
-            if e not in retained and e != live_epoch:
-                try:
-                    os.unlink(f"{self.state_dir}/manifests/m{e}")
-                except FileNotFoundError:
-                    pass
-        return deleted
+        return commitlog.vacuum(self.state_dir, self._state_dirs(), retain_epochs)
 
     def metrics_df(self) -> DataFrame:
         """Per-batch ingest metrics as a DataFrame (the corpus-growth

@@ -130,7 +130,7 @@ class TriggerWorker:
                 batch_df, _dt.datetime.now(_dt.timezone.utc), tick_seconds
             )
             for sub_id, res in results.items():
-                self.loops[sub_id].delivered_count += res.counts["delivered"]
+                self.loops[sub_id].record_tick(epoch_id, res.counts)
             if on_tick:
                 on_tick(results)
 

@@ -50,6 +50,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from vanus_spark.commitlog import write_atomic
 from vanus_spark.delivery import (
     ERR_TRANSFORM_CODE,
     ORDER_EVENT_CODE,
@@ -171,11 +172,10 @@ class DeliveryLoop:
         # this loop's local checkpoints: the last tick's work and sink
         # passes, and the in-memory dead state
         self._held: list[DataFrame] = []
-        self.delivered_count = 0
         self.metrics: list[dict] = []
         # Prometheus-shaped counters (reference pkg/observability/
         # metrics/trigger.go): monotonic totals accumulated per tick by
-        # run_stream, exported with the reference's metric names via
+        # record_tick, exported with the reference's metric names via
         # vanus_spark.observability. Kept separate from self.metrics so
         # the metrics_df schema (a query surface) stays frozen.
         self.prom_counters: dict[str, int] = {
@@ -213,8 +213,7 @@ class DeliveryLoop:
         self.pending = self.spark.read.parquet(path)
         new_dead.write.mode("append").parquet(f"{self.state_dir}/dead")
         self.dead = self.spark.read.parquet(f"{self.state_dir}/dead")
-        with open(f"{self.state_dir}/EPOCH", "w") as f:
-            f.write(str(self._epoch))
+        write_atomic(f"{self.state_dir}/EPOCH", str(self._epoch))
 
     def _with_due_ts(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -373,6 +372,28 @@ class DeliveryLoop:
 
     # ----- Structured Streaming wiring -------------------------------------
 
+    @property
+    def delivered_count(self) -> int:
+        return self.prom_counters["push_event_number"]
+
+    def record_tick(self, epoch_id: int, counts: dict[str, int]) -> None:
+        """Fold one streamed tick's ``SinkResult.counts`` into the
+        counters and the ``metrics_df`` rows — the reference's
+        TriggerDeliveryEventCounter surface: delivered / newly-dead /
+        parked per tick."""
+        self.prom_counters["pull_event_number"] += counts["pulled"]
+        self.prom_counters["push_event_number"] += counts["delivered"]
+        self.prom_counters["retry_event_number"] += counts["retried"]
+        self.prom_counters["dead_letter_event_number"] += counts["dead"]
+        self.metrics.append(
+            {
+                "epoch": int(epoch_id),
+                "delivered": counts["delivered"],
+                "new_dead": counts["dead"],
+                "pending": counts["pending"],
+            }
+        )
+
     def metrics_df(self) -> DataFrame:
         """Per-tick delivery metrics as a DataFrame (delivered /
         newly-dead / parked per processed micro-batch — the
@@ -443,21 +464,7 @@ class DeliveryLoop:
             counts = self.process_batch(
                 batch_df, _dt.datetime.now(_dt.timezone.utc), tick_seconds
             ).counts
-            # the reference's TriggerDeliveryEventCounter surface:
-            # delivered / newly-dead / parked per tick
-            self.delivered_count += counts["delivered"]
-            self.prom_counters["pull_event_number"] += counts["pulled"]
-            self.prom_counters["push_event_number"] += counts["delivered"]
-            self.prom_counters["retry_event_number"] += counts["retried"]
-            self.prom_counters["dead_letter_event_number"] += counts["dead"]
-            self.metrics.append(
-                {
-                    "epoch": int(epoch_id),
-                    "delivered": counts["delivered"],
-                    "new_dead": counts["dead"],
-                    "pending": counts["pending"],
-                }
-            )
+            self.record_tick(epoch_id, counts)
 
         return (
             stream_df.writeStream.foreachBatch(on_batch)
