@@ -172,8 +172,6 @@ def test_multimodal_plumbing(spark, docs):
     assert all(64 <= r.width < 256 for r in rows)
     resized = multimodal.resize_images(media, 224, 224).collect()
     assert all(r.width == 224 and r.height == 224 for r in resized)
-    frames = multimodal.sample_video_frames(media, every_n=10)
-    assert frames.count() >= 20
     # determinism
     d2 = multimodal.decode_images(with_meta).collect()
     assert {(r.media_id, r.width) for r in rows} == {(r.media_id, r.width) for r in d2}

@@ -158,9 +158,9 @@ def test_no_plan_antipatterns_anywhere(spark):
     # (the GIL is released on every socket wait), and the handful of
     # builders that run bounded driver jobs overlap instead of
     # serializing — guide §2.6's overlap-independent-jobs, applied to
-    # the audit itself. Queries are independent; job descriptions and
-    # the few conf twiddles inside replay builders are restored by
-    # their own finally blocks.
+    # the audit itself. Queries are independent; job descriptions are
+    # restored by their own finally blocks, and the replay builders
+    # serialize their shuffle-partition pin on one lock.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=4) as pool:
@@ -209,6 +209,39 @@ def test_detectors_fire_on_bad_fixtures(spark):
     ok_join = cust.join(nation, cust.c_nationkey == nation.n_nationkey)
     assert plan_violations(ok_window, threshold) == []
     assert plan_violations(ok_join, threshold) == []
+
+
+def test_detector_node_names_still_plan(spark):
+    """Canary for the node-name substrings the funnel detector matches
+    (_COLLAPSERS, _UNBOUNDED_SCANS): each fixture must plan a node
+    whose class name contains its substring, so a Spark upgrade that
+    renames one fails here instead of quietly disarming the detector."""
+    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    # a child session plans parquet through DataSource V2 (BatchScan)
+    # without touching the shared session's source list
+    v2 = spark.newSession()
+    v2.conf.set("spark.sql.sources.useV1SourceList", "")
+    # RowDataSourceScan only plans for a JDBC relation; the bundled
+    # Derby driver serves one from an in-memory database
+    derby = spark.read.jdbc(
+        "jdbc:derby:memory:plan_audit_canary;create=true",
+        "SYS.SYSTABLES",
+        properties={"driver": "org.apache.derby.jdbc.EmbeddedDriver"},
+    )
+    fixtures = {
+        "Aggregate": li.groupBy("l_returnflag").count(),
+        "Limit": li.limit(5),
+        "TakeOrdered": li.orderBy("l_orderkey").limit(5),
+        "LocalTableScan": spark.sql("SELECT * FROM VALUES (1) AS t(x)"),
+        "FileSourceScan": li,
+        "BatchScan": v2.read.parquet(f"{SF_DIR}/lineitem.parquet"),
+        "RowDataSourceScan": derby,
+    }
+    assert set(fixtures) == set(_COLLAPSERS) | set(_UNBOUNDED_SCANS)
+    for key, df in fixtures.items():
+        plan = df._jdf.queryExecution().executedPlan()
+        names = {n.getClass().getSimpleName() for n in _walk(plan)}
+        assert any(key in n for n in names), f"{key}: {sorted(names)}"
 
 
 def test_r8_rolling_share_pushes_shipdate_filter(spark):

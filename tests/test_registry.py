@@ -1,10 +1,14 @@
 """Registry integrity: the driver contract's queries() / oracle_sql()
-must stay in lockstep (two window rotations silently dropped entries
-this round — this pins the invariants)."""
+must stay in lockstep (two hand-kept window rotations once silently
+dropped entries — this pins the invariants), and the oracle-check
+order must follow from the committed CORRECTNESS_rNN.json records."""
 
 from __future__ import annotations
 
+import hashlib
 import importlib.util
+import json
+from pathlib import Path
 
 # Every registered query is oracle-gated (r5 policy) EXCEPT entries
 # whose values are engine-specific sketches: approx_count_distinct is
@@ -13,10 +17,12 @@ import importlib.util
 # estimate against the exact count.
 ROWS_ONLY: set[str] = {"corpus_ngram_diversity_approx"}
 
+REPO = Path(__file__).resolve().parent.parent
+
 
 def _entry_module():
     spec = importlib.util.spec_from_file_location(
-        "entry_mod", "/root/repo/__spark_entry__.py"
+        "entry_mod", REPO / "__spark_entry__.py"
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
@@ -52,12 +58,103 @@ def test_dynamic_filter_query_plan_binds_one_parse(spark, sf_dir):
     assert df.count() > 0
 
 
+# The window correctness record r11 checked, kept by hand before the order was
+# computed: records r01-r10 must reproduce it exactly.
+R11_WINDOW = [
+    "embedding_matryoshka_recall", "dedup_threshold_curve", "dedup_cluster_agreement",
+    "quality_rater_kappa", "docs_score_agreement", "orders_ordinal_assoc",
+    "events_jarque_bera", "quality_fleiss_kappa", "table_fd_violations",
+    "embedding_cka", "events_kpss", "events_periodogram",
+    "events_granger", "users_cox_score", "docs_log_odds_terms",
+    "events_msprt", "events_anderson_darling", "docs_entropy_rate",
+    "sample_horvitz_thompson", "docs_burrows_delta", "graph_rich_club",
+    "privacy_dp_budget", "events_mi_profile", "events_hill_tail",
+    "lineitem_cpk", "docs_kneser_ney", "orders_panel_fe",
+    "events_simpson_audit", "events_trend_hac", "embedding_intrinsic_dim",
+    "quality_krippendorff", "events_stl_strength", "events_tail_dependence",
+    "events_spectral_entropy", "events_bayes_shrinkage", "events_haar_wavelet",
+    "users_competing_risks", "quality_gopher_ablation", "events_var_cvar",
+    "embedding_mmd", "orders_lmdi_decomposition", "users_retention_decay_fit",
+    "events_rayleigh_circadian", "events_permutation_entropy", "events_negbin_fit",
+    "embedding_isotropy", "action_convert_timezone", "template_json",
+    "debezium_mongo_sink", "dlq_replay",
+]
+
+# sha256 of the sorted registry names and of the oracle_sql() dict
+# (sorted-key JSON) when the rotation became computed: reordering the
+# registry must not add, drop or rewrite a query or its oracle.
+REGISTRY_NAMES_SHA = "5cd5ed49a633922d97ac5fa901d893abd59f4acbb625d752acacf7c66a2bbbec"
+ORACLE_SQL_SHA = "7b70f9172373a1464fec621c3a24e92986c5029fe84cc6f95541d46118b8317f"
+
+
+def _order_through(m, last_round: int) -> list[str]:
+    records = [r for r in m._correctness_records() if r[0] <= last_round]
+    return m._oracle_check_order(list(m._base_queries()), records)
+
+
+def _r12_window(m) -> list[str]:
+    """Rows last oracle-checked in r03, then those last checked in r04,
+    each in its record's order, computed straight from the files."""
+    last = {}
+    for rnd, names in sorted(m._correctness_records()):
+        for n in names:
+            last[n] = rnd
+    registered = set(m._base_queries())
+
+    def cohort(rnd):
+        with open(REPO / f"CORRECTNESS_r{rnd:02d}.json") as f:
+            return [n for n in json.load(f) if last[n] == rnd and n in registered]
+
+    r03, r04 = cohort(3), cohort(4)
+    assert len(r03) == 36
+    return r03 + r04[: 50 - len(r03)]
+
+
+def test_check_order_rule():
+    m = _entry_module()
+    names = ["a", "b", "c", "d", "e"]
+    assert m._oracle_check_order(names, []) == names
+    records = [
+        (10, ["b", "gone"]),
+        (9, ["d", "c", "b"]),
+        (2, ["e"]),
+    ]
+    # a: never checked; e: r2; d, c: r9 in file order; b: r10 (its
+    # r9 row is superseded); "gone" is no longer registered
+    assert m._oracle_check_order(names, records) == ["a", "e", "d", "c", "b"]
+
+
+def test_records_through_r10_give_the_r11_window():
+    m = _entry_module()
+    assert _order_through(m, 10)[:50] == R11_WINDOW
+
+
+def test_records_through_r11_give_the_r12_window():
+    m = _entry_module()
+    window = _order_through(m, 11)[:50]
+    assert len(set(window)) == 50
+    assert window == _r12_window(m)
+
+
 def test_driver_window_is_exactly_50():
     m = _entry_module()
-    window = m._R11_WINDOW
-    assert len(window) == 50, f"window has {len(window)} entries"
+    window = list(m.queries())[:50]
     assert len(set(window)) == 50, "duplicate keys in the window"
-    assert list(m.queries())[:50] == window
+    newest = max(rnd for rnd, _ in m._correctness_records())
+    assert list(m.queries()) == _order_through(m, newest)
+    # each committed record moves the window on; until r12's lands it
+    # is the r12 window above
+    if newest == 11:
+        assert window == _r12_window(m)
+
+
+def test_reordering_keeps_names_and_oracles():
+    m = _entry_module()
+    names = sorted(m.queries())
+    assert len(names) == 434
+    assert hashlib.sha256(json.dumps(names).encode()).hexdigest() == REGISTRY_NAMES_SHA
+    osql = json.dumps(m.oracle_sql(), sort_keys=True).encode()
+    assert hashlib.sha256(osql).hexdigest() == ORACLE_SQL_SHA
 
 
 def test_no_duplicate_keys_in_base_registry():
@@ -66,7 +163,7 @@ def test_no_duplicate_keys_in_base_registry():
     appeared twice). Scan the source so the literal itself is checked."""
     import re
 
-    src = open("/root/repo/__spark_entry__.py").read()
+    src = open(REPO / "__spark_entry__.py").read()
     i = src.index("def _base_queries()")
     j = src.index("# DuckDB oracles", i)
     keys = [

@@ -833,3 +833,81 @@ def test_catalog_phase_gates_delivery(spark, tmp_path):
     cat.resume_subscription(sub_rec["id"])
     res = loop.process_batch(batch2, T0)  # caller redelivers from offset
     assert sorted(r["id"] for r in res.delivered.collect()) == ["3", "4"]
+
+
+def test_replays_on_two_threads_restore_the_shuffle_setting(spark, entry_mod, tmp_path):
+    """Two streaming replays through the entry module's replay
+    helper on two threads: both return their rows, and the
+    session-wide shuffle-partition setting the helper pins to 4 ends
+    at its previous value. Replay b enters the helper while a is
+    starting its query and starts its own only after a stopped, so
+    without one lock across pin, run and restore b would save a's pin
+    and restore 4 last."""
+    import threading
+
+    import pandas as pd
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    a_starting, a_stopped = threading.Event(), threading.Event()
+    errors: list[BaseException] = []
+
+    class Staged:
+        """The writer handed to the helper, reporting a's start and
+        stop and holding b's start until a stopped."""
+
+        def __init__(self, writer, tag):
+            self.writer, self.tag = writer, tag
+
+        def start(self):
+            if self.tag == "b":
+                a_stopped.wait(timeout=120)
+                return self.writer.start()
+            a_starting.set()
+            self.q = self.writer.start()
+            return self
+
+        def processAllAvailable(self):
+            self.q.processAllAvailable()
+
+        def stop(self):
+            self.q.stop()
+            a_stopped.set()
+
+    def replay(tag: str, n: int) -> None:
+        try:
+            src = tmp_path / tag
+            src.mkdir()
+            pd.DataFrame({"k": [i % 3 for i in range(n)]}).to_parquet(src / "b0.parquet")
+            counts = (
+                spark.readStream.schema("k long").parquet(str(src)).groupBy("k").count()
+            )
+            writer = (
+                counts.writeStream.format("memory")
+                .queryName(f"replay_{tag}")
+                .outputMode("complete")
+            )
+            if tag == "b":
+                a_starting.wait(timeout=120)
+            entry_mod._replay(spark, Staged(writer, tag))
+        except Exception as e:  # noqa: BLE001 - reported by the main thread
+            errors.append(e)
+
+    try:
+        threads = [
+            threading.Thread(target=replay, args=(tag, n))
+            for tag, n in (("a", 30), ("b", 60))
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        assert spark.conf.get(key) == "7"
+        for tag, n in (("a", 30), ("b", 60)):
+            rows = {r.k: r["count"] for r in spark.table(f"replay_{tag}").collect()}
+            assert rows == {0: n // 3, 1: n // 3, 2: n // 3}
+    finally:
+        spark.conf.set(key, prev)

@@ -65,7 +65,8 @@ def table_hash(pdf) -> str:
 
 def main(only: list[str]):
     # --window pre-flights exactly what the driver will check: the
-    # first 50 registry entries (the _R{N}_WINDOW). It is a mode, not
+    # first 50 registry entries, least recently oracle-checked first
+    # (see queries() in __spark_entry__.py). It is a mode, not
     # a query name — combining it with explicit names is ambiguous
     # (round-9 advice: `--window name` used to silently treat
     # --window as a query and skip it), so that is a hard error.

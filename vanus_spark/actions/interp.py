@@ -220,6 +220,8 @@ def build_action(command: list[Any]) -> BoundAction:
     if not command:
         raise ValueError("empty action command")
     name = str(command[0]).upper()
+    if name == "ARRAY_FOREACH" and len(command) >= 3 and isinstance(command[2], list):
+        return build_array_foreach(command)
     spec = _REGISTRY.get(name)
     if spec is None:
         raise ValueError(f"unknown action {command[0]}")
@@ -814,18 +816,6 @@ def _debezium_to_mongo(args, ctx):
     else:
         raise ActionError(f"unknown op {op}")
     ctx.data = result
-
-
-# patch build_action to special-case ARRAY_FOREACH nesting
-_plain_build_action = build_action
-
-
-def build_action(command: list[Any]) -> BoundAction:  # noqa: F811
-    if command and str(command[0]).upper() == "ARRAY_FOREACH" and len(command) >= 3 and isinstance(
-        command[2], list
-    ):
-        return build_array_foreach(command)
-    return _plain_build_action(command)
 
 
 # ---------------------------------------------------------------------------

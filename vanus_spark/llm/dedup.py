@@ -490,21 +490,51 @@ def simhash_near_pairs(
         raise ValueError("pigeonhole blocking needs max_hamming <= chunks - 1")
     chunk_bits = bits // chunks
     mask = (1 << chunk_bits) - 1
-    fp = simhash_df(docs, text_col, id_col, bits)
-    chunk_cols = [
-        F.shiftright("fingerprint", i * chunk_bits).bitwiseAND(F.lit(mask)).alias(f"c{i}")
+    chunk_keys = [
+        F.shiftright("fingerprint", i * chunk_bits).bitwiseAND(F.lit(mask))
         for i in range(chunks)
     ]
-    keyed = fp.select(F.col(id_col), F.col("fingerprint"), *chunk_cols)
-    # Materialize once: the union's 2 x chunks references each join on a
-    # DIFFERENT chunk key (no exchange to reuse), so without this every
-    # leg re-runs the simhash tokenize/fingerprint pipeline over the
-    # corpus (same defect as multimodal.ahash_near_pairs, guide §2.4).
-    # Eager: all legs execute inside one job, where a lazy checkpoint
-    # gets raced/recomputed. Rows are (id, fingerprint, chunk keys).
+    return pigeonhole_hamming_pairs(
+        simhash_df(docs, text_col, id_col, bits),
+        id_col,
+        "fingerprint",
+        chunk_keys,
+        max_hamming,
+    )
+
+
+def pigeonhole_hamming_pairs(
+    df: DataFrame,
+    id_col: str,
+    hash_col: str,
+    chunk_keys: list[Column],
+    max_hamming: int,
+) -> DataFrame:
+    """(id_a, id_b, hamming) for every pair id_a < id_b of ``df`` rows
+    whose ``hash_col`` values differ in at most ``max_hamming`` bits.
+
+    ``chunk_keys`` split the hash into disjoint bit-chunks that cover
+    it; any pair within radius len(chunk_keys) - 1 shares at least one
+    identical chunk, so candidates come from one equi-join per chunk
+    (union) and the exact check (bit_count of xor) runs only on
+    candidates. The caller builds the chunk keys for its hash width and
+    checks max_hamming <= len(chunk_keys) - 1."""
+    keyed = df.select(
+        F.col(id_col),
+        F.col(hash_col),
+        *[k.alias(f"c{i}") for i, k in enumerate(chunk_keys)],
+    )
+    # Materialize the (id, hash, chunk keys) table once: the union
+    # references it 2 x chunks times and each leg joins on a DIFFERENT
+    # chunk key, so neither exchange reuse nor AQE can collapse the
+    # branches, and without this every leg re-runs the upstream
+    # fingerprint or media-hash pipeline (measured: 6 recomputations =
+    # ~85% of video_phash_neardup's wall). Eager,
+    # because all legs land in ONE job and a lazy checkpoint would be
+    # raced/recomputed by sibling branches.
     keyed = keyed.localCheckpoint(eager=True)
     pairs = None
-    for i in range(chunks):
+    for i in range(len(chunk_keys)):
         a, b = keyed.alias("a"), keyed.alias("b")
         p = a.join(
             b,
@@ -513,11 +543,11 @@ def simhash_near_pairs(
         ).select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.fingerprint").alias("fp_a"),
-            F.col("b.fingerprint").alias("fp_b"),
+            F.col(f"a.{hash_col}").alias("h_a"),
+            F.col(f"b.{hash_col}").alias("h_b"),
         )
         pairs = p if pairs is None else pairs.unionByName(p)
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
+    hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
     return (
         pairs.distinct()
         .select("id_a", "id_b", hamming.alias("hamming"))

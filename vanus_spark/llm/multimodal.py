@@ -1,12 +1,12 @@
 """Multimodal columns: image/audio/video as opaque binary + typed
-metadata, with decode / feature-extract / resize / frame-sample as
-Arrow-batched pandas operations.
+metadata, with decode / feature-extract / resize as Arrow-batched
+pandas operations (video frame sampling lives in ``video``).
 
 Design (the part that matters at 100 TB):
 - media is an opaque ``binary`` column next to a typed metadata
   struct — the scan prunes metadata-only queries to the metadata
   columns and never touches the bytes (Parquet column pruning).
-- decode/resize/sample run as ``mapInPandas`` over partitions:
+- decode/resize run as ``mapInPandas`` over partitions:
   Arrow moves the bytes once per batch, work is embarrassingly
   parallel, output schema is fixed up front.
 - decode is REAL for the uncompressed formats a dependency-free
@@ -30,6 +30,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from vanus_spark.llm.dedup import pigeonhole_hamming_pairs
 from vanus_spark.operators.parallelism import repartition_for_compute
 
 IMAGE_SCHEMA = T.StructType(
@@ -254,38 +255,6 @@ def resize_images(
     return df.mapInPandas(run, schema=out_schema)
 
 
-def sample_video_frames(
-    df: DataFrame,
-    every_n: int = 10,
-    content_col: str = "content",
-    id_col: str = "media_id",
-    decode_stub: bool = True,
-) -> DataFrame:
-    """Frame sampling plumbing: one row in -> k frame rows out (the
-    expand shape of a real ffmpeg sampler)."""
-    out_schema = f"{id_col} long, frame_index int, frame binary"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf[id_col], pdf[content_col]):
-                if not decode_stub:
-                    raise NotImplementedError("real frame sampling requires ffmpeg")
-                raw_b = bytes(raw) if raw is not None else b""
-                n_frames = max(1, len(raw_b) // max(every_n, 1)) % 8 + 1
-                for i in range(n_frames):
-                    rows.append(
-                        {
-                            id_col: mid,
-                            "frame_index": i * every_n,
-                            "frame": hashlib.md5(raw_b + bytes([i])).digest(),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
 def synthesize_ppm_images(
     docs: DataFrame, id_col: str = "doc_id", max_rows: int | None = None
 ) -> DataFrame:
@@ -464,8 +433,8 @@ def ahash_near_pairs(
     chunks: int | None = None,
 ) -> DataFrame:
     """Near-dup image pairs with hamming(ahash_a, ahash_b) <=
-    max_hamming, via the same pigeonhole blocking as
-    dedup.simhash_near_pairs (dedup.py:402): any pair within radius
+    max_hamming, via dedup.pigeonhole_hamming_pairs, the blocking
+    dedup.simhash_near_pairs uses too: any pair within radius
     chunks-1 shares an identical chunk, so candidates come from
     ``chunks`` equi-joins and the exact bit_count(xor) check runs only
     on candidates. shiftrightunsigned keeps the top chunk of a
@@ -492,39 +461,10 @@ def ahash_near_pairs(
             return shifted
         return shifted.bitwiseAND(F.lit((1 << width) - 1))
 
-    keyed = hashes.select(
-        F.col(id_col),
-        F.col(hash_col),
-        *[chunk_key(i).alias(f"c{i}") for i in range(chunks)],
-    )
-    # Materialize the (id, hash, chunk-keys) table ONCE: the pigeonhole
-    # union references `keyed` 2 x chunks times, and each leg joins on a
-    # DIFFERENT chunk key, so neither exchange reuse nor AQE can collapse
-    # the branches — without this every leg re-runs the upstream
-    # synthesis + codec + hash pipeline (measured: 6 recomputations =
-    # ~85% of video_phash_neardup's wall; guide §2.4/§3.3 "materialise an
-    # intermediate"). Eager, because all legs land in ONE job and a lazy
-    # checkpoint would be raced/recomputed by sibling branches. The
-    # checkpointed frame is id + hash + chunk keys only — bytes/row, not
-    # the media payload.
-    keyed = keyed.localCheckpoint(eager=True)
-    pairs = None
-    for i in range(chunks):
-        a, b = keyed.alias("a"), keyed.alias("b")
-        p = a.join(
-            b,
-            (F.col(f"a.c{i}") == F.col(f"b.c{i}"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        ).select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{hash_col}").alias("h_a"),
-            F.col(f"b.{hash_col}").alias("h_b"),
-        )
-        pairs = p if pairs is None else pairs.unionByName(p)
-    hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    return (
-        pairs.distinct()
-        .select("id_a", "id_b", hamming.cast("int").alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
+    return pigeonhole_hamming_pairs(
+        hashes,
+        id_col,
+        hash_col,
+        [chunk_key(i) for i in range(chunks)],
+        max_hamming,
     )
