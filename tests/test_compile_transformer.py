@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 
 from vanus_spark.plans import CompileFallback, compile_transformer
+from vanus_spark.schema_infer import round_trips
 from vanus_spark.transformer import transform_dataframe
 
 ENV_SCHEMA = (
@@ -402,3 +403,76 @@ def test_json_template_compiled_vs_interpreter_fuzz(spark):
     bad, fell_back = _sweep_specs(check, specs)
     assert not bad, bad[:2]
     assert fell_back < len(specs)
+
+
+MIXED_SCHEMA = "v string, n string, k long, d double"
+
+
+@pytest.mark.parametrize(
+    "cmd",
+    [
+        ["MATH_MUL", "$.data.v", "$.data.v", 2],
+        ["MATH_ADD", "$.data.n", "$.data.n", 1],
+        ["ADD_PREFIX", "$.data.k", "x"],
+        ["REPLACE_STRING", "$.data.k", "1", "a"],
+        ["UPPER_CASE", "$.data.d"],
+        ["MATH_DIV", "$.data.k", "$.data.k", 0],
+        ["REPLACE", "$.data.k", "x"],
+        ["REPLACE", "$.data.d", 3],
+        ["CREATE", "$.data.k", "x"],
+    ],
+    ids=lambda c: "_".join(str(a) for a in c),
+)
+def test_write_at_another_type_falls_back(spark, cmd):
+    """A field holds one type: an action that writes another over it
+    (or keeps the old value after an error) has no Column form that
+    renders both, so it falls back instead of casting one into the
+    other (under ANSI a failed cast, else 12 -> 12.0 or "2.5" -> 2.5)."""
+    from vanus_spark.subscription import Subscription
+
+    row = ("1", "/s", "1.0", "t", None, "application/json", None, None, {},
+           '{"v":"abc","n":"12x","k":12,"d":2.5}')
+    df = spark.createDataFrame([row, ("2",) + row[1:9] + ('{"v":"abc"}',)], ENV_SCHEMA)
+    spec = {"pipeline": [cmd]}
+    with pytest.raises(CompileFallback):
+        compile_transformer(spec, MIXED_SCHEMA)
+    cols = ["id", "data", "transform_error"]
+    got = Subscription.from_spec({"transformer": spec}).apply(df, data_schema=MIXED_SCHEMA)
+    assert sorted(got.select(*cols).collect()) == sorted(
+        transform_dataframe(df, spec).select(*cols).collect()
+    )
+
+
+def test_round_trip_guard_marks_only_conforming_payloads(spark):
+    """``round_trips`` is true only where the payload renders back byte
+    for byte through the schema, and on such a row the compiled plan
+    gives the interpreter's payload and datacontenttype."""
+    spec = SPECS["json_template"]
+    schema = "user_id long, value double, name string, props struct<k: bigint>"
+    payloads = {
+        "ok": '{"user_id":12,"value":9.64,"name":"ada","props":{"k":87}}',
+        "extra": '{"user_id":12,"value":9.64,"name":"ada","props":{"k":87},"x":1}',
+        "int_in_double": '{"user_id":12,"value":9,"name":"ada","props":{"k":87}}',
+        "order": '{"value":9.64,"user_id":12,"name":"ada","props":{"k":87}}',
+        "space": '{"user_id": 12,"value":9.64,"name":"ada","props":{"k":87}}',
+        "escape": '{"user_id":12,"value":9.64,"name":"\\u0061da","props":{"k":87}}',
+        "quoted_nan": '{"user_id":12,"value":"NaN","name":"ada","props":{"k":87}}',
+        "null_field": '{"user_id":12,"value":null,"name":"ada","props":{"k":87}}',
+        "nil": None,
+        "null": "null",
+        "empty": "",
+        "array": "[1]",
+        "number": "3",
+        "malformed": '{"user_id":12',
+    }
+    rows = [
+        (i, "/s", "1.0", "t", None, "text/plain", None, None, {}, d)
+        for i, d in payloads.items()
+    ]
+    df = spark.createDataFrame(rows, ENV_SCHEMA).withColumn("ok", round_trips(schema))
+    got = {r.id: r for r in compile_transformer(spec, schema)(df).collect()}
+    interp = {r.id: r for r in transform_dataframe(df, spec).collect()}
+    assert {i for i, r in got.items() if r.ok} == {"ok"}
+    assert (got["ok"].data, got["ok"].datacontenttype) == (
+        interp["ok"].data, interp["ok"].datacontenttype
+    )

@@ -98,6 +98,60 @@ def retriable_col(max_retry_attempts: int = 32, status_col: str = "status") -> C
     return should_retry_col(F.col(status_col)) & (_attempts_col() < max_retry_attempts)
 
 
+def failed_event_columns(
+    sub_id: str,
+    now: Column,
+    max_retry_attempts: int = 32,
+    status_col: str = "status",
+    error_col: str = "error",
+) -> tuple[Column, Column, Column]:
+    """(retriable, retry attributes, dead attributes) of a failed
+    delivery as Columns over the envelope + ``status`` + ``error``, with
+    the tick time read from ``now`` — so a caller that binds the time as
+    a column builds them once rather than once per tick.
+
+    Retry rows get attempts+1, next delivery time, sub id; dead rows get
+    the four DLQ attributes (reference: trigger.go:455-562)."""
+    status = F.col(status_col)
+    attempts = _attempts_col()
+    reason = F.coalesce(
+        no_retry_reason_col(status),
+        F.when(attempts >= max_retry_attempts, F.lit("MaxDeliveryAttemptExceeded")),
+    )
+    next_attempts = attempts + 1
+    retry_attributes = F.map_concat(
+        F.map_filter(
+            F.col("attributes"),
+            lambda k, _: ~k.isin(ATTR_RETRY_ATTEMPTS, ATTR_DELIVERY_TIME, ATTR_SUB_ID),
+        ),
+        F.create_map(
+            F.lit(ATTR_RETRY_ATTEMPTS), next_attempts.cast("string"),
+            F.lit(ATTR_DELIVERY_TIME),
+            F.date_format(
+                now + F.make_dt_interval(secs=backoff_seconds_col(next_attempts).cast("double")),
+                "yyyy-MM-dd'T'HH:mm:ss'Z'",
+            ),
+            F.lit(ATTR_SUB_ID), F.lit(sub_id),
+        ),
+    )
+    dead_attributes = F.map_concat(
+        F.map_filter(
+            F.col("attributes"),
+            lambda k, _: ~k.isin(
+                ATTR_SUB_ID, ATTR_LAST_DL_TIME, ATTR_LAST_DL_ERROR, ATTR_DL_REASON,
+                "xvanuseventbus",
+            ),
+        ),
+        F.create_map(
+            F.lit(ATTR_SUB_ID), F.lit(sub_id),
+            F.lit(ATTR_LAST_DL_TIME), F.date_format(now, "yyyy-MM-dd'T'HH:mm:ss'Z'"),
+            F.lit(ATTR_LAST_DL_ERROR), F.coalesce(F.col(error_col), F.lit("")),
+            F.lit(ATTR_DL_REASON), reason,
+        ),
+    )
+    return retriable_col(max_retry_attempts, status_col), retry_attributes, dead_attributes
+
+
 def route_failed_events(
     failed: DataFrame,
     sub_id: str,
@@ -110,60 +164,16 @@ def route_failed_events(
     (reference: trigger.go:455-488 writeFailEvent).
 
     ``failed`` carries the envelope + an int ``status`` and string
-    ``error``. Retry rows get attempts+1, next delivery time, sub id;
-    dead rows get the four DLQ attributes. Pure column ops — the
-    route split is two filters over one cached batch, no shuffle.
+    ``error``; the attributes are ``failed_event_columns``'. Pure column
+    ops — the route split is two filters over one cached batch, no
+    shuffle.
     """
-    status = F.col(status_col)
-    attempts = _attempts_col()
-    retriable = retriable_col(max_retry_attempts, status_col)
-    reason = F.coalesce(
-        no_retry_reason_col(status),
-        F.when(attempts >= max_retry_attempts, F.lit("MaxDeliveryAttemptExceeded")),
+    retriable, retry_attributes, dead_attributes = failed_event_columns(
+        sub_id, F.lit(batch_time).cast("timestamp"), max_retry_attempts, status_col, error_col
     )
-
-    next_attempts = attempts + 1
-    retry_df = failed.where(retriable).withColumn(
-        "attributes",
-        F.map_concat(
-            F.map_filter(
-                F.col("attributes"),
-                lambda k, _: ~k.isin(ATTR_RETRY_ATTEMPTS, ATTR_DELIVERY_TIME, ATTR_SUB_ID),
-            ),
-            F.create_map(
-                F.lit(ATTR_RETRY_ATTEMPTS), next_attempts.cast("string"),
-                F.lit(ATTR_DELIVERY_TIME),
-                F.date_format(
-                    F.lit(batch_time).cast("timestamp")
-                    + F.make_dt_interval(secs=backoff_seconds_col(next_attempts).cast("double")),
-                    "yyyy-MM-dd'T'HH:mm:ss'Z'",
-                ),
-                F.lit(ATTR_SUB_ID), F.lit(sub_id),
-            ),
-        ),
-    ).drop(status_col, error_col)
-
-    dead_df = failed.where(~retriable).withColumn(
-        "attributes",
-        F.map_concat(
-            F.map_filter(
-                F.col("attributes"),
-                lambda k, _: ~k.isin(
-                    ATTR_SUB_ID, ATTR_LAST_DL_TIME, ATTR_LAST_DL_ERROR, ATTR_DL_REASON,
-                    "xvanuseventbus",
-                ),
-            ),
-            F.create_map(
-                F.lit(ATTR_SUB_ID), F.lit(sub_id),
-                F.lit(ATTR_LAST_DL_TIME),
-                F.date_format(F.lit(batch_time).cast("timestamp"), "yyyy-MM-dd'T'HH:mm:ss'Z'"),
-                F.lit(ATTR_LAST_DL_ERROR), F.coalesce(F.col(error_col), F.lit("")),
-                F.lit(ATTR_DL_REASON), reason,
-            ),
-        ),
-    ).drop(status_col, error_col)
-
-    return retry_df, dead_df
+    retry_df = failed.where(retriable).withColumn("attributes", retry_attributes)
+    dead_df = failed.where(~retriable).withColumn("attributes", dead_attributes)
+    return retry_df.drop(status_col, error_col), dead_df.drop(status_col, error_col)
 
 
 def refilter_retry_events(

@@ -338,9 +338,71 @@ def _strict_long(c: Column) -> Column:
     return col_to_int(c)
 
 
-def _skip_on_null(state: _State, path: str, new: Column) -> Column:
-    """error => keep old (or stay absent if never set)."""
+_STRING, _LONG, _DOUBLE = T.StringType(), T.LongType(), T.DoubleType()
+_STRING_ARRAY = T.ArrayType(T.StringType())
+_KIND_TYPES = {"string": _STRING, "long": _LONG, "double": _DOUBLE, "bool": T.BooleanType()}
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _type_at(state: _State, path: str) -> T.DataType | None:
+    """The type the evolved struct holds at ``path``: the declared one
+    until an action rewrites it, then the one its kind implies (None
+    where the kind does not pin a type)."""
+    if path in state.kinds:
+        return _KIND_TYPES.get(state.kinds[path])
+    return _schema_field(state.schema, path)
+
+
+def _arg_type(state: _State, arg: Any) -> T.DataType | None:
+    if _is_data_path(arg):
+        return _type_at(state, _path_of(arg))
+    if isinstance(arg, str) and arg.startswith("@."):
+        return _type_at(state, arg[2:])
+    return _KIND_TYPES.get(_kind_of_arg(state, arg))
+
+
+def _renders_same(a: T.DataType | None, b: T.DataType | None) -> bool:
+    """True when a value of either type keeps its JSON rendering once
+    coerced to their common type: equal types, or two integral ones."""
+    if a is None or b is None:
+        return False
+    if isinstance(a, _INTEGRAL) and isinstance(b, _INTEGRAL):
+        return True
+    return a.simpleString() == b.simpleString()
+
+
+def _branch_type(state: _State, a: Any, b: Any) -> T.DataType | None:
+    """The type an action writes when it picks one of two args."""
+    ta, tb = _arg_type(state, a), _arg_type(state, b)
+    return ta if _renders_same(ta, tb) else None
+
+
+def _same_type_or_fallback(state: _State, path: str, new_type: T.DataType | None) -> None:
+    """A field holds one type, but the interpreter writes the new value
+    at its own type and keeps the old one at the old type: mixing the
+    two in one Column coerces one to the other, which under ANSI either
+    fails (CAST_INVALID_INPUT) or changes the rendering (12 -> 12.0)."""
+    old_type = _type_at(state, path)
+    if not _renders_same(old_type, new_type):
+        raise CompileFallback(
+            f"{path}: writes {new_type and new_type.simpleString()} over "
+            f"{old_type and old_type.simpleString()}"
+        )
+
+
+_AS_OLD = object()
+
+
+def _skip_on_null(
+    state: _State, path: str, new: Column, new_type: Any = _AS_OLD
+) -> Column:
+    """error => keep old (or stay absent if never set), at its old
+    type: a ``new_type`` (None = not pinned) that renders differently
+    falls back. A registered column action that leaves it out vouches
+    that it writes the old type."""
     if state.known(path):
+        if new_type is not _AS_OLD:
+            _same_type_or_fallback(state, path, new_type)
         return F.coalesce(new, state.get(path))
     return new
 
@@ -459,6 +521,7 @@ def _compile_action(state: _State, cmd: list[Any]) -> None:  # noqa: PLR0912, PL
         k = _kind_of_arg(state, args[1])
         if state.known(path):
             # runtime exists-check: only write where currently null
+            _same_type_or_fallback(state, path, _arg_type(state, args[1]))
             old_k = state.kind_of(path)
             state.set(path, F.coalesce(state.get(path), val),
                       k if k == old_k else "any")
@@ -469,6 +532,7 @@ def _compile_action(state: _State, cmd: list[Any]) -> None:  # noqa: PLR0912, PL
         path = _path_of(args[0])
         if not state.known(path):
             return  # target never exists -> always skipped
+        _same_type_or_fallback(state, path, _arg_type(state, args[1]))
         old = state.get(path)
         old_k, new_k = state.kind_of(path), _kind_of_arg(state, args[1])
         state.set(
@@ -502,7 +566,7 @@ def _compile_action(state: _State, cmd: list[Any]) -> None:  # noqa: PLR0912, PL
             new = vf.math_mul(*nums)
         else:
             new = vf.math_div(*nums)
-        state.set(path, _skip_on_null(state, path, new), "double")
+        state.set(path, _skip_on_null(state, path, new, _DOUBLE), "double")
         return
 
     in_place_str = {
@@ -539,7 +603,7 @@ def _compile_action(state: _State, cmd: list[Any]) -> None:  # noqa: PLR0912, PL
             # e.g. a PHP date format whose adjacent tokens would merge
             # into one java.time field — interpreter-only semantics
             raise CompileFallback(f"{name}: {e}") from e
-        state.set(path, _skip_on_null(state, path, new), "string")
+        state.set(path, _skip_on_null(state, path, new, _STRING), "string")
         return
 
     if name == "CONDITION_IF":
@@ -573,7 +637,10 @@ def _compile_action(state: _State, cmd: list[Any]) -> None:  # noqa: PLR0912, PL
             ),
         )
         k1, k2 = _kind_of_arg(state, args[4]), _kind_of_arg(state, args[5])
-        state.set(path, _skip_on_null(state, path, new), k1 if k1 == k2 else "any")
+        new_type = _branch_type(state, args[4], args[5])
+        state.set(
+            path, _skip_on_null(state, path, new, new_type), k1 if k1 == k2 else "any"
+        )
         return
     if name == "LENGTH":
         path = _path_of(args[0])
@@ -596,14 +663,16 @@ def _compile_action(state: _State, cmd: list[Any]) -> None:  # noqa: PLR0912, PL
             new = F.when(src.isNotNull(), total.cast("long"))
         else:
             new = F.length(src.cast("string")).cast("long")
-        state.set(path, _skip_on_null(state, path, new), "long")
+        state.set(path, _skip_on_null(state, path, new, _LONG), "long")
         return
     if name == "SPLIT_WITH_DELIMITER":
         src = state.get(_path_of(args[0])).cast("string")
         target = _path_of(args[2])
         state.set(
             target,
-            _skip_on_null(state, target, vf.split_literal(src, str(args[1]))),
+            _skip_on_null(
+                state, target, vf.split_literal(src, str(args[1])), _STRING_ARRAY
+            ),
             "array",
         )
         return
@@ -616,7 +685,9 @@ def _compile_action(state: _State, cmd: list[Any]) -> None:  # noqa: PLR0912, PL
         src = state.get(_path_of(args[0])).cast("string")
         state.set(
             target,
-            _skip_on_null(state, target, vf.split_from_start(src, int(args[1]))),
+            _skip_on_null(
+                state, target, vf.split_from_start(src, int(args[1])), _STRING_ARRAY
+            ),
             "array",
         )
         return
@@ -632,7 +703,12 @@ def _compile_action(state: _State, cmd: list[Any]) -> None:  # noqa: PLR0912, PL
         src = state.get(_path_of(args[0])).cast("string")
         state.set(
             target,
-            _skip_on_null(state, target, vf.split_between_positions(src, start, end)),
+            _skip_on_null(
+                state,
+                target,
+                vf.split_between_positions(src, start, end),
+                _STRING_ARRAY,
+            ),
             "array",
         )
         return
@@ -647,7 +723,10 @@ def _compile_action(state: _State, cmd: list[Any]) -> None:  # noqa: PLR0912, PL
         state.set(
             target,
             _skip_on_null(
-                state, target, vf.split_with_intervals(src, start, interval)
+                state,
+                target,
+                vf.split_with_intervals(src, start, interval),
+                _STRING_ARRAY,
             ),
             "array",
         )
@@ -672,7 +751,7 @@ def _compile_action(state: _State, cmd: list[Any]) -> None:  # noqa: PLR0912, PL
         new = vf.join_arrays(sep, *arrs)
         # any missing source array => arg error => skip (NULL propagates
         # through array_join/concat)
-        state.set(target, _skip_on_null(state, target, new), "string")
+        state.set(target, _skip_on_null(state, target, new, _STRING), "string")
         return
     if name == "EXTRACT_BETWEEN_DELIMITERS":
         src = state.get(_path_of(args[0])).cast("string")
@@ -680,7 +759,10 @@ def _compile_action(state: _State, cmd: list[Any]) -> None:  # noqa: PLR0912, PL
         state.set(
             target,
             _skip_on_null(
-                state, target, vf.extract_between_delimiters(src, str(args[2]), str(args[3]))
+                state,
+                target,
+                vf.extract_between_delimiters(src, str(args[2]), str(args[3])),
+                _STRING,
             ),
             "string",
         )
@@ -691,7 +773,10 @@ def _compile_action(state: _State, cmd: list[Any]) -> None:  # noqa: PLR0912, PL
         state.set(
             target,
             _skip_on_null(
-                state, target, vf.extract_between_positions(src, int(args[2]), int(args[3]))
+                state,
+                target,
+                vf.extract_between_positions(src, int(args[2]), int(args[3])),
+                _STRING,
             ),
             "string",
         )
@@ -705,12 +790,12 @@ def _compile_action(state: _State, cmd: list[Any]) -> None:  # noqa: PLR0912, PL
                 src, str(args[1]), _value_arg(state, args[3]), _value_arg(state, args[4])
             ),
         )
+        k1, k2 = _kind_of_arg(state, args[3]), _kind_of_arg(state, args[4])
+        new_type = _branch_type(state, args[3], args[4])
         state.set(
             target,
-            _skip_on_null(state, target, new),
-            (lambda a, b: a if a == b else "any")(
-                _kind_of_arg(state, args[3]), _kind_of_arg(state, args[4])
-            ),
+            _skip_on_null(state, target, new, new_type),
+            k1 if k1 == k2 else "any",
         )
         return
     if name in ("EXTRACT_MISSING", "EXTRACT_MISSING_ACTION"):
@@ -719,7 +804,7 @@ def _compile_action(state: _State, cmd: list[Any]) -> None:  # noqa: PLR0912, PL
         new = F.when(  # missing source -> arg error -> skip (NULL)
             src.isNotNull(), vf.extract_missing(src, str(args[2]), str(args[3]))
         )
-        state.set(target, _skip_on_null(state, target, new), "string")
+        state.set(target, _skip_on_null(state, target, new, _STRING), "string")
         return
 
     if name == "RENDER_ARRAY":
@@ -807,7 +892,7 @@ def _compile_action(state: _State, cmd: list[Any]) -> None:  # noqa: PLR0912, PL
             (F.size(arr) > 0) & F.forall(arr, _all_present),
             F.transform(arr, _render),
         )
-        state.set(target, _skip_on_null(state, target, new), "array")
+        state.set(target, _skip_on_null(state, target, new, _STRING_ARRAY), "array")
         return
 
     if name == "ARRAY_FOREACH":
@@ -875,7 +960,9 @@ def _compile_action(state: _State, cmd: list[Any]) -> None:  # noqa: PLR0912, PL
             ).otherwise(e),
         )
         # missing array itself -> arg error -> whole action skipped
-        state.set(arr_path, _skip_on_null(state, arr_path, new_arr), "array")
+        state.set(
+            arr_path, _skip_on_null(state, arr_path, new_arr, dtype), "array"
+        )
         return
 
     custom = _CUSTOM_COLUMN_ACTIONS.get(name)
@@ -953,8 +1040,13 @@ def compile_transformer(
     # materialized (SPARK-36718): one parse per row, and a plan whose
     # codegen size stays O(actions), not O(actions × parse-tree).
     parsed = F.col("__vs_parsed")
+    # A quoted "NaN" or "Infinity" is a string to the interpreter; in a
+    # number field it is a retyped field like any other string there,
+    # not a double that a later cast could fail on.
     parse_expr = F.from_json(
-        F.col("data"), schema_cr, {"columnNameOfCorruptRecord": "_corrupt_record"}
+        F.col("data"),
+        schema_cr,
+        {"columnNameOfCorruptRecord": "_corrupt_record", "allowNonNumericNumbers": "false"},
     )
     # The sidecar is only for the bad_json flag (read off the raw parsed
     # column below); strip it from the struct the transformer state sees so
@@ -1019,10 +1111,11 @@ def compile_transformer(
             c = resolve_typed(inner)
             k = kind_of_inner(inner)
             if k == "double":
-                as_long = c.cast("long")
+                # magnitude first: ANSI fails the cast of NaN, an
+                # infinity or a double past the long range
+                as_long = F.when(F.abs(c) < F.lit(1e15), c.cast("long"))
                 return F.when(
-                    (c == as_long.cast("double")) & (F.abs(c) < F.lit(1e15)),
-                    as_long.cast("string"),
+                    c == as_long.cast("double"), as_long.cast("string")
                 ).otherwise(c.cast("string"))
             if k in ("array", "any"):
                 raise CompileFallback(f"non-scalar string substitution <{inner}>")
@@ -1072,18 +1165,19 @@ def compile_transformer(
     bad_json = F.coalesce(
         parsed.getField("_corrupt_record").isNotNull() & ~nilish, F.lit(False)
     )
+    # built once: every call of the compiled function reuses them
+    cols = {
+        "transform_error": bad_json,
+        "data": F.when(bad_json, F.col("data")).otherwise(rendered),
+    }
+    if ttype is not None:
+        dct = "application/json" if ttype == "json" else "text/plain"
+        cols["datacontenttype"] = F.when(
+            bad_json, F.col("datacontenttype")
+        ).otherwise(F.lit(dct))
 
     def apply(df: DataFrame) -> DataFrame:
         staged = df.withColumn("__vs_parsed", parse_expr)
-        cols = {
-            "transform_error": bad_json,
-            "data": F.when(bad_json, F.col("data")).otherwise(rendered),
-        }
-        if ttype is not None:
-            dct = "application/json" if ttype == "json" else "text/plain"
-            cols["datacontenttype"] = F.when(
-                bad_json, F.col("datacontenttype")
-            ).otherwise(F.lit(dct))
         return staged.withColumns(cols).drop("__vs_parsed")
 
     return apply

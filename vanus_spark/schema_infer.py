@@ -22,16 +22,23 @@ from the raw-JSON text that route returns.
 
 from __future__ import annotations
 
+import json
 import re
+from collections import Counter
+from typing import Iterable
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
+    BooleanType,
     DataType,
     DecimalType,
     DoubleType,
     FloatType,
+    LongType,
     MapType,
+    StringType,
+    StructField,
     StructType,
 )
 
@@ -73,6 +80,92 @@ def infer_data_schema(
     return StructType(fields)
 
 
+_LEAF_TYPES = {
+    bool: BooleanType(),
+    int: LongType(),
+    float: DoubleType(),
+    str: StringType(),
+}
+_CONFLICT = object()  # a field seen at two types
+
+
+def _merge_sample(acc: dict, obj: dict) -> None:
+    for k, v in obj.items():
+        cur = acc.get(k)
+        if v is None:
+            acc.setdefault(k, None)  # holds the key's first-seen place
+        elif isinstance(v, dict):
+            if cur is None:
+                cur = acc[k] = {}
+            if isinstance(cur, dict):
+                _merge_sample(cur, v)
+            else:
+                acc[k] = _CONFLICT
+        else:
+            t = _LEAF_TYPES.get(type(v), _CONFLICT)
+            if t is _LEAF_TYPES[int] and not -(2**63) <= v < 2**63:
+                t = _CONFLICT
+            if cur is None:
+                acc[k] = t
+            elif cur is not t:
+                acc[k] = _CONFLICT
+
+
+def _sample_struct(acc: dict) -> StructType | None:
+    folded = Counter(k.lower() for k in acc)
+    fields = []
+    for k, t in acc.items():
+        if (
+            t is None
+            or t is _CONFLICT
+            or not k
+            or "." in k
+            or "`" in k
+            or k == "_corrupt_record"
+            or folded[k.lower()] > 1
+        ):
+            continue
+        if isinstance(t, dict):
+            t = _sample_struct(t)
+            if t is None:
+                continue
+        fields.append(StructField(k, t))
+    return StructType(fields) if fields else None
+
+
+def infer_sample_schema(payloads: Iterable[str]) -> StructType | None:
+    """Struct schema of JSON object payloads already on the driver,
+    with no Spark job (``infer_data_schema``'s ``spark.read.json``
+    costs one). Leaves are boolean, bigint, double or string, nested
+    objects structs, in first-seen key order. Left out: a field seen at
+    two types (``1`` and ``1.5`` included), one only ever null, an
+    array, and a key a struct field cannot carry unambiguously (empty,
+    dotted, backticked, ``_corrupt_record``, or equal to another but
+    for case). Non-object and malformed payloads are skipped. None
+    when no field is left."""
+    acc: dict = {}
+    for s in payloads:
+        try:
+            obj = json.loads(s)
+        except (TypeError, ValueError):
+            continue
+        if isinstance(obj, dict):
+            _merge_sample(acc, obj)
+    return _sample_struct(acc)
+
+
+
+def round_trips(schema: StructType, data_col: str = "data") -> Column:
+    """True where the payload renders back byte for byte through
+    ``schema``: ``to_json(from_json(data)) = data``, with quoted
+    NaN/Infinity refused for number fields. Such a payload is exactly
+    the struct a plan compiled under ``schema`` reads. False for every
+    other payload: an extra, explicitly null or retyped field, ``1`` in
+    a double field, other key order or spacing, an escape the writer
+    would not emit, a nil-ish, non-object or malformed payload."""
+    data = F.col(data_col)
+    parsed = F.from_json(data, schema, {"allowNonNumericNumbers": "false"})
+    return F.coalesce(F.to_json(parsed) == data, F.lit(False))
 def resolve_json_path(
     schema: StructType, path: str
 ) -> tuple[str, DataType] | None:

@@ -85,7 +85,10 @@ class TriggerWorker:
         return self
 
     def unregister(self, sub_id: str) -> None:
-        self.loops.pop(sub_id, None)
+        """RemoveSubscription: drop the loop and release what it holds."""
+        loop = self.loops.pop(sub_id, None)
+        if loop is not None:
+            loop.close()
 
     def process_batch(
         self, batch_df: DataFrame, batch_time, tick_seconds: float = 1.0

@@ -13,10 +13,11 @@ foreachBatch streaming plan share this code path.
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from vanus_spark.filters import compile_filter
 from vanus_spark.transformer import Transformer, transform_dataframe
@@ -32,6 +33,8 @@ class Subscription:
     transformer: dict[str, Any] | None = None
     sink: str | None = None
     config: dict[str, Any] = field(default_factory=dict)
+    # compiled Columns, keyed by the spec (and schema) they came from
+    _plans: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
     @classmethod
     def from_spec(cls, spec: dict[str, Any]) -> "Subscription":
@@ -80,6 +83,41 @@ class Subscription:
     def ordered(self) -> bool:
         return bool(self.config.get("ordered_event", False))
 
+    @property
+    def transforms(self) -> bool:
+        """The transformer has a define, pipeline or template: something
+        for the compiled tier to take."""
+        tf = self.transformer or {}
+        return bool(tf.get("pipeline") or tf.get("define") or tf.get("template"))
+
+    def _plan(self, key: tuple, build: Callable[[], Any]) -> Any:
+        key = tuple(json.dumps(k, sort_keys=True, default=repr) for k in key)
+        if key not in self._plans:
+            self._plans[key] = build()
+        return self._plans[key]
+
+    def filter_column(self) -> Column:
+        """The compiled filter, built once per filter spec."""
+        return self._plan(("filter", self.filters), lambda: compile_filter(self.filters))
+
+    def compiled_transformer(self, data_schema) -> Callable[[DataFrame], DataFrame] | None:
+        """``compile_transformer`` of this transformer under
+        ``data_schema``, built once per (transformer, schema); None when
+        there is no schema, nothing to compile, or the spec falls back
+        to the interpreter."""
+        if data_schema is None or not self.transforms:
+            return None
+        from vanus_spark.plans import CompileFallback, compile_transformer
+
+        def build():
+            try:
+                return compile_transformer(self.transformer, data_schema)
+            except CompileFallback:
+                return None  # dynamic transformer -> interpreter
+
+        schema_key = data_schema if isinstance(data_schema, str) else data_schema.json()
+        return self._plan(("transformer", self.transformer, schema_key), build)
+
     def apply(self, envelope_df: DataFrame, data_schema=None) -> DataFrame:
         """Batch path: filter then transform (filter BEFORE transform,
         as the reference pipelines it — trigger.go:316-336 — which is
@@ -91,18 +129,12 @@ class Subscription:
         (plans/compiler.py compile_transformer) — whole-stage codegen,
         no Python at eval time; otherwise the Arrow-batched
         interpreter runs. Both paths are exact (the equivalence is
-        test-gated)."""
-        out = envelope_df.where(compile_filter(self.filters))
-        tf = self.transformer or {}
-        if data_schema is not None and (
-            tf.get("pipeline") or tf.get("define") or tf.get("template")
-        ):
-            from vanus_spark.plans import CompileFallback, compile_transformer
-
-            try:
-                return compile_transformer(tf, data_schema)(out)
-            except CompileFallback:
-                pass  # dynamic transformer -> interpreter
+        test-gated). The filter and the compiled plan are built once
+        and reused by later calls."""
+        out = envelope_df.where(self.filter_column())
+        compiled = self.compiled_transformer(data_schema)
+        if compiled is not None:
+            return compiled(out)
         return transform_dataframe(out, self.transformer)
 
     def dry_run(self, envelope_df: DataFrame) -> DataFrame:
@@ -110,7 +142,7 @@ class Subscription:
         AND transformed payload for each input event
         (reference: proxy.go:799-858) — the built-in oracle."""
         matched = envelope_df.withColumn(
-            "filter_result", F.coalesce(compile_filter(self.filters), F.lit(False))
+            "filter_result", F.coalesce(self.filter_column(), F.lit(False))
         )
         tf = Transformer(self.transformer)
         if tf.is_noop:

@@ -41,11 +41,6 @@ from vanus_spark.templates import (
     sniff_template_type,
 )
 
-_ENVELOPE_COLS = [
-    "id", "source", "specversion", "type", "time", "datacontenttype",
-    "dataschema", "subject", "attributes", "data",
-]
-
 TRANSFORM_OUTPUT_SCHEMA = (
     "id string, source string, specversion string, type string, "
     "time timestamp, datacontenttype string, dataschema string, "
@@ -123,15 +118,21 @@ def transform_dataframe(df: DataFrame, spec: dict[str, Any] | None) -> DataFrame
 
         return df.withColumn("transform_error", F.lit(False))
 
-    # the per-event action loop below is the expensive seam; a narrow
+    # the per-event action loop is the expensive seam; a narrow
     # (single-file-scan) input would run it in ONE task. Widen to the
     # session's parallelism first — guide §2: the exchange moves the
     # envelope bytes once and buys #cores-way Python workers. No-op on
     # already-wide inputs.
     from vanus_spark.operators.parallelism import repartition_for_compute
 
-    df = repartition_for_compute(df)
+    return interpret_dataframe(repartition_for_compute(df), spec)
 
+
+def interpret_dataframe(df: DataFrame, spec: dict[str, Any] | None) -> DataFrame:
+    """The Arrow-batched interpreter over ``df``'s own partitions:
+    ``transform_dataframe`` without the widening exchange, for callers
+    that choose the partitioning from what they know of the input (the
+    delivery loop's drift pass widens by the row count it observed)."""
     spec_json = json.dumps(spec)  # re-build inside workers: cheap & picklable
     # user-registered actions (reference runtime.AddAction) live only in
     # the driver's registry — capture them into the closure so the
