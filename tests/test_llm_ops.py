@@ -386,9 +386,10 @@ def test_synthesize_ppm_images_decode(spark, docs):
         assert len(r.features) == 8
 
 
-def test_duplicate_components_transitive(spark):
+def test_duplicate_components_transitive(spark, monkeypatch):
     from vanus_spark.llm.dedup import duplicate_components
 
+    monkeypatch.setattr(dedup, "LOCAL_SOLVE_EDGES", 0)  # the rounds
     # path graph 1-2-3-4 (diameter 3, needs >1 round) + separate pair
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], ["id_a", "id_b"]
@@ -397,37 +398,58 @@ def test_duplicate_components_transitive(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
-def test_bounded_components_local_matches_distributed(spark):
-    """The driver union-find variant must emit exactly what
-    duplicate_components emits, on a randomized graph with chains,
-    cliques and singleton pairs; and its cap guard must refuse a
-    graph that is not model-sized."""
+def test_duplicate_components_solvers_agree(spark, monkeypatch):
+    """The driver union-find and the distributed rounds must emit the
+    same (doc_id, component) rows, on a randomized graph with chains,
+    cliques, singleton pairs, repeated and reversed edges, self-pairs
+    and a null end (no edge)."""
     import random
 
-    import pytest as _pytest
-
-    from vanus_spark.llm.dedup import (
-        bounded_components_local,
-        duplicate_components,
-    )
+    from vanus_spark.llm.dedup import duplicate_components
 
     rng = random.Random(7)
     edges = [(rng.randint(0, 60), rng.randint(0, 60)) for _ in range(80)]
-    edges = [(a, b) for a, b in edges if a != b]
-    pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-    dist = {r.doc_id: r.component for r in duplicate_components(pairs).collect()}
-    local = {
-        r.doc_id: r.component
-        for r in bounded_components_local(pairs).collect()
-    }
-    assert local == dist
-    with _pytest.raises(ValueError, match="not model-sized"):
-        bounded_components_local(pairs, cap=10)
+    edges += edges[:10] + [(b, a) for a, b in edges[10:20]]
+    edges += [(a, a) for a, _ in edges[20:25]] + [(99, 99), (70, None)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+
+    def solve():
+        return sorted(tuple(r) for r in duplicate_components(pairs).collect())
+
+    local = solve()
+    monkeypatch.setattr(dedup, "LOCAL_SOLVE_EDGES", 0)
+    rounds = solve()
+    assert local == rounds
+    assert (99, 99) in local and all(n != 70 for n, _ in local)
 
 
-def test_duplicate_components_beats_greedy(spark):
+def test_duplicate_components_small_graph_budget(spark):
+    """A small graph costs the edge checkpoint and its collect, and the
+    result is a local relation: no RDD, so no Python worker reads it."""
+    import pyarrow as pa
+
     from vanus_spark.llm.dedup import duplicate_components
 
+    pairs = spark.createDataFrame(pa.table({"id_a": [1, 2, 7], "id_b": [2, 3, 8]}))
+    sc = spark.sparkContext
+    group = "duplicate_components_small_graph"
+    sc.setJobGroup(group, group)
+    try:
+        comp = duplicate_components(pairs)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    plan = comp._jdf.queryExecution().analyzed().toString()
+    assert plan.lstrip().startswith("LocalRelation") and "LogicalRDD" not in plan
+    assert sorted(tuple(r) for r in comp.collect()) == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
+
+
+def test_duplicate_components_beats_greedy(spark, monkeypatch):
+    from vanus_spark.llm.dedup import duplicate_components
+
+    monkeypatch.setattr(dedup, "LOCAL_SOLVE_EDGES", 0)  # the rounds
     # greedy drop-id_b on pairs (5,6),(6,7) drops {6,7}; components
     # cluster all three together under representative 5
     pairs = spark.createDataFrame([(5, 6), (6, 7)], ["id_a", "id_b"])
@@ -435,12 +457,13 @@ def test_duplicate_components_beats_greedy(spark):
     assert out == {5: 5, 6: 5, 7: 5}
 
 
-def test_duplicate_components_long_chain_pointer_jump(spark):
+def test_duplicate_components_long_chain_pointer_jump(spark, monkeypatch):
     """A 64-link duplicate chain (diameter far above the round count)
     must still converge — pointer jumping makes rounds O(log d), and
     the unconverged case now raises instead of silently splitting."""
     from vanus_spark.llm.dedup import duplicate_components
 
+    monkeypatch.setattr(dedup, "LOCAL_SOLVE_EDGES", 0)  # the rounds
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], ["id_a", "id_b"]
     )
@@ -450,6 +473,19 @@ def test_duplicate_components_long_chain_pointer_jump(spark):
     }
     assert set(out) == set(range(65))
     assert set(out.values()) == {0}
+
+
+def test_duplicate_components_rounds_raise_unconverged(spark, monkeypatch):
+    """Rounds that run out before the labels settle raise; they never
+    return split components."""
+    from vanus_spark.llm.dedup import duplicate_components
+
+    monkeypatch.setattr(dedup, "LOCAL_SOLVE_EDGES", 0)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(16)], ["id_a", "id_b"]
+    )
+    with pytest.raises(RuntimeError, match="did not converge within 1 rounds"):
+        duplicate_components(pairs, max_iters=1)
 
 
 def test_substring_dup_pairs_offset_independent(spark):
@@ -629,6 +665,42 @@ def test_best_representative_dedup_keeps_cleanest(spark):
     )
     out = {r.doc_id for r in best_representative_dedup(docs, 0.5).select("doc_id").collect()}
     assert out == {2, 50}  # 2 beats 1 on quality; 50 unclustered
+
+
+def test_best_representative_dedup_null_and_repeated_ids(spark):
+    """Null and repeated ids: a null-id doc is never kept, clustered or
+    not; every row of the best id stays, even a noisier row under it;
+    every row of a beaten repeated id goes; an unclustered repeated id
+    keeps all its rows."""
+    from collections import Counter
+
+    from vanus_spark.llm.pipeline import best_representative_dedup
+
+    base = (
+        "the quick brown fox jumps over the lazy dog and keeps running "
+        "through the quiet green field toward the river bank today"
+    )
+    noisy = base.replace("quiet", "quiet !!! ??? ;;; :::")
+    noisier = base.replace("quiet", "quiet !!! ??? ;;; ::: ### @@@")
+    other = "completely unrelated text about spark physical plans"
+    lone = "another unrelated line on parquet pushdown"
+    docs = spark.createDataFrame(
+        [
+            (1, noisy),
+            (2, base),
+            (2, noisier),
+            (3, noisier),
+            (3, noisier),
+            (None, base),
+            (None, other),
+            (50, other),
+            (60, lone),
+            (60, lone),
+        ],
+        "doc_id long, text string",
+    )
+    out = Counter(tuple(r) for r in best_representative_dedup(docs, 0.5).collect())
+    assert out == Counter({(2, base): 1, (2, noisier): 1, (50, other): 1, (60, lone): 2})
 
 
 def test_temperature_weights_interpolate_toward_uniform(spark):

@@ -15,7 +15,8 @@ float64 ``1.0`` is a mismatch here too.
 Usage: python tools/oracle_check.py [query_name ...]
        python tools/oracle_check.py --window   # first-50 driver window only
 (--window is exclusive — combining it with query names is an error)
-Env: ORACLE_ENTRY=/path/to/entry.py to check an alternate entry module.
+Env: ORACLE_ENTRY=/path/to/entry.py to check an alternate entry module
+(it runs on the engine of the checkout this script sits in).
 """
 
 from __future__ import annotations
@@ -25,8 +26,10 @@ import importlib.util
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-os.environ["PYTHONPATH"] = "/root/repo" + os.pathsep + os.environ.get("PYTHONPATH", "")
+# the checkout this script sits in, so a copy checks its own engine
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 import duckdb
 
@@ -37,7 +40,7 @@ TABLES = (
 
 
 def load_entry():
-    path = os.environ.get("ORACLE_ENTRY", "/root/repo/__spark_entry__.py")
+    path = os.environ.get("ORACLE_ENTRY", os.path.join(ROOT, "__spark_entry__.py"))
     spec = importlib.util.spec_from_file_location("__spark_entry__", path)
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
@@ -157,7 +160,7 @@ def _refresh_coverage_header(passed, failed, rows_only, total):
     grew to 373). Only a FULL run (no name filter) rewrites it."""
     import re
 
-    path = "/root/repo/COVERAGE.md"
+    path = os.path.join(ROOT, "COVERAGE.md")
     try:
         text = open(path).read()
     except OSError:

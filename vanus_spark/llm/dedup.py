@@ -24,7 +24,7 @@ halves the hash cost; the structure is identical.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from vanus_spark.operators.parallelism import repartition_for_compute
 
@@ -762,6 +762,14 @@ def near_dup_pairs(
 # connected-component duplicate clustering
 # ---------------------------------------------------------------------------
 
+# A duplicate graph with at most this many edges is solved on the
+# driver in one step (collect + union-find): the edge list is a few MB
+# there, and each distributed round below costs ~2 Spark jobs, which
+# dominates a graph of a few hundred edges. Corpus-sized graphs stay on
+# the rounds.
+LOCAL_SOLVE_EDGES = 100_000
+
+
 def duplicate_components(
     pairs: DataFrame,
     id_col: str = "doc_id",
@@ -773,24 +781,28 @@ def duplicate_components(
     id rule approximates (greedy can over-drop when a<b, b<c pairs
     exist but a,c were never compared; components never do).
 
-    Algorithm: iterative min-label propagation over the undirected
-    edge set, with a POINTER-JUMP (path-halving) step each round —
-    after adopting the neighborhood min, every node re-adopts the
-    label of its current label. The jump halves the remaining label
-    chain, so convergence is O(log diameter) rounds, not O(diameter):
-    even a pathological 1e6-long duplicate chain converges in ~20
-    rounds, and dedup graphs (near-clique boilerplate clusters) in
-    2-3.
+    The edge list is materialized once, and the edge count observed on
+    that pass picks the solver:
 
-    r10 round shape (3 exchanges/round, was 5; 1 substantial job per
-    round, was 2): the edge set carries SELF-LOOPS, so one
-    join+aggregate yields both the new label (min over self +
-    neighbors — the self-loop row contributes the node's own label)
-    and the node's previous label (the self-loop row again, via
-    max(when(dst==src))), eliminating the separate left-join with the
-    label table. The convergence check reads a _changed flag off the
-    eagerly checkpointed round output — a cheap block scan, not the
-    old/new label join it used to be.
+    - at most ``LOCAL_SOLVE_EDGES`` edges: one collect and one
+      union-find on the driver; the result is an Arrow-built local
+      relation (2 Spark jobs in all, no Python worker).
+    - more: iterative min-label propagation over the undirected edge
+      set, with a POINTER-JUMP (path-halving) step each round — after
+      adopting the neighborhood min, every node re-adopts the label of
+      its current label. The jump halves the remaining label chain, so
+      convergence is O(log diameter) rounds, not O(diameter): even a
+      pathological 1e6-long duplicate chain converges in ~20 rounds,
+      and dedup graphs (near-clique boilerplate clusters) in 2-3.
+
+    Round shape (3 exchanges/round, 1 substantial job per round): the
+    edge set carries SELF-LOOPS, so one join+aggregate yields both the
+    new label (min over self + neighbors — the self-loop row
+    contributes the node's own label) and the node's previous label
+    (the self-loop row again, via max(when(dst==src))), with no
+    separate left-join against the label table. The convergence check
+    reads a _changed flag off the eagerly checkpointed round output —
+    a cheap block scan, not an old/new label join.
 
     If ``max_iters`` rounds pass without convergence this RAISES
     rather than silently returning split components (the DuckDB
@@ -800,9 +812,10 @@ def duplicate_components(
     component diameters up to ~2^20 — exhaustion means something is
     genuinely wrong.
 
-    Input: (id_a, id_b) pairs. Output: (doc_id, component) for every
-    node that appears in a pair (isolated docs are their own trivial
-    component and are not emitted).
+    Input: (id_a, id_b) pairs; a pair with a null end is no edge.
+    Output: (doc_id, component) for every node that appears in a pair
+    (isolated docs are their own trivial component and are not
+    emitted).
     """
     # Materialize the edge list ONCE before anything fans out over it:
     # `sym` references it 3x (fwd ∪ rev ∪ self-loops) and `labels`
@@ -813,11 +826,20 @@ def duplicate_components(
     # guide §2.4 "materialise an intermediate"). Eager, because the
     # union branches execute inside one job, where a lazy checkpoint
     # is raced and recomputed per branch (r10 ann_recall lesson).
-    # Rows are (src, dst) longs — bytes per edge.
-    edges = pairs.select(
-        F.col("id_a").cast("long").alias("src"),
-        F.col("id_b").cast("long").alias("dst"),
-    ).localCheckpoint(eager=True)
+    # Rows are (src, dst) longs — bytes per edge. The edge count is
+    # observed on the same pass, so choosing the solver adds no job.
+    seen = Observation()
+    edges = (
+        pairs.select(
+            F.col("id_a").cast("long").alias("src"),
+            F.col("id_b").cast("long").alias("dst"),
+        )
+        .dropna()
+        .observe(seen, F.count(F.lit(1)).alias("edges"))
+        .localCheckpoint(eager=True)
+    )
+    if seen.get["edges"] <= LOCAL_SOLVE_EDGES:
+        return _components_on_driver(edges, id_col)
     # undirected (both directions) + a SELF-LOOP per node: the self
     # edge folds the node's own label into the neighborhood-min
     # aggregate, so no separate "keep my own label" join is needed
@@ -889,36 +911,15 @@ def duplicate_components(
     )
 
 
-def bounded_components_local(
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    cap: int = 100_000,
-) -> DataFrame:
-    """Connected components for a provably BOUNDED graph — same
-    contract as duplicate_components ((id, component = min id in the
-    component) for every node that appears in a pair), solved by
-    union-find on the driver after collecting the edge list.
+def _components_on_driver(edges: DataFrame, id_col: str) -> DataFrame:
+    """The small-graph solve: union-find over the collected (src, dst)
+    edges. Roots are always their component's min id (the larger root
+    joins the smaller), so a node's root is its component. The result
+    is built from an Arrow table — a local relation — because a frame
+    from a Python list is a parallelized RDD whose rows a Python worker
+    must unpickle."""
+    import pyarrow as pa
 
-    Use ONLY when the node universe is bounded by CONSTRUCTION, not by
-    data volume (grid cells capped by geography, category lattices,
-    model tables): that is the kmeans-centroids model-collect pattern,
-    and the ``cap`` guard raises on misuse instead of silently pulling
-    a corpus-sized graph through the driver. For dedup/ER graphs —
-    node count proportional to the data — use duplicate_components;
-    the iterative propagation there costs ~2 Spark jobs per round,
-    which dominates wall time when the graph is only a few hundred
-    nodes (measured: the 675-cell geo grid spent ~60 driver-loop jobs
-    on a graph a single task solves exactly)."""
-    rows = pairs.select(
-        F.col("id_a").cast("long").alias("a"),
-        F.col("id_b").cast("long").alias("b"),
-    ).collect()
-    if len(rows) > cap:
-        raise ValueError(
-            f"bounded_components_local got {len(rows)} edges (cap "
-            f"{cap}): this graph is not model-sized — use "
-            "duplicate_components"
-        )
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -929,21 +930,20 @@ def bounded_components_local(
             parent[x], x = r, parent[x]
         return r
 
-    for r in rows:
-        a, b = int(r["a"]), int(r["b"])
+    for a, b in edges.collect():
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    comp_min: dict[int, int] = {}
-    for n in parent:
-        root = find(n)
-        comp_min[root] = min(comp_min.get(root, n), n)
-    out = sorted((n, comp_min[find(n)]) for n in parent)
-    return pairs.sparkSession.createDataFrame(
-        out, f"{id_col} long, component long"
+    nodes = sorted(parent)
+    table = pa.table(
+        {
+            id_col: pa.array(nodes, pa.int64()),
+            "component": pa.array([find(n) for n in nodes], pa.int64()),
+        }
     )
+    return edges.sparkSession.createDataFrame(table)
 
 
 # ---------------------------------------------------------------------------

@@ -111,33 +111,30 @@ def best_representative_dedup(
     the survivor of a boilerplate cluster is the cleanest capture,
     not the one that happened to be crawled first.
 
-    Shape: the pair graph + components as in duplicate_components
-    (O(log diameter) label rounds); the best-of-cluster pick is one
-    per-component window over #clustered docs (a small subset of the
-    corpus); unclustered docs pass through untouched via one
-    anti-join."""
+    Shape: the pair graph + components as in duplicate_components;
+    only the clustered docs (a small subset of the corpus) are scored,
+    and the best-of-cluster pick is one per-component window over them.
+    The result is ``docs`` minus the clustered docs whose id is not
+    their component's best, one anti-join. A null-id doc is never kept,
+    and every row of a kept id stays (a repeated best id keeps all its
+    rows; a repeated non-best id loses all of them)."""
     from vanus_spark.llm.dedup import duplicate_components, near_dup_pairs
 
     pairs = near_dup_pairs(
         docs, jaccard_threshold, text_col, id_col, **near_dup_kwargs
     )
     comp = duplicate_components(pairs, id_col)
-    scored = comp.join(
-        docs.select(
-            F.col(id_col), F.round(quality_score(F.col(text_col)), 6).alias("_q")
-        ),
-        id_col,
+    scored = comp.join(docs.select(id_col, text_col), id_col).withColumn(
+        "_q", F.round(quality_score(F.col(text_col)), 6)
     )
     w = Window.partitionBy("component").orderBy(
         F.desc("_q"), F.asc(id_col)
     )
-    best = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
+    dropped = (
+        scored.withColumn("_best", F.first(id_col).over(w))
+        .where(F.col(id_col) != F.col("_best"))
         .select(id_col)
     )
-    unclustered = docs.join(comp.select(id_col), id_col, "left_anti").select(
-        id_col
+    return docs.where(F.col(id_col).isNotNull()).join(
+        dropped, id_col, "left_anti"
     )
-    keep = unclustered.unionByName(best)
-    return docs.join(keep, id_col, "left_semi")
