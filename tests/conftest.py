@@ -8,6 +8,7 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 # Executor python workers must be able to unpickle classes defined in
 # test modules (e.g. sink doubles) — put tests/ on their path.
 _here = os.path.dirname(os.path.abspath(__file__))
+REPO = os.path.dirname(_here)
 os.environ["PYTHONPATH"] = _here + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -28,10 +29,11 @@ def sf_dir():
 
 @pytest.fixture(scope="session")
 def entry_mod():
+    """The driver contract, loaded from this checkout's __spark_entry__.py."""
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "entry_mod_fixture", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

@@ -703,6 +703,44 @@ def test_best_representative_dedup_null_and_repeated_ids(spark):
     assert out == Counter({(2, base): 1, (2, noisier): 1, (50, other): 1, (60, lone): 2})
 
 
+def test_best_representative_dedup_releases_its_edge_checkpoint(spark, monkeypatch):
+    """On the driver-solve path nothing reads duplicate_components' edge
+    checkpoint after its collect, so it is released there: a call leaves
+    at most the two lazy minhash_lsh_pairs checkpoints persisted, not
+    those plus the edges."""
+    from vanus_spark.llm import dedup
+    from vanus_spark.llm.pipeline import best_representative_dedup
+    from vanus_spark.session import rdd_id
+
+    base = (
+        "the quick brown fox jumps over the lazy dog and keeps running "
+        "through the quiet green field toward the river bank today"
+    )
+    docs = spark.createDataFrame(
+        [(i, base + " !" * (i % 3)) for i in range(6)]
+        + [(10 + i, f"unrelated line number {i} about parquet") for i in range(4)],
+        "doc_id long, text string",
+    )
+    solved = []  # holding the edge frame keeps the JVM from collecting it
+    solve = dedup._components_on_driver
+
+    def recording(edges, id_col):
+        solved.append(edges)
+        return solve(edges, id_col)
+
+    monkeypatch.setattr(dedup, "_components_on_driver", recording)
+    jsc = spark.sparkContext._jsc
+
+    def held() -> set[int]:
+        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+    before = held()
+    out = best_representative_dedup(docs, 0.5)
+    assert out.count() == 5
+    assert len(solved) == 1 and rdd_id(solved[0]) not in held()
+    assert len(held() - before) <= 2
+
+
 def test_temperature_weights_interpolate_toward_uniform(spark):
     from vanus_spark.llm.curation import temperature_weights
 
@@ -819,14 +857,9 @@ def test_sketch_stats_error_bounds(spark, sf_dir):
     HLL++ distinct estimates land within ~3x the configured rsd of the
     exact count, and GK approx percentiles land within the rank-error
     neighborhood of the exact ones."""
-    import importlib.util
+    from vanus_spark.queries.events import q_events_sketch_stats
 
-    spec = importlib.util.spec_from_file_location(
-        "entry_mod_sketch", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    rows = m.q_events_sketch_stats(spark, sf_dir).collect()
+    rows = q_events_sketch_stats(spark, sf_dir).collect()
     assert rows
     from vanus_spark.sources import load_table
 
@@ -1081,18 +1114,12 @@ def test_ahash_rejects_unpoolable_sizes(spark):
         multimodal.image_ahash(pdf).collect()
 
 
-def test_ngram_diversity_approx_tracks_exact(spark, sf_dir):
+def test_ngram_diversity_approx_tracks_exact(spark, sf_dir, entry_mod):
     """The rows-only approx diversity variant must land within HLL++
     error bounds of the exact oracle-gated sibling (rsd=0.01; allow
     5x rsd for the small fixture) while sharing total counts
     exactly."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "entry_mod", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    m = entry_mod
     exact = {
         r["n"]: r.asDict()
         for r in m.queries()["corpus_ngram_diversity"](spark, sf_dir).collect()

@@ -298,17 +298,11 @@ def test_kaplan_meier_curve_hits_zero_without_ln0(spark):
     assert rows[2]["survival"] == 0.0 and rows[2]["n_at_risk"] == 2
 
 
-def test_assoc_rules_hand_computed(spark):
+def test_assoc_rules_hand_computed(spark, entry_mod):
     """events_assoc_rules metric math on a 4-user fixture: lift > 1
     for positively-associated pairs, symmetric support, conditional
     confidence."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "entry_assoc", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    m = entry_mod
     # 4 users: u1{A,B} u2{A,B} u3{A} u4{B} — P(A)=3/4, P(B)=3/4,
     # P(AB)=1/2, conf(A->B)=2/3, lift=8/9
     import pyspark.sql.functions as F  # noqa: F401

@@ -25,20 +25,10 @@ suite — it is the widest single guard in the repo.
 
 from __future__ import annotations
 
-import importlib.util
 
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _entry():
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry_audit__", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    return m
 
 
 def _unwrap(n):
@@ -138,11 +128,11 @@ def plan_violations(df, threshold: int) -> list[str]:
     return out
 
 
-def test_no_plan_antipatterns_anywhere(spark):
+def test_no_plan_antipatterns_anywhere(spark, entry_mod):
     """ONE sweep over every registry query applying all three
     detectors (cartesian, single-partition funnel, unbroadcast small
     dim) — plans only, no execution."""
-    m = _entry()
+    m = entry_mod
     threshold = 64 * 1024 * 1024  # session.py's autoBroadcastJoinThreshold
     failures = []
 
@@ -244,12 +234,12 @@ def test_detector_node_names_still_plan(spark):
         assert any(key in n for n in names), f"{key}: {sorted(names)}"
 
 
-def test_r8_rolling_share_pushes_shipdate_filter(spark):
+def test_r8_rolling_share_pushes_shipdate_filter(spark, entry_mod):
     """brand_rolling_share's 1995 predicate must reach the parquet
     scan (PushedFilters on l_shipdate), not evaluate post-scan — the
     difference between reading one year and reading the table at
     100 TB."""
-    m = _entry()
+    m = entry_mod
     df = m.queries()["brand_rolling_share"](spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
@@ -259,11 +249,11 @@ def test_r8_rolling_share_pushes_shipdate_filter(spark):
     assert pushed, "l_shipdate predicate not pushed to the scan"
 
 
-def test_r8_hhi_uses_partial_aggregation(spark):
+def test_r8_hhi_uses_partial_aggregation(spark, entry_mod):
     """supplier_hhi's rollups must be map-side combined (HashAggregate
     pairs with a partial mode before the exchange), so the shuffle
     carries per-supplier partials, never raw lineitem rows."""
-    m = _entry()
+    m = entry_mod
     df = m.queries()["supplier_hhi"](spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "partial_" in plan or "HashAggregate" in plan

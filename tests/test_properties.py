@@ -656,23 +656,18 @@ def test_acf_exact_matches_brute_force_randomized(spark):
                 assert abs(gotv - round(want, 6)) < 2e-6, (k, lag)
 
 
-def test_quantile_regression_matches_brute_force(spark):
+def test_quantile_regression_matches_brute_force(spark, entry_mod):
     """The SHIPPED events_quantile_regression must pick, for every
     random series and every tau, the SAME vertex (by its loss/dx sort
     key with (i,j) tie-break) as a brute-force Python enumeration of
     all point pairs. 12 random daily series become 12 event types in
     ONE events frame, so the whole sweep runs the operator's real
     cross+window plan once."""
-    import importlib.util
     import os
     import random as _random
     import tempfile
 
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry_qr__", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    m = entry_mod
 
     rng = _random.Random(20260817)
     cases = {

@@ -1,14 +1,19 @@
 """Registry integrity: the driver contract's queries() / oracle_sql()
 must stay in lockstep (two hand-kept window rotations once silently
-dropped entries — this pins the invariants), and the oracle-check
-order must follow from the committed CORRECTNESS_rNN.json records."""
+dropped entries — this pins the invariants), both are derived from the
+family modules under vanus_spark/queries/, and the oracle-check order
+must follow from the committed CORRECTNESS_rNN.json records."""
 
 from __future__ import annotations
 
 import hashlib
-import importlib.util
 import json
+import types
 from pathlib import Path
+
+import pytest
+
+from vanus_spark.queries import builders, family_modules, twins
 
 # Every registered query is oracle-gated (r5 policy) EXCEPT entries
 # whose values are engine-specific sketches: approx_count_distinct is
@@ -20,17 +25,8 @@ ROWS_ONLY: set[str] = {"corpus_ngram_diversity_approx"}
 REPO = Path(__file__).resolve().parent.parent
 
 
-def _entry_module():
-    spec = importlib.util.spec_from_file_location(
-        "entry_mod", REPO / "__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    return m
-
-
-def test_every_query_has_an_oracle_and_vice_versa():
-    m = _entry_module()
+def test_every_query_has_an_oracle_and_vice_versa(entry_mod):
+    m = entry_mod
     qs, osql = set(m.queries()), set(m.oracle_sql())
     assert qs - osql == ROWS_ONLY, (
         f"queries without oracle beyond the documented rows-only set: "
@@ -42,12 +38,12 @@ def test_every_query_has_an_oracle_and_vice_versa():
     )
 
 
-def test_dynamic_filter_query_plan_binds_one_parse(spark, sf_dir):
+def test_dynamic_filter_query_plan_binds_one_parse(spark, sf_dir, entry_mod):
     """The registered filter_cel_data_dynamic query must compile to
     exactly ONE from_json (the sample-inferred single-parse shape) and
     zero get_json_object — the plan contract the round-4 verdict asked
     for (What's missing #3)."""
-    m = _entry_module()
+    m = entry_mod
     df = m.queries()["filter_cel_data_dynamic"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     # one parse: no plan LINE contains two from_json calls (the same
@@ -87,9 +83,9 @@ REGISTRY_NAMES_SHA = "5cd5ed49a633922d97ac5fa901d893abd59f4acbb625d752acacf7c66a
 ORACLE_SQL_SHA = "7b70f9172373a1464fec621c3a24e92986c5029fe84cc6f95541d46118b8317f"
 
 
-def _order_through(m, last_round: int) -> list[str]:
+def _order_through(m, last_round: int, names: list[str] | None = None) -> list[str]:
     records = [r for r in m._correctness_records() if r[0] <= last_round]
-    return m._oracle_check_order(list(m._base_queries()), records)
+    return m._oracle_check_order(list(builders()) if names is None else names, records)
 
 
 def _r12_window(m) -> list[str]:
@@ -99,7 +95,7 @@ def _r12_window(m) -> list[str]:
     for rnd, names in sorted(m._correctness_records()):
         for n in names:
             last[n] = rnd
-    registered = set(m._base_queries())
+    registered = set(builders())
 
     def cohort(rnd):
         with open(REPO / f"CORRECTNESS_r{rnd:02d}.json") as f:
@@ -110,8 +106,8 @@ def _r12_window(m) -> list[str]:
     return r03 + r04[: 50 - len(r03)]
 
 
-def test_check_order_rule():
-    m = _entry_module()
+def test_check_order_rule(entry_mod):
+    m = entry_mod
     names = ["a", "b", "c", "d", "e"]
     assert m._oracle_check_order(names, []) == names
     records = [
@@ -124,20 +120,26 @@ def test_check_order_rule():
     assert m._oracle_check_order(names, records) == ["a", "e", "d", "c", "b"]
 
 
-def test_records_through_r10_give_the_r11_window():
-    m = _entry_module()
-    assert _order_through(m, 10)[:50] == R11_WINDOW
+def test_records_through_r10_give_the_r11_window(entry_mod):
+    # No record through r10 lists the first 46 names of the r11 window,
+    # so the rule leaves them in their given order: the order of the
+    # hand-kept registry r11 ran from, which R11_WINDOW pins. They are
+    # passed first in that order; the rule must keep them first and
+    # fill the last four rows from the records.
+    never = R11_WINDOW[:46]
+    names = never + [n for n in builders() if n not in never]
+    assert _order_through(entry_mod, 10, names)[:50] == R11_WINDOW
 
 
-def test_records_through_r11_give_the_r12_window():
-    m = _entry_module()
+def test_records_through_r11_give_the_r12_window(entry_mod):
+    m = entry_mod
     window = _order_through(m, 11)[:50]
     assert len(set(window)) == 50
     assert window == _r12_window(m)
 
 
-def test_driver_window_is_exactly_50():
-    m = _entry_module()
+def test_driver_window_is_exactly_50(entry_mod):
+    m = entry_mod
     window = list(m.queries())[:50]
     assert len(set(window)) == 50, "duplicate keys in the window"
     newest = max(rnd for rnd, _ in m._correctness_records())
@@ -148,8 +150,8 @@ def test_driver_window_is_exactly_50():
         assert window == _r12_window(m)
 
 
-def test_reordering_keeps_names_and_oracles():
-    m = _entry_module()
+def test_reordering_keeps_names_and_oracles(entry_mod):
+    m = entry_mod
     names = sorted(m.queries())
     assert len(names) == 434
     assert hashlib.sha256(json.dumps(names).encode()).hexdigest() == REGISTRY_NAMES_SHA
@@ -157,20 +159,39 @@ def test_reordering_keeps_names_and_oracles():
     assert hashlib.sha256(osql).hexdigest() == ORACLE_SQL_SHA
 
 
-def test_no_duplicate_keys_in_base_registry():
-    """A duplicate key in the _base_queries() dict literal silently drops
-    the first binding (round-5 verdict What's wrong #3: tpch_q21_waiting
-    appeared twice). Scan the source so the literal itself is checked."""
-    import re
+def _stub_family(name: str, queries: dict[str, str]) -> types.ModuleType:
+    mod = types.ModuleType(name)
+    for q in queries:
+        setattr(mod, f"q_{q}", lambda spark, sf_dir: None)
+    mod.oracle_sql = lambda: dict(queries)
+    return mod
 
-    src = open(REPO / "__spark_entry__.py").read()
-    i = src.index("def _base_queries()")
-    j = src.index("# DuckDB oracles", i)
-    keys = [
-        k
-        for k in re.findall(r'^        "([a-z0-9_]+)":', src[i:j], re.M)
-    ]
-    dups = sorted({k for k in keys if keys.count(k) > 1})
-    assert not dups, f"duplicate registry keys: {dups}"
-    m = _entry_module()
-    assert len(keys) == len(m.queries())
+
+def test_a_name_two_families_define_raises():
+    """The registry is derived from the family modules, so a name two
+    families both define must stop the build, not let one builder or
+    twin silently replace the other."""
+    a = _stub_family("fam_a", {"shared": "SELECT 1", "only_a": "SELECT 2"})
+    b = _stub_family("fam_b", {"shared": "SELECT 3"})
+    with pytest.raises(ValueError, match="'shared'.*fam_a.*fam_b"):
+        builders([a, b])
+    with pytest.raises(ValueError, match="'shared'.*fam_a.*fam_b"):
+        twins([a, b])
+    c = _stub_family("fam_c", {"only_c": "SELECT 4"})
+    assert list(builders([a, c])) == ["shared", "only_a", "only_c"]
+    assert twins([a, c]) == {"shared": "SELECT 1", "only_a": "SELECT 2", "only_c": "SELECT 4"}
+
+
+def test_every_builder_and_its_oracle_share_a_family(entry_mod):
+    """Each query's Spark builder and its DuckDB twin are defined in the
+    same family module, and the family modules make up the registry."""
+    seen_q, seen_o = set(), set()
+    for mod in family_modules():
+        qs = {k[2:]: v for k, v in vars(mod).items() if k.startswith("q_") and callable(v)}
+        assert all(f.__module__ == mod.__name__ for f in qs.values()), mod.__name__
+        oracles = set(mod.oracle_sql())
+        assert oracles <= set(qs), (mod.__name__, sorted(oracles - set(qs)))
+        seen_q |= set(qs)
+        seen_o |= oracles
+    assert seen_q == set(entry_mod.queries())
+    assert seen_o == set(entry_mod.oracle_sql())

@@ -110,14 +110,8 @@ def test_isotonic_already_monotone_is_identity(spark):
     assert got == {0: 0.0, 1: 0.5, 2: 1.5}
 
 
-def test_registry_isotonic_fit_is_monotone(spark, sf_dir):
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "entry_mod", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+def test_registry_isotonic_fit_is_monotone(spark, sf_dir, entry_mod):
+    m = entry_mod
     rows = m.queries()["quality_isotonic"](spark, sf_dir).collect()
     iso = [r["iso_rate"] for r in rows]
     assert iso == sorted(iso)
@@ -250,21 +244,10 @@ def test_decompose_additive_recovers_weekly_pattern(spark):
     assert abs(sum(seas)) < 1e-6 and len(seas) == 7
 
 
-def _entry():
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "entry_mod", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    return m
-
-
-def test_good_turing_mass_identities(spark, sf_dir):
+def test_good_turing_mass_identities(spark, sf_dir, entry_mod):
     """p_unseen = N_1/N in (0,1); r* > 0 where the next bucket exists;
     n_tokens = sum over full fof (invariant vs direct bigram count)."""
-    m = _entry()
+    m = entry_mod
     rows = m.queries()["docs_good_turing"](spark, sf_dir).collect()
     assert rows, "expected a singleton tail in the bigram fof"
     r1 = [r for r in rows if r["r"] == 1]
@@ -275,10 +258,10 @@ def test_good_turing_mass_identities(spark, sf_dir):
         assert r["r_star"] is None or r["r_star"] > 0
 
 
-def test_kfold_partition_is_exhaustive_and_deterministic(spark, sf_dir):
+def test_kfold_partition_is_exhaustive_and_deterministic(spark, sf_dir, entry_mod):
     """Folds 0..4 partition each stratum: shares sum to 1 per stratum;
     re-running yields identical cells (hash determinism)."""
-    m = _entry()
+    m = entry_mod
     a = m.queries()["sample_kfold"](spark, sf_dir).collect()
     b = m.queries()["sample_kfold"](spark, sf_dir).collect()
     assert a == b
@@ -349,20 +332,20 @@ def test_journey_edges_cuts_at_first_conversion(spark):
     }
 
 
-def test_markov_shares_sum_to_one(spark, sf_dir):
-    m = _entry()
+def test_markov_shares_sum_to_one(spark, sf_dir, entry_mod):
+    m = entry_mod
     rows = m.queries()["attribution_markov"](spark, sf_dir).collect()
     assert len(rows) == 4
     assert abs(sum(r["attribution"] for r in rows) - 1.0) < 1e-4
     assert all(r["p_conv_removed"] <= r["p_conv_full"] for r in rows)
 
 
-def test_journey_entropy_bounds(spark, sf_dir):
+def test_journey_entropy_bounds(spark, sf_dir, entry_mod):
     """Per-source entropy in [0, log2(6)]; weighted_bits sums to the
     share-weighted chain entropy; start row present."""
     import math
 
-    m = _entry()
+    m = entry_mod
     rows = m.queries()["events_journey_entropy"](spark, sf_dir).collect()
     srcs = {r["src"] for r in rows}
     assert "start" in srcs
@@ -371,8 +354,8 @@ def test_journey_entropy_bounds(spark, sf_dir):
         assert 0.0 <= r["weighted_bits"] <= r["entropy_bits"] + 1e-9
 
 
-def test_time_to_convert_distribution_closes(spark, sf_dir):
-    m = _entry()
+def test_time_to_convert_distribution_closes(spark, sf_dir, entry_mod):
+    m = entry_mod
     rows = m.queries()["users_time_to_convert"](spark, sf_dir).collect()
     assert rows
     assert abs(rows[-1]["cum_share"] - 1.0) < 1e-5
@@ -382,10 +365,10 @@ def test_time_to_convert_distribution_closes(spark, sf_dir):
     assert rows[-1]["at_or_past_median"] and rows[-1]["at_or_past_p90"]
 
 
-def test_cohort_ltv_monotone_per_cohort(spark, sf_dir):
+def test_cohort_ltv_monotone_per_cohort(spark, sf_dir, entry_mod):
     from collections import defaultdict
 
-    m = _entry()
+    m = entry_mod
     rows = m.queries()["orders_cohort_ltv"](spark, sf_dir).collect()
     by_cohort = defaultdict(list)
     for r in rows:
@@ -426,13 +409,13 @@ def test_peaks_hand_fixture(spark):
     assert {(x["cents"], x["r"]) for x in got} == {(5, 3), (8, 5)}
 
 
-def test_hurst_trending_beats_alternating(spark, sf_dir, monkeypatch):
+def test_hurst_trending_beats_alternating(spark, sf_dir, monkeypatch, entry_mod):
     """A strongly trending series must score a higher Hurst exponent
     than a mean-reverting alternating one (the discriminative property
     R/S analysis exists for)."""
     import datetime
 
-    m = _entry()
+    m = entry_mod
 
     def fake_events(vals):
         rows = [
@@ -472,8 +455,8 @@ def test_hurst_trending_beats_alternating(spark, sf_dir, monkeypatch):
     assert h_alt < h_trend - 0.3
 
 
-def test_bcubed_bounds_and_f1_consistency(spark, sf_dir):
-    m = _entry()
+def test_bcubed_bounds_and_f1_consistency(spark, sf_dir, entry_mod):
+    m = entry_mod
     r = m.queries()["dedup_bcubed"](spark, sf_dir).collect()[0]
     p, rec, f1 = r["bcubed_precision"], r["bcubed_recall"], r["bcubed_f1"]
     assert 0.0 < p <= 1.0 and 0.0 < rec <= 1.0
@@ -481,14 +464,14 @@ def test_bcubed_bounds_and_f1_consistency(spark, sf_dir):
     assert r["n_clusters"] <= r["n_docs"] and r["n_truth"] <= r["n_docs"]
 
 
-def test_twap_hand_fixture(spark, sf_dir):
+def test_twap_hand_fixture(spark, sf_dir, entry_mod):
     """1.00 held 10s, 2.00 held 20s (3rd obs closes the window):
     twap = (100*10 + 200*20)/30/100 = 1.666667; plain = 1.5."""
     import datetime
 
     import vanus_spark.sources.tables as tables
 
-    m = _entry()
+    m = entry_mod
     t0 = datetime.datetime(2024, 1, 1, 12, 0, 0)
     rows = [
         (1, t0, 1, "x", 1.0, "{}"),
@@ -512,10 +495,10 @@ def test_twap_hand_fixture(spark, sf_dir):
     assert out[0]["n_weighted"] == 2
 
 
-def test_durbin_watson_range_and_white_noise_fixture(spark, sf_dir):
+def test_durbin_watson_range_and_white_noise_fixture(spark, sf_dir, entry_mod):
     """Fixture residuals: DW in (0, 4); rho_approx = 1 - dw/2 within
     rounding."""
-    m = _entry()
+    m = entry_mod
     rows = m.queries()["events_durbin_watson"](spark, sf_dir).collect()
     assert len(rows) == 5
     for r in rows:
@@ -524,10 +507,10 @@ def test_durbin_watson_range_and_white_noise_fixture(spark, sf_dir):
         assert r["n"] == 24  # 30 days minus 2*3 trend-edge days
 
 
-def test_bayes_ab_agrees_with_counts(spark, sf_dir):
+def test_bayes_ab_agrees_with_counts(spark, sf_dir, entry_mod):
     """Posterior means = (r+1)/(n+2); P(B>A) in (0,1) and > 0.5 iff
     posterior mean of B exceeds A."""
-    m = _entry()
+    m = entry_mod
     r = m.queries()["events_bayes_ab"](spark, sf_dir).collect()[0]
     assert abs(r["post_mean_a"] - (r["r_a"] + 1) / (r["n_a"] + 2)) < 1e-6
     assert abs(r["post_mean_b"] - (r["r_b"] + 1) / (r["n_b"] + 2)) < 1e-6
@@ -538,11 +521,11 @@ def test_bayes_ab_agrees_with_counts(spark, sf_dir):
         assert r["p_b_beats_a"] < 0.5
 
 
-def test_gains_table_invariants(spark, sf_dir):
+def test_gains_table_invariants(spark, sf_dir, entry_mod):
     """10 deciles partitioning the held-out set; cum_gain ends at 1,
     is non-decreasing, and the first decile's lift >= 1 for a
     better-than-random classifier; positives sum to the total."""
-    m = _entry()
+    m = entry_mod
     rows = m.queries()["quality_gains"](spark, sf_dir).collect()
     assert [r["decile"] for r in rows] == list(range(10))
     gains = [r["cum_gain"] for r in rows]
@@ -552,10 +535,10 @@ def test_gains_table_invariants(spark, sf_dir):
     assert rows[-1]["cum_lift"] == 1.0
 
 
-def test_weibull_fit_on_planted_weibull(spark, sf_dir):
+def test_weibull_fit_on_planted_weibull(spark, sf_dir, entry_mod):
     """Registry-level sanity: shape > 0, scale > 0 per segment (the
     NA points are monotone so ln-ln regression is well-posed)."""
-    m = _entry()
+    m = entry_mod
     rows = m.queries()["users_weibull_fit"](spark, sf_dir).collect()
     assert len(rows) == 3
     for r in rows:
@@ -565,14 +548,14 @@ def test_weibull_fit_on_planted_weibull(spark, sf_dir):
         assert r["shape_k"] > 0 and r["scale_lambda"] > 0
 
 
-def test_burstiness_bounds_and_metronome(spark, sf_dir):
+def test_burstiness_bounds_and_metronome(spark, sf_dir, entry_mod):
     """Registry values in (-1, 1); a planted metronome stream scores
     B = -1 (sigma = 0)."""
     import datetime
 
     import vanus_spark.sources.tables as tables
 
-    m = _entry()
+    m = entry_mod
     rows = m.queries()["events_burstiness"](spark, sf_dir).collect()
     assert rows and all(-1.0 <= r["burstiness"] < 1.0 for r in rows)
     t0 = datetime.datetime(2024, 1, 1)
@@ -593,8 +576,8 @@ def test_burstiness_bounds_and_metronome(spark, sf_dir):
     assert out[0]["std_gap_s"] == 0.0 and out[0]["burstiness"] == -1.0
 
 
-def test_simpson_diversity_bounds(spark, sf_dir):
-    m = _entry()
+def test_simpson_diversity_bounds(spark, sf_dir, entry_mod):
+    m = entry_mod
     rows = m.queries()["docs_simpson_diversity"](spark, sf_dir).collect()
     assert rows
     for r in rows:
@@ -602,22 +585,22 @@ def test_simpson_diversity_bounds(spark, sf_dir):
         assert 1.0 <= r["effective_types"] <= r["n_types"]
 
 
-def test_assortativity_in_range(spark, sf_dir):
-    m = _entry()
+def test_assortativity_in_range(spark, sf_dir, entry_mod):
+    m = entry_mod
     r = m.queries()["graph_assortativity"](spark, sf_dir).collect()[0]
     assert -1.0 <= r["assortativity"] <= 1.0
     assert r["n_edges"] > 0
 
 
-def test_powerlaw_alpha_positive(spark, sf_dir):
-    m = _entry()
+def test_powerlaw_alpha_positive(spark, sf_dir, entry_mod):
+    m = entry_mod
     r = m.queries()["graph_powerlaw_alpha"](spark, sf_dir).collect()[0]
     assert r["k_min"] >= 1 and r["k_max"] >= r["k_min"]
     assert r["alpha"] > 1.0
 
 
-def test_abc_partitions_and_shares(spark, sf_dir):
-    m = _entry()
+def test_abc_partitions_and_shares(spark, sf_dir, entry_mod):
+    m = entry_mod
     rows = m.queries()["lineitem_abc"](spark, sf_dir).collect()
     classes = {r["abc_class"]: r for r in rows}
     assert set(classes) == {"A", "B", "C"}
@@ -749,10 +732,10 @@ def test_markov_removal_effect_properties():
             assert abs(sum(r["attribution"] for r in out) - 1.0) < 1e-9
 
 
-def test_price_index_base_month_is_one(spark, sf_dir):
+def test_price_index_base_month_is_one(spark, sf_dir, entry_mod):
     """At the base month the matched basket is priced at base prices:
     all three indices = 1."""
-    m = _entry()
+    m = entry_mod
     rows = m.queries()["part_price_index"](spark, sf_dir).collect()
     assert rows
     first = rows[0]
@@ -766,18 +749,18 @@ def test_price_index_base_month_is_one(spark, sf_dir):
         ) < 1e-5
 
 
-def test_xyz_partitions_all_parts(spark, sf_dir):
-    m = _entry()
+def test_xyz_partitions_all_parts(spark, sf_dir, entry_mod):
+    m = entry_mod
     rows = m.queries()["lineitem_xyz"](spark, sf_dir).collect()
     assert abs(sum(r["share"] for r in rows) - 1.0) < 1e-4
     assert all(r["xyz_class"] in {"X", "Y", "Z"} for r in rows)
     assert all(r["avg_cv"] >= 0 for r in rows)
 
 
-def test_user_daily_features_windows(spark, sf_dir):
+def test_user_daily_features_windows(spark, sf_dir, entry_mod):
     """rolling7 >= today's cents; first active day has NULL lag
     features; prev_gap_days >= 1 when present."""
-    m = _entry()
+    m = entry_mod
     rows = m.queries()["features_user_daily"](spark, sf_dir).collect()
     by_user_first = {}
     for r in rows:
@@ -790,8 +773,8 @@ def test_user_daily_features_windows(spark, sf_dir):
         assert first["lag1_cents"] is None
 
 
-def test_elasticity_regression_well_posed(spark, sf_dir):
-    m = _entry()
+def test_elasticity_regression_well_posed(spark, sf_dir, entry_mod):
+    m = entry_mod
     rows = m.queries()["brand_price_elasticity"](spark, sf_dir).collect()
     assert rows
     for r in rows:
@@ -799,10 +782,10 @@ def test_elasticity_regression_well_posed(spark, sf_dir):
         assert r["r2"] is None or 0.0 <= r["r2"] <= 1.0
 
 
-def test_forecast_backtest_scores_holdout(spark, sf_dir):
+def test_forecast_backtest_scores_holdout(spark, sf_dir, entry_mod):
     """5 types x 7 horizons; error metrics consistent: smape <= 2,
     ape >= 0, and smape == 0 iff ape == 0."""
-    m = _entry()
+    m = entry_mod
     rows = m.queries()["forecast_backtest"](spark, sf_dir).collect()
     assert len(rows) == 35
     for r in rows:
@@ -812,10 +795,10 @@ def test_forecast_backtest_scores_holdout(spark, sf_dir):
         assert r["actual"] > 0
 
 
-def test_concurrency_sweep_conserves_sessions(spark, sf_dir):
+def test_concurrency_sweep_conserves_sessions(spark, sf_dir, entry_mod):
     """Running concurrency never goes negative; peaks positive; the
     final running sum returns to 0 (every +1 has its -1)."""
-    m = _entry()
+    m = entry_mod
     rows = m.queries()["events_concurrency"](spark, sf_dir).collect()
     assert rows
     for r in rows:
@@ -823,14 +806,14 @@ def test_concurrency_sweep_conserves_sessions(spark, sf_dir):
         assert 0.0 <= r["mean_concurrent"] <= r["peak_concurrent"]
 
 
-def test_concurrency_hand_fixture(spark, sf_dir):
+def test_concurrency_hand_fixture(spark, sf_dir, entry_mod):
     """Two users overlapping for a stretch: peak 2; a lone trailing
     session: peak 1."""
     import datetime
 
     import vanus_spark.sources.tables as tables
 
-    m = _entry()
+    m = entry_mod
     t0 = datetime.datetime(2024, 1, 1, 10, 0, 0)
 
     def e(i, uid, minute):
@@ -852,14 +835,14 @@ def test_concurrency_hand_fixture(spark, sf_dir):
     assert max(r["peak_concurrent"] for r in out) == 2
 
 
-def test_anomaly_stl_flags_planted_spike(spark, sf_dir):
+def test_anomaly_stl_flags_planted_spike(spark, sf_dir, entry_mod):
     """A flat daily series with one huge spike: exactly the spike's
     residual neighborhood gets flagged, with |robust_z| > 2."""
     import datetime
 
     import vanus_spark.sources.tables as tables
 
-    m = _entry()
+    m = entry_mod
     rows = []
     eid = 0
     for d in range(30):
@@ -931,10 +914,10 @@ def test_geohash_roundtrip_contains_point(spark):
         assert lon_r[0] - eps <= lon < lon_r[1] + eps, (r["gh"], lon, lon_r)
 
 
-def test_modularity_identities(spark, sf_dir):
+def test_modularity_identities(spark, sf_dir, entry_mod):
     """sum(e_in) <= m, sum(d_c) = 2m, contributions sum to the
     reported modularity, Q in [-0.5, 1)."""
-    m = _entry()
+    m = entry_mod
     rows = m.queries()["graph_modularity"](spark, sf_dir).collect()
     assert rows
     q = rows[0]["modularity"]
@@ -944,11 +927,11 @@ def test_modularity_identities(spark, sf_dir):
     assert sum(r["e_in"] for r in rows) <= two_m // 2
 
 
-def test_uplift_qini_accounting(spark, sf_dir):
+def test_uplift_qini_accounting(spark, sf_dir, entry_mod):
     """Deciles partition both arms; final qini ~ total treated conv
     minus rate-adjusted control conv; uplift consistent with
     counts."""
-    m = _entry()
+    m = entry_mod
     rows = m.queries()["events_uplift_qini"](spark, sf_dir).collect()
     assert [r["decile"] for r in rows] == sorted(
         {r["decile"] for r in rows}

@@ -9,28 +9,17 @@ import math
 
 from datetime import datetime
 
-import importlib.util
-
-
-def _entry():
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry_s13__", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    return m
-
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_brier_decomposition_identity_and_bounds(spark):
+def test_brier_decomposition_identity_and_bounds(spark, entry_mod):
     """Murphy decomposition on the real fixture: brier must equal
     rel - res + unc to fp tolerance (the defining identity of the
     bucket-mean decomposition), every component must sit in its
     theoretical range, and mce >= ece (max dominates the weighted
     mean)."""
-    m = _entry()
+    m = entry_mod
     r = m.queries()["quality_brier_decomposition"](spark, SF).collect()[0]
     assert r["n"] > 0
     assert 0.0 <= r["brier"] <= 1.0
@@ -83,11 +72,11 @@ def test_t_closeness_hand_case(spark):
     assert got == {"A": 0.25, "B": 0.25}
 
 
-def test_t_closeness_registry_consistency(spark):
+def test_t_closeness_registry_consistency(spark, entry_mod):
     """Registry query on the fixture: a group whose tier distribution
     equals the global one has tvd ~ 0; tvd is always in [0, 1]; and
     k matches the k-anonymity query's group sizes."""
-    m = _entry()
+    m = entry_mod
     rows = m.queries()["privacy_t_closeness"](spark, SF).collect()
     assert rows
     for r in rows:
@@ -128,8 +117,9 @@ def test_spc_xbar_hand_case(spark):
     df.write.mode("overwrite").parquet("/tmp/spc_fixture/events.parquet")
     # the other tables aren't touched by this query; point sf_dir at
     # the fixture dir with only events present
-    m = _entry()
-    out = m.q_events_spc_xbar(spark, "/tmp/spc_fixture")
+    from vanus_spark.queries.series import q_events_spc_xbar
+
+    out = q_events_spc_xbar(spark, "/tmp/spc_fixture")
     got = {r["week"]: r for r in out.collect()}
     assert len(got) == 3
     means = sorted(round(r["week_mean_cents"], 6) for r in got.values())
@@ -162,8 +152,9 @@ def test_interarrival_fit_poisson_vs_metronome(spark):
         " value double, props string",
     )
     df.write.mode("overwrite").parquet("/tmp/ia_fixture/events.parquet")
-    m = _entry()
-    r = m.q_events_interarrival_fit(spark, "/tmp/ia_fixture").collect()[0]
+    from vanus_spark.queries.stats import q_events_interarrival_fit
+
+    r = q_events_interarrival_fit(spark, "/tmp/ia_fixture").collect()[0]
     assert r["n_gaps"] == 39
     assert r["mean_gap_s"] == 300.0
     assert abs(r["ks_d"] - (1.0 - math.exp(-1.0))) < 1e-6
@@ -267,7 +258,8 @@ def test_interarrival_fit_exponential_like_accepts(spark):
         " value double, props string",
     )
     df.write.mode("overwrite").parquet("/tmp/ia_geo_fixture/events.parquet")
-    m = _entry()
-    r = m.q_events_interarrival_fit(spark, "/tmp/ia_geo_fixture").collect()[0]
+    from vanus_spark.queries.stats import q_events_interarrival_fit
+
+    r = q_events_interarrival_fit(spark, "/tmp/ia_geo_fixture").collect()[0]
     assert r["n_gaps"] == 399
     assert not r["reject_exponential"], r["ks_d"]

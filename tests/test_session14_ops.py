@@ -6,22 +6,11 @@ oracles (tools/oracle_check.py)."""
 
 from __future__ import annotations
 
-import importlib.util
-
-
-def _entry():
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry_s14__", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    return m
-
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_page_hinkley_flags_injected_mean_shift(spark):
+def test_page_hinkley_flags_injected_mean_shift(spark, entry_mod):
     """A flat series (100.00/day) with a +500 step after day 10: PH
     must stay 0 before the shift and climb linearly after — exact
     values hand-derivable because mu and delta are known. With mu =
@@ -31,7 +20,7 @@ def test_page_hinkley_flags_injected_mean_shift(spark):
     alarm line between day 18 (1800) and day 19 (2025)."""
     from pyspark.sql import functions as F
 
-    m = _entry()
+    m = entry_mod
     # build a synthetic events table shaped like the fixture
     rows = [
         (i, f"2024-01-{d:02d}T12:00:00", 1, "click",
@@ -60,7 +49,7 @@ def test_page_hinkley_flags_injected_mean_shift(spark):
     assert out["2024-01-20"]["drift"]
 
 
-def test_pinball_loss_on_known_quantiles(spark):
+def test_pinball_loss_on_known_quantiles(spark, entry_mod):
     """21 train days with cents 1..21 (values 0.01..0.21): the
     discrete quantiles are rank ceil(tau*21) -> P10=3, P50=11, P90=19
     cents. One test day with value 0.15 (15 cents): pinball loss =
@@ -68,7 +57,7 @@ def test_pinball_loss_on_known_quantiles(spark):
     P90: 0.9*(-4) vs -0.1*(-4)=0.4c."""
     from pyspark.sql import functions as F
 
-    m = _entry()
+    m = entry_mod
     rows = [
         (d, f"2024-01-{d:02d}T12:00:00", 1, "view", d / 100.0, None)
         for d in range(1, 22)
@@ -110,14 +99,14 @@ def _events_fixture(spark, rows):
     return tmp
 
 
-def test_conformal_exact_quantile_and_coverage(spark):
+def test_conformal_exact_quantile_and_coverage(spark, entry_mod):
     """Flat +7/week series: every calibration residual |y_d - y_(d-7)|
     is exactly 7.00, so q = 7.00 and every test residual (also 7.00)
     is covered -> coverage 1.0 with n_cal = 14 (days 8-21), k =
     ceil(0.8*15) = 12. Quadratic series y_d = d^2 cents: residuals
     14d-49 strictly increase, the 12th smallest (d=19) is 2.17, and
     every test residual (>= 2.59) misses -> coverage 0.0."""
-    m = _entry()
+    m = entry_mod
     flat = _events_fixture(
         spark,
         [
@@ -147,12 +136,12 @@ def test_conformal_exact_quantile_and_coverage(spark):
     assert r["coverage"] == 0.0
 
 
-def test_forecast_baselines_linear_series(spark):
+def test_forecast_baselines_linear_series(spark, entry_mod):
     """Linear y_d = d over train days 1-21, test 22-30: drift is EXACT
     (MAE 0), naive errs by h (mean 5), mean-method errs by h+10
     (mean 15), seasonal-naive errs by 7,7,7,7,7,7,7,14,14
     (mean 77/9)."""
-    m = _entry()
+    m = entry_mod
     tmp = _events_fixture(
         spark,
         [
@@ -196,11 +185,11 @@ def test_roc_auc_by_perfect_and_inverted_segments(spark):
     assert g["auc"] == b["auc"] and g["n_pos"] == b["n_pos"]
 
 
-def test_rfm_migration_matrix_invariants(spark):
+def test_rfm_migration_matrix_invariants(spark, entry_mod):
     """On the real fixture: per-origin shares sum to 1, tiers are the
     fixed 3-level alphabet, and the joined population never exceeds
     either period's customer count."""
-    m = _entry()
+    m = entry_mod
     rows = m.queries()["orders_rfm_migration"](spark, SF).collect()
     tiers = {"high", "mid", "low"}
     assert all(r["tier_from"] in tiers and r["tier_to"] in tiers for r in rows)
@@ -213,7 +202,7 @@ def test_rfm_migration_matrix_invariants(spark):
         assert abs(s - 1.0) < 1e-4
 
 
-def test_term_burstiness_glue_vs_topical(spark):
+def test_term_burstiness_glue_vs_topical(spark, entry_mod):
     """20 docs: 'the' once per doc (cf=df=20 -> burstiness 1, df_ratio
     1/(1-e^-1) = 1.58 -> not bursty); 'quark' five times in each of 5
     docs (cf=25, df=5 -> burstiness 5, e_df = 20(1-e^-1.25) = 14.27,
@@ -222,7 +211,7 @@ def test_term_burstiness_glue_vs_topical(spark):
     import os
     import tempfile
 
-    m = _entry()
+    m = entry_mod
     docs = []
     for d in range(20):
         text = "the filler" + (" quark" * 5 if d < 5 else " chatter")
@@ -246,13 +235,13 @@ def test_term_burstiness_glue_vs_topical(spark):
     assert q["bursty"]
 
 
-def test_theta_linear_series_closed_form(spark):
+def test_theta_linear_series_closed_form(spark, entry_mod):
     """Linear y_t = t over train days 1-21: OLS slope = 1 exactly; the
     alpha=0.5 SES level is S_21 = 20 + 2^-20, so the h-step theta
     forecast is 20.5 + h/2 + 2^-20 and the error vs y = 21+h is
     0.5 + h/2 - 2^-20 -> MAE over h=1..9 = 3 - 2^-20 = 2.999999
     at round(6)."""
-    m = _entry()
+    m = entry_mod
     tmp = _events_fixture(
         spark,
         [
@@ -265,13 +254,13 @@ def test_theta_linear_series_closed_form(spark):
     assert r["mae"] == 2.999999
 
 
-def test_quantile_regression_median_ignores_outlier(spark):
+def test_quantile_regression_median_ignores_outlier(spark, entry_mod):
     """Five days y = 1,2,3,10,5 (day 4 is an outlier): the LAD line is
     exactly y = x (slope 1, intercept 0) with mean check loss
     0.5*|10-4|/5 = 0.6; the tau=0.25 line is the same (all residuals
     above cost only 0.25 -> mean 0.3), while OLS would tilt toward
     the outlier."""
-    m = _entry()
+    m = entry_mod
     vals = {1: 1.0, 2: 2.0, 3: 3.0, 4: 10.0, 5: 5.0}
     tmp = _events_fixture(
         spark,
@@ -297,7 +286,7 @@ def test_quantile_regression_median_ignores_outlier(spark):
     assert out[0.75]["mean_check_loss"] <= 0.9
 
 
-def test_bm25_sweep_grid_and_known_item_recovery(spark):
+def test_bm25_sweep_grid_and_known_item_recovery(spark, entry_mod):
     """200-doc corpus where both probe docs (0 and 97 — the bounded
     doc_id % 97 == 0, < 2000 panel) open with terms unique to them:
     every (k1, b) config must retrieve its own doc at rank 1 -> MRR
@@ -305,7 +294,7 @@ def test_bm25_sweep_grid_and_known_item_recovery(spark):
     import os
     import tempfile
 
-    m = _entry()
+    m = entry_mod
     docs = []
     for d in range(200):
         if d == 0:
@@ -331,7 +320,7 @@ def test_bm25_sweep_grid_and_known_item_recovery(spark):
         assert r["mrr"] >= 2 / 3  # the two unique-term probes hit rank 1
 
 
-def test_neyman_allocation_two_strata_closed_form(spark):
+def test_neyman_allocation_two_strata_closed_form(spark, entry_mod):
     """Two strata, equal sizes (4 each), sds 1.0 and 3.0 (hand
     constructed): Neyman gives the variable stratum 3x the samples —
     750 vs 250 of the 1000 budget — while proportional gives 500/500.
@@ -343,7 +332,7 @@ def test_neyman_allocation_two_strata_closed_form(spark):
     import os
     import tempfile
 
-    m = _entry()
+    m = entry_mod
     rows = []
     k = 0
     for v in (9.0, 11.0, 9.0, 11.0):
@@ -371,7 +360,7 @@ def test_neyman_allocation_two_strata_closed_form(spark):
     assert out["B"]["proportional_n"] == 500.0
 
 
-def test_matryoshka_recall_perfect_when_signal_in_prefix(spark):
+def test_matryoshka_recall_perfect_when_signal_in_prefix(spark, entry_mod):
     """Vectors whose dims beyond 8 are all ZERO: every prefix search
     (8/16/32 — slices truncate at the vector length) sees exactly the
     full-dim geometry, so recall must be 1.0 at every prefix."""
@@ -379,7 +368,7 @@ def test_matryoshka_recall_perfect_when_signal_in_prefix(spark):
     import random as _random
     import tempfile
 
-    m = _entry()
+    m = entry_mod
     rng = _random.Random(7)
     rows = [
         (i, [rng.uniform(-1, 1) for _ in range(8)] + [0.0] * 56, i % 3)
@@ -399,7 +388,7 @@ def test_matryoshka_recall_perfect_when_signal_in_prefix(spark):
         assert r["recall"] == 1.0
 
 
-def test_threshold_curve_monotone_and_exact(spark):
+def test_threshold_curve_monotone_and_exact(spark, entry_mod):
     """Three docs: A == B exactly (jaccard 1.0), C shares ~half its
     grams with A. Curve invariants: n_pairs and n_dropped are
     non-increasing in the threshold, the t=0.9 row keeps only the
@@ -407,7 +396,7 @@ def test_threshold_curve_monotone_and_exact(spark):
     import os
     import tempfile
 
-    m = _entry()
+    m = entry_mod
     a = "alpha beta gamma delta epsilon zeta"
     c = "alpha beta gamma delta other tokens entirely new"
     rows = [

@@ -6,19 +6,9 @@ DuckDB oracles (tools/oracle_check.py)."""
 
 from __future__ import annotations
 
-import importlib.util
 import math
 import os
 import tempfile
-
-
-def _entry():
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry_s15__", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    return m
 
 
 def _write_docs(spark, rows):
@@ -32,11 +22,11 @@ def _write_docs(spark, rows):
     return tmp
 
 
-def test_cluster_agreement_perfect_clustering(spark):
+def test_cluster_agreement_perfect_clustering(spark, entry_mod):
     """Two exact-duplicate pairs + two singletons: LSH(0.8) recovers
     exactly the truth classes, so every chance-corrected metric is
     exactly 1 and the cluster/truth counts match."""
-    m = _entry()
+    m = entry_mod
     x = "alpha beta gamma delta epsilon zeta eta theta"
     y = "one two three four five six seven eight nine"
     z = "red green blue cyan magenta yellow black white"
@@ -59,11 +49,11 @@ def test_cluster_agreement_perfect_clustering(spark):
         assert r[c] == 1.0, (c, r[c])
 
 
-def test_cluster_agreement_bounds_on_real_fixture(spark):
+def test_cluster_agreement_bounds_on_real_fixture(spark, entry_mod):
     """sf0.001 corpus: metric-range invariants (ARI <= 1, the
     entropy-normalized metrics in [0,1], V between min and max of
     homogeneity/completeness — harmonic-mean property)."""
-    m = _entry()
+    m = entry_mod
     r = m.queries()["dedup_cluster_agreement"](
         spark, "/root/testdata/sf0.001"
     ).collect()[0]
@@ -75,7 +65,7 @@ def test_cluster_agreement_bounds_on_real_fixture(spark):
     assert lo - 1e-6 <= r["v_measure"] <= hi + 1e-6
 
 
-def test_rater_kappa_hand_fixture(spark):
+def test_rater_kappa_hand_fixture(spark, entry_mod):
     """Four docs with hand-derived rater verdicts.
 
     A: 60x 'tok'                -> structural T, diversity F, stop F
@@ -90,7 +80,7 @@ def test_rater_kappa_hand_fixture(spark):
     diversity_vs_stopword:   n11=1 n10=1 n01=1 n00=1
       po=0.5, pe=0.5, kappa=0.0
     """
-    m = _entry()
+    m = entry_mod
     a = " ".join(["tok"] * 60)
     b = " ".join(f"word{i}" for i in range(60))
     c = " ".join(["a the"] * 10)
@@ -118,10 +108,10 @@ def test_rater_kappa_hand_fixture(spark):
     assert ds["kappa"] == 0.0
 
 
-def test_score_agreement_perfect_estimate(spark):
+def test_score_agreement_perfect_estimate(spark, entry_mod):
     """n_chars = 5 * tokens exactly: the chars/5 estimate agrees
     perfectly — CCC = Pearson = 1, Bland-Altman diff and LoA all 0."""
-    m = _entry()
+    m = entry_mod
     rows = []
     for i, n in enumerate((10, 20, 40, 80)):
         t = " ".join(["w"] * n)
@@ -134,11 +124,11 @@ def test_score_agreement_perfect_estimate(spark):
     assert r["mean_tokens"] == r["mean_estimate"] == 37.5
 
 
-def test_score_agreement_matches_numpy_moments(spark):
+def test_score_agreement_matches_numpy_moments(spark, entry_mod):
     """Skewed fixture: operator output equals the population-moment
     formulas computed in plain Python (CCC per Lin 1989, BA per Bland
     & Altman 1986)."""
-    m = _entry()
+    m = entry_mod
     toks = [10, 25, 40, 55, 80]
     chars = [61, 120, 230, 260, 390]
     rows = []
@@ -178,13 +168,13 @@ def _write_orders(spark, rows):
     return tmp
 
 
-def test_ordinal_assoc_perfect_concordance(spark):
+def test_ordinal_assoc_perfect_concordance(spark, entry_mod):
     """9 orders, priority == tercile by construction: every
     cross-band pair is concordant (C=27, D=0) so gamma = Somers' D =
     tau-b = 1."""
     import datetime
 
-    m = _entry()
+    m = entry_mod
     dt = datetime.datetime(1995, 1, 1)
     rows = []
     for i in range(9):
@@ -200,14 +190,14 @@ def test_ordinal_assoc_perfect_concordance(spark):
     assert r["somers_d"] == 1.0 and r["tau_b"] == 1.0
 
 
-def test_ordinal_assoc_ties_never_straddle_bands(spark):
+def test_ordinal_assoc_ties_never_straddle_bands(spark, entry_mod):
     """All prices identical: the value-banded tercile keeps the whole
     tie group in band 1 (an ntile would split it), so there are no
     cross-band pairs and the coefficients are NULL (0/0), not a
     fabricated association."""
     import datetime
 
-    m = _entry()
+    m = entry_mod
     dt = datetime.datetime(1995, 1, 1)
     rows = [
         (i, 1, "O", 500.0, dt, f"{i % 3 + 1}-P") for i in range(6)

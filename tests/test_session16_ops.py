@@ -5,19 +5,9 @@ the registry queries themselves are gated by the DuckDB oracles
 
 from __future__ import annotations
 
-import importlib.util
 import math
 import os
 import tempfile
-
-
-def _entry():
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry_s16__", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    return m
 
 
 def _write_events(spark, rows):
@@ -33,11 +23,11 @@ def _write_events(spark, rows):
     return tmp
 
 
-def test_jarque_bera_symmetric_fixture(spark):
+def test_jarque_bera_symmetric_fixture(spark, entry_mod):
     """Six symmetric daily totals 1..6 dollars: zero skewness by
     construction; kurtosis/JB/p agree with the population-moment
     formulas computed in plain Python."""
-    m = _entry()
+    m = entry_mod
     rows = [
         (i, f"2024-01-{i + 1:02d} 10:00:00", 1, "purchase", float(i + 1), "{}")
         for i in range(6)
@@ -60,9 +50,9 @@ def test_jarque_bera_symmetric_fixture(spark):
     assert abs(r["p_value"] - math.exp(-jb / 2.0)) < 1e-6
 
 
-def test_jarque_bera_bounds_real_fixture(spark):
+def test_jarque_bera_bounds_real_fixture(spark, entry_mod):
     """sf0.001: one row per event type, p in [0, 1], JB >= 0."""
-    m = _entry()
+    m = entry_mod
     out = m.queries()["events_jarque_bera"](
         spark, "/root/testdata/sf0.001"
     ).collect()
@@ -84,11 +74,11 @@ def _write_docs(spark, rows):
     return tmp
 
 
-def test_fleiss_kappa_hand_fixture(spark):
+def test_fleiss_kappa_hand_fixture(spark, entry_mod):
     """Same four docs as the Cohen-kappa golden (votes k = 1, 2, 1, 3):
     N=4, K=7, S = 2+2+2+6 = 12, Q = 49 + 25 = 74 ->
     P-bar = 0.5, Pe-bar = 74/144, kappa = (144 - 148)/(288 - 148)."""
-    m = _entry()
+    m = entry_mod
     a = " ".join(["tok"] * 60)
     b = " ".join(f"word{i}" for i in range(60))
     c = " ".join(["a the"] * 10)
@@ -109,10 +99,10 @@ def test_fleiss_kappa_hand_fixture(spark):
     assert abs(r["fleiss_kappa"] - (-4.0 / 140.0)) < 1e-6
 
 
-def test_fleiss_kappa_unanimous_is_one_observed(spark):
+def test_fleiss_kappa_unanimous_is_one_observed(spark, entry_mod):
     """All raters agree on every doc (k = 0 or 3): P-bar = 1; kappa
     = 1 only if both verdicts occur (here they do)."""
-    m = _entry()
+    m = entry_mod
     good = " ".join(f"w{i}" for i in range(50)) + " a a the the"
     bad = " ".join(["z"] * 10)
     rows = [
@@ -125,14 +115,14 @@ def test_fleiss_kappa_unanimous_is_one_observed(spark):
     assert r["fleiss_kappa"] == 1.0
 
 
-def test_fd_violations_hand_fixture(spark):
+def test_fd_violations_hand_fixture(spark, entry_mod):
     """orders: custkey 1 -> {1-P, 1-P, 2-P}, custkey 2 -> {3-P}
     (g3' = 1/4); one shared date with statuses O,O,F,F (g3' = 1/2);
     customer: the key FD holds exactly, nationkey -> segment keeps
     2 of 3."""
     import datetime
 
-    m = _entry()
+    m = entry_mod
     dt = datetime.datetime(1995, 3, 1)
     odf = spark.createDataFrame(
         [
@@ -175,10 +165,10 @@ def test_fd_violations_hand_fixture(spark):
     assert not r4["holds"]
 
 
-def test_fd_key_holds_real_fixture(spark):
+def test_fd_key_holds_real_fixture(spark, entry_mod):
     """sf0.001: the customer primary key FD must hold exactly; the
     deliberately-violated date -> status FD must not."""
-    m = _entry()
+    m = entry_mod
     out = {
         r["fd"]: r
         for r in m.queries()["table_fd_violations"](
@@ -201,11 +191,11 @@ def _write_embeddings(spark, rows):
     return tmp
 
 
-def test_cka_prefix_carries_all_variance(spark):
+def test_cka_prefix_carries_all_variance(spark, entry_mod):
     """Vectors whose dims 8..63 are identically zero: every centered
     gram entry touching a dim >= 8 vanishes, so each prefix >= 8 sees
     the full geometry and CKA is exactly 1 at every prefix."""
-    m = _entry()
+    m = entry_mod
     rows = []
     for i in range(4):
         head = [float((i + 1) * (j + 2) % 7) + 0.5 * i for j in range(8)]
@@ -218,11 +208,11 @@ def test_cka_prefix_carries_all_variance(spark):
         assert r["cka"] == 1.0, (r["prefix_dim"], r["cka"])
 
 
-def test_cka_bounds_and_self_check_real_fixture(spark):
+def test_cka_bounds_and_self_check_real_fixture(spark, entry_mod):
     """sf0.001: CKA in (0, 1]; the m=64 row is the exact self-CKA and
     must be 1; truncation to 8 dims must lose at least as much
     geometry as keeping all 64."""
-    m = _entry()
+    m = entry_mod
     out = {
         r["prefix_dim"]: r["cka"]
         for r in m.queries()["embedding_cka"](
@@ -235,11 +225,11 @@ def test_cka_bounds_and_self_check_real_fixture(spark):
     assert out[8] <= out[64]
 
 
-def test_kpss_matches_python_reference(spark):
+def test_kpss_matches_python_reference(spark, entry_mod):
     """10-day rising series: eta and the long-run variance agree with
     a plain-Python transcription of the same KPSS formulas (Bartlett
     weights, q = floor(4 (n/100)^0.25))."""
-    m = _entry()
+    m = entry_mod
     vals = [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0, 9.0, 10.0]
     rows = [
         (i, f"2024-01-{i + 1:02d} 10:00:00", 1, "purchase", v, "{}")
@@ -269,10 +259,10 @@ def test_kpss_matches_python_reference(spark):
     assert r["stationary_5pct"] == (eta <= 0.463)
 
 
-def test_kpss_real_fixture_rows(spark):
+def test_kpss_real_fixture_rows(spark, entry_mod):
     """sf0.001: one row per type, 30-day series -> bandwidth 2,
     positive long-run variance."""
-    m = _entry()
+    m = entry_mod
     out = m.queries()["events_kpss"](
         spark, "/root/testdata/sf0.001"
     ).collect()
@@ -283,11 +273,11 @@ def test_kpss_real_fixture_rows(spark):
         assert r["kpss_eta"] > 0.0
 
 
-def test_periodogram_alternating_series(spark):
+def test_periodogram_alternating_series(spark, entry_mod):
     """Alternating 15/5 daily totals over 8 days: the period-2 line
     carries essentially all candidate power, and the shares sum
     to 1."""
-    m = _entry()
+    m = entry_mod
     rows = []
     for i in range(8):
         v = 15.0 if i % 2 == 0 else 5.0
@@ -305,12 +295,12 @@ def test_periodogram_alternating_series(spark):
     assert abs(sum(by_p.values()) - 1.0) < 1e-5
 
 
-def test_granger_lagged_coupling(spark):
+def test_granger_lagged_coupling(spark, entry_mod):
     """signups(t) = purchases(t-1) + one off-by-one day: the
     purchase->signup direction fits almost perfectly and its LM
     statistic matches a plain-Python transcription of the
     normal-equation closed form; the reverse direction is weaker."""
-    m = _entry()
+    m = entry_mod
     p_cnt = [3, 1, 4, 1, 5, 9, 2, 6, 5, 3]
     s_cnt = [2] + p_cnt[:-1]
     s_cnt[5] += 1  # break the exact fit so RSS_u > 0
@@ -370,10 +360,10 @@ def test_granger_lagged_coupling(spark):
         assert r["f_stat"] >= 0.0 and 0.0 <= r["p_value"] <= 1.0
 
 
-def test_cox_score_matches_python_reference(spark):
+def test_cox_score_matches_python_reference(spark, entry_mod):
     """Four users with known (duration, status, covariate): the score
     statistic matches a direct Breslow risk-set computation."""
-    m = _entry()
+    m = entry_mod
     rows = [
         # user 1: x=2 events, converts at +10h
         (0, "2024-01-01 00:00:00", 1, "page_view", 1.0, "{}"),
@@ -415,9 +405,9 @@ def test_cox_score_matches_python_reference(spark):
     assert abs(r["z"] - u / _math.sqrt(v)) < 1e-6
 
 
-def test_cox_score_real_fixture_bounds(spark):
+def test_cox_score_real_fixture_bounds(spark, entry_mod):
     """sf0.001: p in [0,1], conversions <= users, variance > 0."""
-    m = _entry()
+    m = entry_mod
     r = m.queries()["users_cox_score"](
         spark, "/root/testdata/sf0.001"
     ).collect()[0]
@@ -426,11 +416,11 @@ def test_cox_score_real_fixture_bounds(spark):
     assert r["score_var"] > 0.0
 
 
-def test_log_odds_symmetric_fixture(spark):
+def test_log_odds_symmetric_fixture(spark, entry_mod):
     """Mirror-image slices (en: apple 3 / banana 1; rest: banana 3 /
     apple 1): the Monroe deltas are exact negatives and match the
     closed form 2 ln(53/51) under the a0=100 pooled prior."""
-    m = _entry()
+    m = entry_mod
     rows = [
         (0, "apple apple banana", "en", "s", 18),
         (1, "apple", "en", "s", 5),
@@ -452,11 +442,11 @@ def test_log_odds_symmetric_fixture(spark):
     assert abs(out["banana"]["log_odds"] + delta) < 1e-6
 
 
-def test_msprt_matches_python_reference(spark):
+def test_msprt_matches_python_reference(spark, entry_mod):
     """Five daily purchase-signup gaps: log Lambda and the running
     always-valid p match a plain-Python transcription; p is monotone
     non-increasing by construction."""
-    m = _entry()
+    m = entry_mod
     p_vals = [5.0, 6.0, 5.5, 7.0, 6.5]
     s_vals = [4.0, 4.0, 4.0, 4.5, 4.5]
     rows = []
@@ -507,10 +497,10 @@ def _as_norm_sf(z):
     return math.exp(-z * z / 2) / 2.5066282746310002 * poly
 
 
-def test_anderson_darling_matches_python_reference(spark):
+def test_anderson_darling_matches_python_reference(spark, entry_mod):
     """Six daily totals with a fat outlier: A^2 matches a direct
     transcription using the same Abramowitz-Stegun tail."""
-    m = _entry()
+    m = entry_mod
     vals = [10.0, 11.0, 12.0, 13.0, 14.0, 40.0]
     rows = [
         (i, f"2024-01-{i + 1:02d} 10:00:00", 1, "purchase", v, "{}")
@@ -545,11 +535,11 @@ def test_anderson_darling_matches_python_reference(spark):
     assert not r["normal_5pct"]  # the outlier breaks normality
 
 
-def test_entropy_rate_hand_fixture(spark):
+def test_entropy_rate_hand_fixture(spark, entry_mod):
     """docs 'a b a b' and 'a a': H1 over {a:4, b:2}, H2 over bigram
     counts {(a,b):2, (b,a):1, (a,a):1} with first-token margins
     {a:3, b:1} — hand-derived nats."""
-    m = _entry()
+    m = entry_mod
     rows = [
         (0, "a b a b", "en", "s", 7),
         (1, "a a", "en", "s", 3),
@@ -566,10 +556,10 @@ def test_entropy_rate_hand_fixture(spark):
     assert abs(r["perplexity_bigram"] - math.exp(h2)) < 1e-6
 
 
-def test_entropy_rate_conditioning_reduces_entropy(spark):
+def test_entropy_rate_conditioning_reduces_entropy(spark, entry_mod):
     """sf0.001: conditioning can only help — H(w2|w1) <= H1 on any
     corpus (Shannon), so the ratio is in (0, 1]."""
-    m = _entry()
+    m = entry_mod
     r = m.queries()["docs_entropy_rate"](
         spark, "/root/testdata/sf0.001"
     ).collect()[0]

@@ -5,28 +5,18 @@ registry queries themselves are gated by the DuckDB oracles
 
 from __future__ import annotations
 
-import importlib.util
 import math
 import os
 import tempfile
 
 
-def _entry():
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry_s17__", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    return m
-
-
-def test_ht_certainty_units_are_exact(spark):
+def test_ht_certainty_units_are_exact(spark, entry_mod):
     """Four orders small enough that c*y >= 1 for every one: all are
     certainty units (pi = 1), so the HT total IS the exact total,
     the design variance is 0, and Kish neff = n."""
     import datetime
 
-    m = _entry()
+    m = entry_mod
     dt = datetime.datetime(1995, 1, 1)
     rows = [
         (i, 1, "O", float(i + 1), dt, "1-P") for i in range(4)
@@ -47,12 +37,12 @@ def test_ht_certainty_units_are_exact(spark):
     assert r["kish_neff"] == 4.0
 
 
-def test_ht_unbiasedness_ballpark_real_fixture(spark):
+def test_ht_unbiasedness_ballpark_real_fixture(spark, entry_mod):
     """sf0.001: the PPS estimate lands within 20% of the exact total
     (a single deterministic draw, not an expectation — but pi is
     value-proportional, so big orders are near-certainty and the
     error is dominated by the small-order tail)."""
-    m = _entry()
+    m = entry_mod
     r = m.queries()["sample_horvitz_thompson"](
         spark, "/root/testdata/sf0.001"
     ).collect()[0]
@@ -73,11 +63,11 @@ def _write_docs(spark, rows):
     return tmp
 
 
-def test_burrows_delta_identical_sources_are_zero(spark):
+def test_burrows_delta_identical_sources_are_zero(spark, entry_mod):
     """s1 and s2 share the exact term distribution (x:y = 1:1), s3
     skews 3:1 — Delta(s1,s2) = 0 and both distances to s3 are equal
     and positive."""
-    m = _entry()
+    m = entry_mod
     rows = [
         (0, "x y", "en", "s1", 3),
         (1, "x y x y", "en", "s2", 7),
@@ -96,10 +86,10 @@ def test_burrows_delta_identical_sources_are_zero(spark):
     assert out[("s1", "s2")]["n_terms"] == 2
 
 
-def test_burrows_delta_pair_count_real_fixture(spark):
+def test_burrows_delta_pair_count_real_fixture(spark, entry_mod):
     """sf0.001: all C(20,2) = 190 source pairs emit, every delta is
     non-negative."""
-    m = _entry()
+    m = entry_mod
     out = m.queries()["docs_burrows_delta"](
         spark, "/root/testdata/sf0.001"
     ).collect()
@@ -108,11 +98,11 @@ def test_burrows_delta_pair_count_real_fixture(spark):
         assert r["delta"] >= 0.0
 
 
-def test_rich_club_structure_real_fixture(spark):
+def test_rich_club_structure_real_fixture(spark, entry_mod):
     """sf0.001: the planted hub clique makes the high-k club denser
     than the k=2 club; counts are monotone non-increasing in k and
     phi stays in [0, 1]."""
-    m = _entry()
+    m = entry_mod
     out = m.queries()["graph_rich_club"](
         spark, "/root/testdata/sf0.001"
     ).collect()
@@ -131,12 +121,12 @@ def test_rich_club_structure_real_fixture(spark):
     assert by_k[8]["rho_vs_density"] > 1.0
 
 
-def test_dp_budget_hand_fixture(spark):
+def test_dp_budget_hand_fixture(spark, entry_mod):
     """Two QI groups of size 5 and 20: at eps=0.1 (b=10) both carry
     >10% expected relative error; at eps=2 (b=0.5) neither does
     (0.5/5 = 0.1 is NOT strictly greater). Gaussian sigma follows
     sqrt(2 ln 1.25e5)/eps."""
-    m = _entry()
+    m = entry_mod
     rows = [(i, f"c{i}", 1, 0.0, "AUTO") for i in range(5)] + [
         (100 + i, f"d{i}", 2, 0.0, "AUTO") for i in range(20)
     ]
@@ -174,11 +164,11 @@ def _write_events(spark, rows):
     return tmp
 
 
-def test_mi_profile_dependence_extremes(spark):
+def test_mi_profile_dependence_extremes(spark, entry_mod):
     """purchase always at 01:00/band 0, signup always at 02:00/band 2:
     hour and value_band carry FULL information about the type
     (MI = ln 2, NMI = 1)."""
-    m = _entry()
+    m = entry_mod
     rows = []
     for i in range(5):
         rows.append(
@@ -198,10 +188,10 @@ def test_mi_profile_dependence_extremes(spark):
         assert abs(out[dim]["h_type"] - math.log(2.0)) < 1e-6
 
 
-def test_mi_profile_independence_is_zero(spark):
+def test_mi_profile_independence_is_zero(spark, entry_mod):
     """Both types occur at both hours with equal counts: MI over the
     hour dimension is exactly 0."""
-    m = _entry()
+    m = entry_mod
     rows = []
     eid = 0
     for t in ("purchase", "signup"):
@@ -220,10 +210,10 @@ def test_mi_profile_independence_is_zero(spark):
     assert out["hour"]["nmi"] == 0.0
 
 
-def test_hill_tail_matches_python_reference(spark):
+def test_hill_tail_matches_python_reference(spark, entry_mod):
     """300 linearly spaced values: alpha-hat and the implied P99.9
     match a direct transcription of the Hill estimator."""
-    m = _entry()
+    m = entry_mod
     rows = [
         (i, f"2024-01-{i % 28 + 1:02d} 10:00:00", 1, "purchase",
          float(i + 1), "{}")
@@ -243,13 +233,13 @@ def test_hill_tail_matches_python_reference(spark):
     assert abs(r["p999_implied_dollars"] - p999) < 1e-4
 
 
-def test_cpk_hand_fixture(spark):
+def test_cpk_hand_fixture(spark, entry_mod):
     """Three lineitems shipped 10/20/30 days after the order:
     mu=20, population sd = sqrt(200/3), Cp/Cpk from the [1,122]
     spec window, nothing out of spec."""
     import datetime
 
-    m = _entry()
+    m = entry_mod
     odf = spark.createDataFrame(
         [(1, 1, "O", 10.0, datetime.datetime(1995, 1, 1), "1-URGENT")],
         "o_orderkey long, o_custkey long, o_orderstatus string,"
@@ -281,12 +271,12 @@ def test_cpk_hand_fixture(spark):
     assert r["n_out"] == 0 and r["frac_out_of_spec"] == 0.0
 
 
-def test_kneser_ney_matches_python_reference(spark):
+def test_kneser_ney_matches_python_reference(spark, entry_mod):
     """Train doc 'a b a b a c' + test doc 'a b c d': every model
     count is hand-enumerable; the cross-entropy matches a direct
     transcription of the interpolated-KN formula with the add-half
     continuation smoothing."""
-    m = _entry()
+    m = entry_mod
     rows = [
         (0, "a b a b a c", "en", "s", 11),
         (500, "a b c d", "en", "s", 7),
@@ -318,11 +308,11 @@ def test_kneser_ney_matches_python_reference(spark):
     assert abs(r["perplexity"] - math.exp(ce)) < 1e-6
 
 
-def test_kneser_ney_tighter_than_backoff_on_real_corpus(spark):
+def test_kneser_ney_tighter_than_backoff_on_real_corpus(spark, entry_mod):
     """sf0.001: KN perplexity is finite and positive; backoff and
     unseen-context counts are a small fraction of the scored pairs
     (train split covers half the corpus)."""
-    m = _entry()
+    m = entry_mod
     r = m.queries()["docs_kneser_ney"](
         spark, "/root/testdata/sf0.001"
     ).collect()[0]
@@ -332,13 +322,13 @@ def test_kneser_ney_tighter_than_backoff_on_real_corpus(spark):
     assert r["perplexity"] > 1.0
 
 
-def test_panel_fe_matches_python_reference(spark):
+def test_panel_fe_matches_python_reference(spark, entry_mod):
     """Two customers with different spend levels but a shared +5
     cents/day within-trend: the FE estimator recovers the within
     slope a pooled OLS would distort."""
     import datetime
 
-    m = _entry()
+    m = entry_mod
     base = datetime.datetime(1995, 1, 1)
     data = [  # (cust, day, dollars)
         (1, 0, 1.00), (1, 10, 1.50), (1, 20, 2.00),
@@ -365,11 +355,11 @@ def test_panel_fe_matches_python_reference(spark):
     assert r["t_stat"] is None
 
 
-def test_simpson_audit_detects_flip(spark):
+def test_simpson_audit_detects_flip(spark, entry_mod):
     """Cohort 1 beats cohort 0 by +$10 on BOTH days, but the pooled
     means reverse (the weights are crossed) — the audit must flag
     it."""
-    m = _entry()
+    m = entry_mod
     rows = []
     eid = 0
     for _ in range(10):
@@ -392,10 +382,10 @@ def test_simpson_audit_detects_flip(spark):
     assert r["simpson_flag"]
 
 
-def test_trend_hac_matches_python_reference(spark):
+def test_trend_hac_matches_python_reference(spark, entry_mod):
     """Six daily totals: slope, OLS and HAC standard errors all match
     a direct transcription (Bartlett weights, q = 2)."""
-    m = _entry()
+    m = entry_mod
     vals = [10.0, 12.0, 11.0, 15.0, 14.0, 18.0]
     rows = [
         (i, f"2024-01-{i + 1:02d} 10:00:00", 1, "purchase", v, "{}")
@@ -436,10 +426,10 @@ def _write_embeddings(spark, rows):
     return tmp
 
 
-def test_intrinsic_dim_hand_fixture(spark):
+def test_intrinsic_dim_hand_fixture(spark, entry_mod):
     """One probe (vec 0 at the origin) with neighbors at distance 1
     and 2: ln(r2/r1) = ln 2, so ID-hat = 1/ln 2."""
-    m = _entry()
+    m = entry_mod
     z = [0.0] * 63
     rows = [
         (0, [0.0] + z, 0),
@@ -454,11 +444,11 @@ def test_intrinsic_dim_hand_fixture(spark):
     assert abs(r["mean_log_ratio"] - math.log(2.0)) < 1e-6
 
 
-def test_intrinsic_dim_real_fixture_bounds(spark):
+def test_intrinsic_dim_real_fixture_bounds(spark, entry_mod):
     """sf0.001: the estimate is positive and cannot exceed the
     ambient dimension by more than estimator noise allows on 64-dim
     synthetic data; every probe has a usable 2-NN pair."""
-    m = _entry()
+    m = entry_mod
     r = m.queries()["embedding_intrinsic_dim"](
         spark, "/root/testdata/sf0.001"
     ).collect()[0]
@@ -467,12 +457,12 @@ def test_intrinsic_dim_real_fixture_bounds(spark):
     assert r["intrinsic_dim"] > 0.0
 
 
-def test_krippendorff_hand_fixture(spark):
+def test_krippendorff_hand_fixture(spark, entry_mod):
     """Same 4-doc rater fixture as the Fleiss golden (votes 1,2,1,3):
     S2 = 6, K = 7, n = 12 -> D_o = 0.5, D_e = 70/132,
     alpha = 1 - 66/70. Note alpha > 0 while Fleiss kappa < 0 on the
     same table — exactly the (n-1) small-sample correction."""
-    m = _entry()
+    m = entry_mod
     a = " ".join(["tok"] * 60)
     b = " ".join(f"word{i}" for i in range(60))
     c = " ".join(["a the"] * 10)
@@ -491,11 +481,11 @@ def test_krippendorff_hand_fixture(spark):
     assert abs(r["kripp_alpha"] - (1.0 - 66.0 / 70.0)) < 1e-6
 
 
-def test_stl_strength_pure_trend(spark):
+def test_stl_strength_pure_trend(spark, entry_mod):
     """A steep linear series: the MA(7) trend absorbs nearly all
     variance (trend_strength ~ 1); the dow means of the detrended
     series are ~0 so seasonal strength is small."""
-    m = _entry()
+    m = entry_mod
     rows = [
         (i, f"2024-01-{i + 1:02d} 10:00:00", 1, "purchase",
          100.0 * (i + 1), "{}")
@@ -510,9 +500,9 @@ def test_stl_strength_pure_trend(spark):
     assert r["seasonal_strength"] is None
 
 
-def test_stl_strength_bounds_real_fixture(spark):
+def test_stl_strength_bounds_real_fixture(spark, entry_mod):
     """sf0.001: both strengths in [0,1]; 24 interior days per type."""
-    m = _entry()
+    m = entry_mod
     out = m.queries()["events_stl_strength"](
         spark, "/root/testdata/sf0.001"
     ).collect()
@@ -523,11 +513,11 @@ def test_stl_strength_bounds_real_fixture(spark):
         assert 0.0 <= r["seasonal_strength"] <= 1.0
 
 
-def test_tail_dependence_comonotone(spark):
+def test_tail_dependence_comonotone(spark, entry_mod):
     """x = y = 1..10 across days: the single day above the 90%
     order statistic is shared, so lambda_U = 1; no day sits strictly
     below the 10% order statistic, so lambda_L is NULL (0/0)."""
-    m = _entry()
+    m = entry_mod
     rows = []
     eid = 0
     for day in range(10):
@@ -549,11 +539,11 @@ def test_tail_dependence_comonotone(spark):
     assert r["lambda_lower"] is None
 
 
-def test_spectral_entropy_periodic_is_low(spark):
+def test_spectral_entropy_periodic_is_low(spark, entry_mod):
     """Alternating 15/5 series: one line dominates, so normalized
     spectral entropy is far below the white-noise ceiling and
     flatness is small."""
-    m = _entry()
+    m = entry_mod
     rows = []
     for i in range(8):
         v = 15.0 if i % 2 == 0 else 5.0
@@ -568,11 +558,11 @@ def test_spectral_entropy_periodic_is_low(spark):
     assert 0.0 < r["spectral_flatness"] < 0.5
 
 
-def test_bayes_shrinkage_matches_python_reference(spark):
+def test_bayes_shrinkage_matches_python_reference(spark, entry_mod):
     """Three users (1/1, 2/10, 3/10): the MoM beta-binomial prior and
     every shrunk rate match the closed form; the 1/1 user moves the
     most (the classic small-n pathology)."""
-    m = _entry()
+    m = entry_mod
     rows = []
     eid = 0
     specs = [(1, 1, 1), (2, 10, 2), (3, 10, 3)]  # (user, n, k)
@@ -604,11 +594,11 @@ def test_bayes_shrinkage_matches_python_reference(spark):
         assert (sh - raw) * (mu - raw) >= -1e-9
 
 
-def test_haar_wavelet_step_loads_coarsest_scale(spark):
+def test_haar_wavelet_step_loads_coarsest_scale(spark, entry_mod):
     """A clean 8-low/8-high step over 16 days: every fine-scale Haar
     detail is exactly zero and the level-4 (16-day) coefficient
     carries ALL the energy."""
-    m = _entry()
+    m = entry_mod
     rows = []
     for i in range(16):
         v = 0.0 if i < 8 else 10.0
@@ -627,11 +617,11 @@ def test_haar_wavelet_step_loads_coarsest_scale(spark):
         assert out[lvl]["energy_frac"] == 0.0
 
 
-def test_competing_risks_hand_fixture(spark):
+def test_competing_risks_hand_fixture(spark, entry_mod):
     """Four users (churn at 0, churn at 1, convert at 2, convert at
     5): the Aalen-Johansen CIFs match the hand risk-set walk, and
     CIF_convert + CIF_churn + at-risk = 1 at every horizon."""
-    m = _entry()
+    m = entry_mod
     rows = [
         (0, "2024-01-01 09:00:00", 1, "page_view", 1.0, "{}"),
         (1, "2024-01-03 09:00:00", 1, "purchase", 1.0, "{}"),
@@ -657,11 +647,11 @@ def test_competing_risks_hand_fixture(spark):
         assert abs(out[h]["still_at_risk"]) < 1e-9
 
 
-def test_gopher_ablation_sole_blocker_accounting(spark):
+def test_gopher_ablation_sole_blocker_accounting(spark, entry_mod):
     """A passes everything, B fails only the word-count range, C
     fails word count AND symbol ratio: sole-blocker counts and the
     keep-rate-without-rule arithmetic are fully determined."""
-    m = _entry()
+    m = entry_mod
     a = " ".join(f"word{i}" for i in range(60))
     b = " ".join(f"tok{i}" for i in range(10))
     c = " ".join(["##x"] * 10)
@@ -690,11 +680,11 @@ def test_gopher_ablation_sole_blocker_accounting(spark):
         assert r["n_keep_without"] >= r["n_sole_blocker"]
 
 
-def test_var_cvar_matches_python_reference(spark):
+def test_var_cvar_matches_python_reference(spark, entry_mod):
     """21 daily totals -> 20 day-over-day losses: the rank-19 order
     statistic, the tail mean, and the worst loss all match a direct
     transcription."""
-    m = _entry()
+    m = entry_mod
     vals = [10.0, 8.0, 12.0, 5.0, 15.0, 14.0, 9.0, 20.0, 6.0, 18.0,
             11.0, 13.0, 7.0, 16.0, 4.0, 19.0, 10.0, 17.0, 3.0, 21.0,
             12.0]
@@ -717,10 +707,10 @@ def test_var_cvar_matches_python_reference(spark):
     assert r["worst_dollars"] == max(losses) / 100.0
 
 
-def test_mmd_identical_groups_is_zero(spark):
+def test_mmd_identical_groups_is_zero(spark, entry_mod):
     """The even and odd labels hold the SAME four vectors: every
     moment matches, MMD^2 = 0."""
-    m = _entry()
+    m = entry_mod
     rows = []
     vid = 0
     for lab in (0, 1):
@@ -734,11 +724,11 @@ def test_mmd_identical_groups_is_zero(spark):
     assert r["mmd2_poly2"] == 0.0
 
 
-def test_mmd_mean_shift_detected_exactly(spark):
+def test_mmd_mean_shift_detected_exactly(spark, entry_mod):
     """Odd labels = even vectors shifted by +3 in dim 0: the mean
     term is exactly 2 c^2 = 18 and the total exceeds it (the moment
     matrices shift too)."""
-    m = _entry()
+    m = entry_mod
     rows = []
     vid = 0
     base = []
@@ -757,13 +747,13 @@ def test_mmd_mean_shift_detected_exactly(spark):
     assert r["mmd2_poly2"] > r["mmd2_mean_term"]
 
 
-def test_lmdi_is_exact_decomposition(spark):
+def test_lmdi_is_exact_decomposition(spark, entry_mod):
     """Two priorities with hand counts/revenues: volume + intensity
     effects reproduce the revenue delta with zero residual, and each
     effect matches the closed form."""
     import datetime
 
-    m = _entry()
+    m = entry_mod
     rows = []
     oid = 0
     # (priority, year, count, each order value)
@@ -808,10 +798,10 @@ def test_lmdi_is_exact_decomposition(spark):
     assert p2["residual"] == 0.0
 
 
-def test_retention_decay_hand_fixture(spark):
+def test_retention_decay_hand_fixture(spark, entry_mod):
     """Four users with hand-placed qualifying purchases: r1 = 3/4,
     r2 = 1/4, r3 = 1/3, slope = (ln r3 - ln r1)/2."""
-    m = _entry()
+    m = entry_mod
     rows = []
     eid = 0
     # (user, weeks with a qualifying >= $50 purchase)
@@ -835,11 +825,11 @@ def test_retention_decay_hand_fixture(spark):
     assert abs(r["half_life_weeks"] - math.log(0.5) / slope) < 1e-6
 
 
-def test_rayleigh_point_mass_and_uniform(spark):
+def test_rayleigh_point_mass_and_uniform(spark, entry_mod):
     """All purchases at exactly 06:00 -> R = 1, peak hour 6, z = n;
     four signups at 00/06/12/18 cancel exactly -> R rounds to 0 and
     p_uniform = 1."""
-    m = _entry()
+    m = entry_mod
     rows = []
     eid = 0
     for i in range(5):
@@ -868,11 +858,11 @@ def test_rayleigh_point_mass_and_uniform(spark):
     assert s["p_uniform"] == 1.0
 
 
-def test_permutation_entropy_extremes(spark):
+def test_permutation_entropy_extremes(spark, entry_mod):
     """A monotone series has ONE ordinal pattern (H = 0); a strict
     up-down alternation splits evenly between two patterns
     (H = ln 2)."""
-    m = _entry()
+    m = entry_mod
     rows = []
     eid = 0
     for i in range(8):
@@ -902,12 +892,12 @@ def test_permutation_entropy_extremes(spark):
     assert abs(alt["perm_entropy"] - math.log(2.0)) < 1e-6
 
 
-def test_negbin_fit_matches_python_reference(spark):
+def test_negbin_fit_matches_python_reference(spark, entry_mod):
     """Six daily counts with known moments: MoM r/p and the
     index-of-dispersion z match a direct transcription; a constant
     series goes NULL on the NB parameters (equidispersion is not a
     fit)."""
-    m = _entry()
+    m = entry_mod
     rows = []
     eid = 0
     counts = [1, 2, 9, 4, 4, 4]
@@ -946,11 +936,11 @@ def test_negbin_fit_matches_python_reference(spark):
     assert s["p_overdispersed"] > 0.5
 
 
-def test_isotropy_orthogonal_one_hots(spark):
+def test_isotropy_orthogonal_one_hots(spark, entry_mod):
     """Four one-hot vectors: pairwise cosines are exactly 0 and the
     diagonal participation ratio counts exactly the 4 active
     dimensions."""
-    m = _entry()
+    m = entry_mod
     rows = []
     for i in range(4):
         vec = [0.0] * 64
@@ -964,11 +954,11 @@ def test_isotropy_orthogonal_one_hots(spark):
     assert abs(r["pr_normalized"] - 4.0 / 64.0) < 1e-6
 
 
-def test_isotropy_collapsed_cone(spark):
+def test_isotropy_collapsed_cone(spark, entry_mod):
     """All vectors identical: average pairwise cosine is exactly 1
     (total anisotropy) and the zero-variance PR is NULL, not a
     fabricated number."""
-    m = _entry()
+    m = entry_mod
     vec = [float((j % 7) + 1) for j in range(64)]
     rows = [(i, vec, 0) for i in range(5)]
     tmp = _write_embeddings(spark, rows)

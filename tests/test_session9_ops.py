@@ -74,20 +74,14 @@ def test_theil_sen_excludes_equal_time_pairs(spark):
     assert out["n_pairs"] == 2  # (1,3) and (2,3); (1,2) excluded
 
 
-def test_zipf_fit_recovers_planted_slope(spark, sf_dir):
+def test_zipf_fit_recovers_planted_slope(spark, sf_dir, entry_mod):
     """q_docs_zipf_fit on the real fixture: a natural-language-ish
     corpus must fit with negative slope and meaningful r2; the
     regression must agree with numpy's polyfit on the same top-500
     (rank, freq) points."""
-    import importlib.util
-
     import numpy as np
 
-    spec = importlib.util.spec_from_file_location(
-        "entry_mod", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    m = entry_mod
     out = m.queries()["docs_zipf_fit"](spark, sf_dir).collect()[0].asDict()
     assert out["zipf_slope"] < 0
     assert 0.0 < out["r2"] <= 1.0
@@ -110,18 +104,12 @@ def test_zipf_fit_recovers_planted_slope(spark, sf_dir):
     assert abs(out["zipf_slope"] - slope) < 1e-4
 
 
-def test_cluster_stats_accounting(spark, sf_dir):
+def test_cluster_stats_accounting(spark, sf_dir, entry_mod):
     """q_dedup_cluster_stats must account for every document exactly
     once: sum(n_docs) = corpus size, sum(n_clusters) = docs surviving
     keep-one-per-cluster, and size-1 rows dominate a mostly-unique
     corpus."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "entry_mod", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    m = entry_mod
     rows = {
         r["cluster_size"]: r.asDict()
         for r in m.queries()["dedup_cluster_stats"](spark, sf_dir).collect()
@@ -137,17 +125,11 @@ def test_cluster_stats_accounting(spark, sf_dir):
     assert any(size > 1 for size in rows)
 
 
-def test_minhash_calibration_error_bound(spark, sf_dir):
+def test_minhash_calibration_error_bound(spark, sf_dir, entry_mod):
     """The 16-hash MinHash estimate over LSH candidates: every
     estimate within 0.35 of exact Jaccard (3.5 sigma at p(1-p)/16),
     and mean absolute error well inside one sigma (~0.125)."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "entry_mod", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    m = entry_mod
     rows = m.queries()["minhash_calibration"](spark, sf_dir).collect()
     assert rows
     errs = [r["abs_err"] for r in rows]
@@ -155,16 +137,10 @@ def test_minhash_calibration_error_bound(spark, sf_dir):
     assert sum(errs) / len(errs) <= 0.125
 
 
-def test_silhouette_separated_vs_mixed(spark):
+def test_silhouette_separated_vs_mixed(spark, entry_mod):
     """Inline silhouette logic sanity on a planted fixture: two
     tight, far-apart label clusters score near 1."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "entry_mod", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    m = entry_mod
     # plant: label 0 near (0,...), label 1 near (10,...)
     import tempfile
 
@@ -285,19 +261,13 @@ def test_fs_em_matches_independent_python_em(spark):
     assert got["agree_name"]["m_est"] > got["agree_name"]["u_est"]
 
 
-def test_heaps_law_fit_properties(spark, sf_dir):
+def test_heaps_law_fit_properties(spark, sf_dir, entry_mod):
     """Heaps beta in (0, 1) on the natural-ish fixture, and the
     regression agrees with numpy on the same 10 (tokens, vocab)
     points (re-derived independently here)."""
-    import importlib.util
-
     import numpy as np
 
-    spec = importlib.util.spec_from_file_location(
-        "entry_mod", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    m = entry_mod
     out = m.queries()["docs_heaps_law"](spark, sf_dir).collect()[0].asDict()
     assert out["n_points"] == 10
     # the tiny test fixture's closed vocabulary saturates within the

@@ -835,8 +835,8 @@ def test_catalog_phase_gates_delivery(spark, tmp_path):
     assert sorted(r["id"] for r in res.delivered.collect()) == ["3", "4"]
 
 
-def test_replays_on_two_threads_restore_the_shuffle_setting(spark, entry_mod, tmp_path):
-    """Two streaming replays through the entry module's replay
+def test_replays_on_two_threads_restore_the_shuffle_setting(spark, tmp_path):
+    """Two streaming replays through the registry's replay
     helper on two threads: both return their rows, and the
     session-wide shuffle-partition setting the helper pins to 4 ends
     at its previous value. Replay b enters the helper while a is
@@ -846,6 +846,8 @@ def test_replays_on_two_threads_restore_the_shuffle_setting(spark, entry_mod, tm
     import threading
 
     import pandas as pd
+
+    from vanus_spark.queries.tables import _replay
 
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
@@ -890,7 +892,7 @@ def test_replays_on_two_threads_restore_the_shuffle_setting(spark, entry_mod, tm
             )
             if tag == "b":
                 a_starting.wait(timeout=120)
-            entry_mod._replay(spark, Staged(writer, tag))
+            _replay(spark, Staged(writer, tag))
         except Exception as e:  # noqa: BLE001 - reported by the main thread
             errors.append(e)
 

@@ -15,8 +15,8 @@ float64 ``1.0`` is a mismatch here too.
 Usage: python tools/oracle_check.py [query_name ...]
        python tools/oracle_check.py --window   # first-50 driver window only
 (--window is exclusive — combining it with query names is an error)
-Env: ORACLE_ENTRY=/path/to/entry.py to check an alternate entry module
-(it runs on the engine of the checkout this script sits in).
+It checks the checkout it sits in: the entry, the query families and the
+engine. To check a copy of the repo, run the copy's own oracle_check.py.
 """
 
 from __future__ import annotations
@@ -40,7 +40,7 @@ TABLES = (
 
 
 def load_entry():
-    path = os.environ.get("ORACLE_ENTRY", os.path.join(ROOT, "__spark_entry__.py"))
+    path = os.path.join(ROOT, "__spark_entry__.py")
     spec = importlib.util.spec_from_file_location("__spark_entry__", path)
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

@@ -13,8 +13,10 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
-os.environ["PYTHONPATH"] = "/root/repo" + os.pathsep + os.environ.get("PYTHONPATH", "")
+# the checkout this script sits in
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -23,7 +25,7 @@ def main(only):
     from vanus_spark.session import get_spark
 
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", os.path.join(ROOT, "__spark_entry__.py")
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

@@ -24,8 +24,10 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
-os.environ.setdefault("PYTHONPATH", "/root/repo")
+# the checkout this script sits in
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ.setdefault("PYTHONPATH", ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -174,10 +176,11 @@ def main() -> None:
     import importlib.util
 
     from vanus_spark import get_spark
+    from vanus_spark.queries import dedup, graphs
 
     names = sys.argv[1:] or DEFAULT_QUERIES
     spec = importlib.util.spec_from_file_location(
-        "entry_probe", "/root/repo/__spark_entry__.py"
+        "entry_probe", os.path.join(ROOT, "__spark_entry__.py")
     )
     entry = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(entry)
@@ -191,8 +194,8 @@ def main() -> None:
         # isolate: per-session memos (ER chain, Jaccard pairs) would let
         # the second of a shared pair measure ~0; clear them so each
         # query pays its full chain here
-        entry._ER_TAGGED_MEMO.clear()
-        entry._JACCARD_05_MEMO.clear()
+        graphs._ER_TAGGED_MEMO.clear()
+        dedup._JACCARD_05_MEMO.clear()
         spark.catalog.clearCache()
         t0 = time.perf_counter()
         qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from vanus_spark.operators.parallelism import repartition_for_compute
+from vanus_spark.session import rdd_id
 
 # Default degenerate-bucket bound for LSH pair generation. Scale-safe
 # is the DEFAULT: a 100 TB corpus with heavy boilerplate puts millions
@@ -917,7 +918,8 @@ def _components_on_driver(edges: DataFrame, id_col: str) -> DataFrame:
     joins the smaller), so a node's root is its component. The result
     is built from an Arrow table — a local relation — because a frame
     from a Python list is a parallelized RDD whose rows a Python worker
-    must unpickle."""
+    must unpickle. The edge checkpoint is released once the result is
+    built."""
     import pyarrow as pa
 
     parent: dict[int, int] = {}
@@ -943,7 +945,12 @@ def _components_on_driver(edges: DataFrame, id_col: str) -> DataFrame:
             "component": pa.array([find(n) for n in nodes], pa.int64()),
         }
     )
-    return edges.sparkSession.createDataFrame(table)
+    spark = edges.sparkSession
+    out = spark.createDataFrame(table)
+    # the result is a local relation: nothing reads the edge checkpoint
+    # again, so its blocks go now rather than stay for the session
+    spark.sparkContext._jsc.sc().unpersistRDD(rdd_id(edges), False)
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -17,7 +17,8 @@ LLM-pipeline surface this engine adds):
   order-preserving reconstruction of the cleaned text.
 
 Everything is engine-portable (md5 hashing, plain string/array ops)
-so each operator has a DuckDB oracle twin in __spark_entry__.py.
+so each operator has a DuckDB oracle twin in the query family modules
+under vanus_spark/queries/.
 """
 
 from __future__ import annotations

@@ -4,7 +4,7 @@ document fingerprinting.
 All pure Column expressions — whole-stage codegen over the documents
 scan, embarrassingly parallel, zero shuffle (the scan's partitioning
 is the output partitioning). Every function is mirrored by an ANSI
-SQL oracle in __spark_entry__.py.
+SQL oracle in the query family modules under vanus_spark/queries/.
 """
 
 from __future__ import annotations

@@ -641,8 +641,8 @@ def kendall_tau_by_group(
 # Beasley-Springer-Moro inverse normal CDF. Central region |p-0.5| <=
 # 0.42 uses the BSM rational polynomial; the tails use Moro's
 # log-log Chebyshev fit (|err| < 3e-9 across (0,1)). The SAME
-# literals and nesting run in the DuckDB oracle (_INV_NORM_* in
-# __spark_entry__.py), so both engines produce bit-comparable
+# literals and nesting run in the DuckDB oracle (_inv_norm_sql in
+# vanus_spark/queries/stats.py), so both engines produce bit-comparable
 # quantiles from identical inputs.
 BSM_A = (2.50662823884, -18.61500062529, 41.39119773534, -25.44106049637)
 BSM_B = (-8.47351093090, 23.08336743743, -21.06224101826, 3.13082909833)

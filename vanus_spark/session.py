@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "vanus_spark", cpus: int | None = None) -> SparkSession:
@@ -34,6 +34,14 @@ def get_spark(app_name: str = "vanus_spark", cpus: int | None = None) -> SparkSe
     spark.sparkContext.setLogLevel("WARN")
     _quiet_bounded_window_warning(spark)
     return spark
+
+
+def rdd_id(checkpointed: DataFrame) -> int:
+    """The RDD behind a frame returned by localCheckpoint. Its blocks are
+    released by ``SparkContext.unpersistRDD(rdd_id, False)``, as the
+    context cleaner does for a garbage-collected RDD (``RDD.unpersist``
+    would also log that a local checkpoint cannot be recomputed)."""
+    return checkpointed._jdf.queryExecution().logical().rdd().id()
 
 
 def _quiet_bounded_window_warning(spark: SparkSession) -> None:

@@ -33,7 +33,6 @@ from vanus_spark.subscription import Subscription
 def fanout_apply(
     envelope_df: DataFrame,
     specs: dict[str, dict[str, Any]],
-    data_schema=None,
 ) -> DataFrame:
     """Apply N subscription specs to one envelope DataFrame; returns
     the union of their outputs tagged with ``sub_id``.
@@ -41,14 +40,16 @@ def fanout_apply(
     Every branch reads the SAME child plan — with the input cached (or
     a file scan, where Catalyst dedupes the scan via exchange/subquery
     reuse under AQE) the source is materialized once however many
-    subscriptions fan out of it.
+    subscriptions fan out of it. No branch declares a payload schema,
+    since under one the compiled plan drops every payload field the
+    schema does not declare (see ``Subscription.apply``).
     """
     if not specs:
         raise ValueError("fanout_apply: specs must be non-empty")
     branches = []
     for sub_id, spec in sorted(specs.items()):
         sub = Subscription.from_spec(spec)
-        out = sub.apply(envelope_df, data_schema=data_schema)
+        out = sub.apply(envelope_df)
         branches.append(out.withColumn("sub_id", F.lit(sub_id)))
     result = branches[0]
     for b in branches[1:]:

@@ -77,6 +77,7 @@ from vanus_spark.delivery import (
 )
 from vanus_spark.model import ATTR_DELIVERY_TIME, ENVELOPE_SCHEMA
 from vanus_spark.schema_infer import infer_sample_schema, round_trips
+from vanus_spark.session import rdd_id
 from vanus_spark.subscription import Subscription
 from vanus_spark.transformer import interpret_dataframe
 
@@ -119,11 +120,6 @@ _SAMPLE_ROWS = 1000
 # cores (the interpreter alone, one partition vs widened): 2,000 rows
 # 0.31 vs 0.45 s, 5,000 rows 0.48 vs 0.50 s, 20,000 rows 1.02 vs 0.66 s.
 _WIDEN_ROWS = 5000
-
-
-def _rdd_id(checkpointed: DataFrame) -> int:
-    """The RDD behind a frame returned by localCheckpoint."""
-    return checkpointed._jdf.queryExecution().logical().rdd().id()
 
 
 _STATUS_SCHEMA_SUFFIX = ", status int, error string"
@@ -493,12 +489,12 @@ class DeliveryLoop:
         )
         entries = [
             (
-                [_rdd_id(df) for df in passes],
+                [rdd_id(df) for df in passes],
                 [weakref.ref(df) for df in (self.pending, res.delivered, new_dead, retry)],
             )
         ]
         if not self.state_dir and counts["dead"]:
-            entries.append(([_rdd_id(self.dead)], [weakref.ref(self.dead)]))
+            entries.append(([rdd_id(self.dead)], [weakref.ref(self.dead)]))
         # release what no frame reads any more: the state now reads this
         # tick's passes only, and a frame handed out before (an earlier
         # pending or SinkResult, a replaced dead state) keeps its passes
@@ -513,13 +509,11 @@ class DeliveryLoop:
         return res
 
     def _unpersist(self, entries: list[tuple[list[int], list[weakref.ref]]]) -> None:
-        """Drop the blocks of local checkpoints, as the context cleaner
-        does for a garbage-collected RDD (RDD.unpersist would also log
-        that a local checkpoint cannot be recomputed)."""
+        """Drop the blocks of local checkpoints (see ``session.rdd_id``)."""
         sc = self.spark.sparkContext._jsc.sc()
         for ids, _ in entries:
-            for rdd_id in ids:
-                sc.unpersistRDD(rdd_id, False)
+            for rid in ids:
+                sc.unpersistRDD(rid, False)
 
     def close(self) -> None:
         """Release the loop's local checkpoints: the last tick's passes

@@ -128,9 +128,14 @@ class Subscription:
         the static subset, it compiles to a pure Column plan
         (plans/compiler.py compile_transformer) — whole-stage codegen,
         no Python at eval time; otherwise the Arrow-batched
-        interpreter runs. Both paths are exact (the equivalence is
-        test-gated). The filter and the compiled plan are built once
-        and reused by later calls."""
+        interpreter runs. Both paths are exact for a payload that
+        ``data_schema`` describes (the equivalence is test-gated). The
+        compiled plan reads the payload through ``data_schema``, so a
+        field the schema does not declare is dropped from its output
+        (``{"x": "kept?"}`` under a schema without ``x`` loses ``x``);
+        this is why ``DeliveryLoop`` sends every payload that fails
+        ``schema_infer.round_trips`` to the interpreter. The filter and
+        the compiled plan are built once and reused by later calls."""
         out = envelope_df.where(self.filter_column())
         compiled = self.compiled_transformer(data_schema)
         if compiled is not None:
