@@ -5,11 +5,14 @@ records showed) must produce ZERO flags no matter how large, while a
 single query that moved against its neighbors is flagged."""
 
 import importlib.util
+import os
+
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
 
 def _triage():
     spec = importlib.util.spec_from_file_location(
-        "bench_triage_under_test", "/root/repo/tools/bench_triage.py"
+        "bench_triage_under_test", os.path.join(TOOLS, "bench_triage.py")
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

@@ -11,6 +11,10 @@ it is handed (one file per call):
   number of persisted RDDs however many ticks have run, none after
   ``close``.
 
+Pending takes as many partitions as its rows fill Arrow batches, so a
+steady sink pass runs one task per batch partition and one more; the
+loop's empty frames are local relations, which run no task.
+
 On the compiled tier a tick after the first runs at most 3 jobs and
 600 py4j round trips, and payloads that drift from the sampled schema
 reach the interpreter with the interpreter's result.
@@ -282,6 +286,15 @@ class _Budget:
         jobs = len(self.sc.statusTracker().getJobIdsForGroup(group))
         return out, jobs, trips
 
+    def stage_tasks(self, group: str) -> list[list[int]]:
+        """The task count of every stage of each of the group's jobs,
+        in job order."""
+        tracker = self.sc.statusTracker()
+        return [
+            [tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds]
+            for j in sorted(tracker.getJobIdsForGroup(group))
+        ]
+
     def close(self):
         self.client.send_command = self._send
 
@@ -495,3 +508,94 @@ def test_close_releases_the_loop_checkpoints(spark):
     assert held
     worker.unregister("a")
     assert not persisted() & held
+
+
+# ----- what a tick's passes run over ----------------------------------------
+
+
+def _plans_an_rdd(df) -> bool:
+    """Whether the frame reads a parallelized Python RDD (a LogicalRDD),
+    whose every read runs Python tasks."""
+    return "LogicalRDD" in df._jdf.queryExecution().analyzed().toString()
+
+
+def test_empty_state_is_a_local_relation(spark, tmp_path):
+    """A fresh loop's pending and dead, and the delivered and dead
+    frames of a tick its stopped subscription gates, read no RDD."""
+    from vanus_spark.catalog import Catalog
+
+    cat = Catalog(str(tmp_path / "cat.json"))
+    ns = cat.create_namespace("default")
+    eb = cat.create_eventbus(ns["id"], "demo")
+    sub_rec = cat.create_subscription(ns["id"], eb["id"], {})
+    loop = DeliveryLoop(
+        spark, Subscription.from_spec({}), StatusSink({}), catalog=cat, catalog_sub_id=sub_rec["id"]
+    )
+    assert not _plans_an_rdd(loop.pending) and not _plans_an_rdd(loop.dead)
+    assert loop.pending.count() == loop.dead.count() == 0
+    cat.disable_subscription(sub_rec["id"])
+    res = loop.process_batch(_envelope(spark, [_row(1)]), T0)
+    assert res.counts["pulled"] == 1 and res.counts["delivered"] == 0
+    assert not _plans_an_rdd(res.delivered) and not _plans_an_rdd(res.dead)
+    assert res.delivered.count() == res.dead.count() == 0
+
+
+def _parked(first: int, n: int):
+    return [_conforming(first + i, attrs=FAR_FUTURE) for i in range(n)]
+
+
+def test_pending_partitions_follow_its_rows(spark):
+    """Pending takes one partition per Arrow batch its rows fill, at
+    least one and at most the session's default parallelism."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    width = spark.sparkContext.defaultParallelism
+    loop = DeliveryLoop(spark, Subscription.from_spec(COMPILED_SPEC), StatusSink({}))
+    t = iter(T0 + dt.timedelta(seconds=2 * k) for k in range(10))
+
+    def parts() -> int:
+        return loop.pending.rdd.getNumPartitions()
+
+    loop.process_batch(_envelope(spark, [_conforming(1)]), next(t))
+    assert parts() == 1  # nothing carried
+    loop.process_batch(_envelope(spark, [_conforming(2), *_parked(100, 3)]), next(t))
+    assert parts() == 1
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        # 3 + 4 carried rows: ceil(7 / 2)
+        loop.process_batch(_envelope(spark, _parked(200, 4)), next(t))
+        assert parts() == 4
+        # more rows than width batches fill
+        res = loop.process_batch(_envelope(spark, _parked(300, 2 * width)), next(t))
+        assert res.counts["pending"] == 7 + 2 * width
+        assert parts() == width
+    finally:
+        spark.conf.set(key, old)
+    assert loop.pending.count() == 7 + 2 * width
+    loop.close()
+
+
+def test_sink_pass_runs_a_task_per_batch_partition_and_one(spark):
+    """In steady state the carried pending adds one partition to the
+    batch's, so the sink pass starts one Python task per batch
+    partition and one more, however many ticks have parked rows."""
+    loop = DeliveryLoop(spark, Subscription.from_spec(COMPILED_SPEC), StatusSink({}))
+    budget = _Budget(spark)
+    ticks = []
+    try:
+        for k in range(1, 5):
+            rows = [_conforming(k * 100 + i) for i in range(20)] + _parked(k * 100 + 50, 3)
+            batch = _envelope(spark, rows).coalesce(2)
+            t = T0 + dt.timedelta(seconds=2 * k)
+            group = f"sink-tasks-{uuid.uuid4().hex}"
+            res, jobs, _ = budget.run(group, lambda: loop.process_batch(batch, t))
+            ticks.append((res, jobs, budget.stage_tasks(group), batch.rdd.getNumPartitions()))
+    finally:
+        budget.close()
+    for res, jobs, tasks, fresh in ticks[1:]:
+        assert res.counts["delivered"] == 20
+        # the work and sink passes, nothing dead
+        assert jobs == 2
+        assert max(n for job in tasks for n in job) <= fresh + 1, (tasks, fresh)
+    assert loop.pending.count() == 12
+    loop.close()

@@ -7,12 +7,15 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import os
 import sys
+
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
 
 def _vsctl(capsys, *argv) -> list[dict]:
     spec = importlib.util.spec_from_file_location(
-        "vsctl_under_test", "/root/repo/tools/vsctl.py"
+        "vsctl_under_test", os.path.join(TOOLS, "vsctl.py")
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

@@ -27,19 +27,22 @@ SCALING.md note line prompting the solo re-run that adjudicates it.
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import subprocess
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def load_record(path: str, git_ref: str | None = None) -> dict[str, float]:
     if git_ref:
         text = subprocess.run(
-            ["git", "show", f"{git_ref}:{path}"],
+            ["git", "show", f"{git_ref}:{os.path.relpath(os.path.abspath(path), ROOT)}"],
             capture_output=True,
             text=True,
             check=True,
-            cwd="/root/repo",
+            cwd=ROOT,
         ).stdout
     else:
         text = open(path).read()

@@ -11,8 +11,9 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-os.environ.setdefault("PYTHONPATH", "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -22,8 +22,9 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
-os.environ.setdefault("PYTHONPATH", "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 from pyspark.sql import functions as F  # noqa: E402
 

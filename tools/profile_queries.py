@@ -22,8 +22,9 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
-os.environ.setdefault("PYTHONPATH", "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 
 def _read_lines(path: str) -> list[str]:
@@ -50,7 +51,7 @@ def main() -> None:
         i = args.index("--top")
         n = int(args[i + 1])
         args = args[:i] + args[i + 2 :]
-        rec = json.load(open("/root/repo/BENCH_FULL.json"))["queries"]
+        rec = json.load(open(os.path.join(ROOT, "BENCH_FULL.json")))["queries"]
         names += [k for k, _ in sorted(rec.items(), key=lambda kv: -kv[1])[:n]]
     names += args
 

@@ -23,10 +23,11 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-os.environ.setdefault("PYTHONPATH", "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 
-PLANS_DIR = os.environ.get("SPARK_GRAFT_PLANS_DIR", "/root/repo/plans/r11")
+PLANS_DIR = os.environ.get("SPARK_GRAFT_PLANS_DIR", os.path.join(ROOT, "plans", "r11"))
 
 
 def main() -> None:
@@ -41,7 +42,7 @@ def main() -> None:
         i = args.index("--top")
         n = int(args[i + 1])
         args = args[:i] + args[i + 2 :]
-        rec = json.load(open("/root/repo/BENCH_FULL.json"))["queries"]
+        rec = json.load(open(os.path.join(ROOT, "BENCH_FULL.json")))["queries"]
         names += [k for k, _ in sorted(rec.items(), key=lambda kv: -kv[1])[:n]]
     names += args
 

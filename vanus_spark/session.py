@@ -44,6 +44,19 @@ def rdd_id(checkpointed: DataFrame) -> int:
     return checkpointed._jdf.queryExecution().logical().rdd().id()
 
 
+def local_frame(spark: SparkSession, rows: list[dict], schema: str) -> DataFrame:
+    """``rows`` under the DDL ``schema`` as a local relation, empty
+    included. Built from an Arrow table: a frame from a Python list is
+    a parallelized RDD, and every read of it runs Python tasks to
+    unpickle its rows (0.3-0.4 s even for none, on 4 local cores)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    arrow_schema = to_arrow_schema(_parse_datatype_string(schema))
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=arrow_schema))
+
+
 def _quiet_bounded_window_warning(spark: SparkSession) -> None:
     """Silence WindowExec's "No Partition Defined" warning.
 

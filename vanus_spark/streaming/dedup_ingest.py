@@ -32,6 +32,7 @@ from vanus_spark.llm.dedup import (
     normalize_text,
     shingles_df,
 )
+from vanus_spark.session import local_frame
 
 
 _METRICS_SCHEMA = (
@@ -508,7 +509,7 @@ class DedupIngestLoop:
         """Per-batch ingest metrics as a DataFrame (the corpus-growth
         observability surface: accepted/rejected counts by reason,
         one row per processed micro-batch)."""
-        return self.spark.createDataFrame(self.metrics, _METRICS_SCHEMA)
+        return local_frame(self.spark, self.metrics, _METRICS_SCHEMA)
 
     # ----- Structured Streaming wiring -------------------------------------
 

@@ -29,7 +29,9 @@ timer eventbuses; each micro-batch is one pass per side effect:
   4. route: ok / retry / dead split the sink pass, transform errors
      go to the DLQ; the new pending (parked ∪ retries with their
      backoff ∪ capped overflow) is a lazy view over the passes,
-     coalesced to the session's default parallelism
+     coalesced to the partitions its rows need: one per Arrow batch
+     of ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, at most
+     the session's default parallelism
   5. counters come from Observations on the passes (no count job);
      the previous tick's passes are released
 
@@ -53,7 +55,11 @@ A loop whose transformer does not compile, or that has no schema yet,
 runs the interpreter behind ``repartition_for_compute``, whose
 round-robin exchange AQE runs as one more job. A max_uack / rate_limit
 cap adds the TakeOrdered exchange and the overflow's anti-join.
-Delivery parallelism = the work pass's partitions. For exactly-once
+Each pass runs one task per partition of the work pass: the batch's
+own partitions plus the few the carried pending needs, so a sink pass
+starts no Python worker for an empty carried partition. The loop's
+empty frames (its initial state, a gated tick's results) are local
+relations, which run no task at all. For exactly-once
 bookkeeping the delivered/dead tables would be Delta/Iceberg appends
 keyed by (eventlog, offset) — plain parquet appends here since those
 jars aren't in the test image.
@@ -77,7 +83,7 @@ from vanus_spark.delivery import (
 )
 from vanus_spark.model import ATTR_DELIVERY_TIME, ENVELOPE_SCHEMA
 from vanus_spark.schema_infer import infer_sample_schema, round_trips
-from vanus_spark.session import rdd_id
+from vanus_spark.session import local_frame, rdd_id
 from vanus_spark.subscription import Subscription
 from vanus_spark.transformer import interpret_dataframe
 
@@ -187,7 +193,9 @@ class DeliveryLoop:
         self.catalog = catalog
         self.catalog_sub_id = catalog_sub_id
         self._epoch = 0
-        self.empty_envelope = spark.createDataFrame(
+        # local relations: reading them runs no task
+        self.empty_envelope = local_frame(
+            spark,
             [],
             "id string, source string, specversion string, type string, "
             "time timestamp, datacontenttype string, dataschema string, "
@@ -195,7 +203,7 @@ class DeliveryLoop:
         )
         self.pending: DataFrame = self.empty_envelope.withColumn(
             "due_ts", F.lit(None).cast("timestamp")
-        ).limit(0)
+        )
         self.dead: DataFrame = self.empty_envelope
         # this loop's local checkpoints, each as (RDD ids, weak references
         # to the frames handed out that read them): a tick's passes with
@@ -461,9 +469,6 @@ class DeliveryLoop:
                 .withColumn("due_ts", now)
             )
             pending = pending.unionByName(throttled)
-        # a fixed width: the union would otherwise add the batch's
-        # partitions to the carried ones on every tick
-        self.pending = pending.coalesce(width)
 
         o = outcome.get
         counts = {
@@ -474,6 +479,11 @@ class DeliveryLoop:
             # parked + throttled overflow + new retries
             "pending": n[_PARK] + n[_SEND] - o["sent"] + o["retried"],
         }
+        # one partition per Arrow batch of its rows, at most the
+        # session's cores: each carried partition is one more Python task
+        # in the next sink pass, and the union would otherwise add the
+        # batch's partitions to the carried ones on every tick
+        self.pending = pending.coalesce(self._pending_width(counts["pending"], width))
         if self.state_dir:
             self._persist_state(new_dead)
         elif counts["dead"]:
@@ -507,6 +517,15 @@ class DeliveryLoop:
         self._held = keep + entries
         self._unpersist(stale)
         return res
+
+    def _pending_width(self, rows: int, width: int) -> int:
+        """Partitions for ``rows`` carried rows: one per
+        ``spark.sql.execution.arrow.maxRecordsPerBatch`` of them (one
+        when that is unbounded), at least 1 and at most ``width``."""
+        batch = int(self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+        if batch <= 0:
+            return 1
+        return max(1, min(width, -(-rows // batch)))
 
     def _unpersist(self, entries: list[tuple[list[int], list[weakref.ref]]]) -> None:
         """Drop the blocks of local checkpoints (see ``session.rdd_id``)."""
@@ -552,7 +571,7 @@ class DeliveryLoop:
         newly-dead / parked per processed micro-batch — the
         observability surface of the reference's delivery counters)."""
         schema = "epoch long, delivered long, new_dead long, pending long"
-        return self.spark.createDataFrame(self.metrics, schema)
+        return local_frame(self.spark, self.metrics, schema)
 
     _HEARTBEAT_ID = "__heartbeat__"
 
