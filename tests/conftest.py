@@ -5,6 +5,10 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+# A bounded driver heap: the suite's live old generation is about 1.8 GB,
+# and get_spark's 48g default lets the heap grow past a 16 GB host's
+# memory instead of collecting.
+os.environ.setdefault("SPARK_DRIVER_MEM", "6g")
 # Executor python workers must be able to unpickle classes defined in
 # test modules (e.g. sink doubles) — put tests/ on their path.
 _here = os.path.dirname(os.path.abspath(__file__))

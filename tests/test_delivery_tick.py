@@ -599,3 +599,41 @@ def test_sink_pass_runs_a_task_per_batch_partition_and_one(spark):
         assert max(n for job in tasks for n in job) <= fresh + 1, (tasks, fresh)
     assert loop.pending.count() == 12
     loop.close()
+
+
+def test_durable_state_is_read_back_with_its_schema(spark, tmp_path):
+    """A durable tick reads its pending and dead state back with the
+    schema they were written with, so persisting runs the two writes
+    and no schema-inference job. The read-back schemas equal the
+    inferred ones, and a new loop over the directory restores both."""
+    state = str(tmp_path / "state")
+    loop = DeliveryLoop(
+        spark, Subscription.from_spec(COMPILED_SPEC), StatusSink({"101": 404}), state_dir=state
+    )
+    budget = _Budget(spark)
+    persist, jobs = loop._persist_state, []
+
+    def counted(new_dead):
+        jobs.append(budget.run(f"persist-{uuid.uuid4().hex}", lambda: persist(new_dead))[1])
+
+    loop._persist_state = counted
+    try:
+        for k in (1, 2):
+            rows = [_conforming(k * 100 + i) for i in range(5)] + _parked(k * 100 + 50, 2)
+            loop.process_batch(_envelope(spark, rows), T0 + dt.timedelta(seconds=2 * k))
+    finally:
+        budget.close()
+    # the pending write and the dead append; each inferred read-back
+    # would be one more job
+    assert jobs == [2, 2]
+    assert loop.pending.schema == spark.read.parquet(loop._pending_dir(loop._epoch)).schema
+    assert loop.dead.schema == spark.read.parquet(f"{state}/dead").schema
+
+    restored = DeliveryLoop(
+        spark, Subscription.from_spec(COMPILED_SPEC), StatusSink({}), state_dir=state
+    )
+    rows = lambda df: sorted(map(repr, df.collect()))  # noqa: E731
+    assert rows(restored.pending) == rows(loop.pending)
+    assert len(rows(restored.pending)) == 4
+    assert rows(restored.dead) == rows(loop.dead)
+    assert [r.id for r in restored.dead.collect()] == ["101"]

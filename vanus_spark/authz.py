@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from vanus_spark.session import local_frame
+
 RESOURCE_KINDS = ("cluster", "namespace", "eventbus", "subscription")
 ROLES = ("clusterAdmin", "admin", "edit", "view", "read", "write")
 
@@ -149,13 +151,11 @@ class Authorizer:
 
 def role_actions_df(spark) -> DataFrame:
     rows = [
-        (kind, role, action)
+        {"resource_kind": kind, "role": role, "action": action}
         for (kind, role), actions in sorted(ROLE_ACTIONS.items())
         for action in sorted(actions)
     ]
-    return spark.createDataFrame(
-        rows, "resource_kind string, role string, action string"
-    )
+    return local_frame(spark, rows, "resource_kind string, role string, action string")
 
 
 def authorize_requests(

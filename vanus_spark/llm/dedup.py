@@ -323,9 +323,10 @@ def minhash_lsh_pairs(
     # The bucket table fans out below (self-join left+right, bucket-size
     # aggregate, star join) and Catalyst does NOT share repeated plan
     # subtrees — without materialization every reference recomputes the
-    # full shingle->signature chain, which contains a SHUFFLE (the
-    # explode+groupBy minhash aggregation), so each recompute repeats a
-    # full exchange. One lazy localCheckpoint makes the (id, band,
+    # full shingle->signature chain: shuffle-free apart from the
+    # widening exchange of repartition_for_compute, but it re-shingles
+    # and re-hashes every doc each time (and repeats that exchange when
+    # the scan is narrow). One lazy localCheckpoint makes the (id, band,
     # band_key) rows computed exactly once — measured ~5x on the pair
     # query at sf0.1. (Contrast: narrow shuffle-free chains like
     # simhash fingerprints are CHEAPER to recompute than to checkpoint,

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from vanus_spark.llm.dedup import md5_long, normalize_text
+from vanus_spark.session import local_frame
 
 
 def corpus_diff(
@@ -170,9 +171,9 @@ def schema_drift(spark, old_schema, new_schema) -> DataFrame:
             status = "type_changed"
         else:
             status = "unchanged"
-        rows.append((path, status, o, n))
-    return spark.createDataFrame(
-        rows, "field string, status string, old_type string, new_type string"
+        rows.append({"field": path, "status": status, "old_type": o, "new_type": n})
+    return local_frame(
+        spark, rows, "field string, status string, old_type string, new_type string"
     )
 
 

@@ -95,30 +95,30 @@ def attribute_column(key: str) -> F.Column:
     return F.col("attributes").getItem(key)
 
 
+# The envelope columns of events_to_cloudevents after ``source``, which
+# is a parameter and so goes in as a literal Column, not SQL text.
+_ENVELOPE_REST = (
+    "'1.0' AS specversion",
+    "event_type AS type",
+    "ts AS time",
+    "'application/json' AS datacontenttype",
+    "CAST(NULL AS STRING) AS dataschema",
+    "CAST(NULL AS STRING) AS subject",
+    "map('partitionkey', CAST(user_id AS STRING)) AS attributes",
+    "to_json(struct(user_id, value, from_json(props, 'k INT') AS props)) AS data",
+)
+
+
 def events_to_cloudevents(events: DataFrame, source: str = "/test/source") -> DataFrame:
     """Map the driver's ``events`` table into the CloudEvents envelope.
 
     This is the canonical fixture mapping (FIXTURES.md §1): the raw
     columns become the JSON payload; ``user_id`` doubles as a partition
-    key extension attribute.
+    key extension attribute. One projection of SQL expressions: each
+    Column built through the Column API costs its own py4j trips.
     """
     return events.select(
-        F.col("event_id").cast("string").alias("id"),
+        F.expr("CAST(event_id AS STRING) AS id"),
         F.lit(source).alias("source"),
-        F.lit("1.0").alias("specversion"),
-        F.col("event_type").alias("type"),
-        F.col("ts").alias("time"),
-        F.lit("application/json").alias("datacontenttype"),
-        F.lit(None).cast("string").alias("dataschema"),
-        F.lit(None).cast("string").alias("subject"),
-        F.create_map(
-            F.lit("partitionkey"), F.col("user_id").cast("string")
-        ).alias("attributes"),
-        F.to_json(
-            F.struct(
-                F.col("user_id"),
-                F.col("value"),
-                F.from_json("props", "k INT").alias("props"),
-            )
-        ).alias("data"),
+        *(F.expr(e) for e in _ENVELOPE_REST),
     )

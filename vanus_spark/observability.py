@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from vanus_spark.session import local_frame
+
 _NAMESPACE = "vanus"
 _TRIGGER_SUBSYSTEM = "trigger_worker"
 
@@ -80,16 +82,14 @@ def gateway_counter_rows(
 def metrics_view(spark: SparkSession, rows: list[dict]) -> DataFrame:
     """The queryable export surface: one row per (metric, labels)."""
     flat = [
-        (
-            r["metric"],
-            dict(sorted(r["labels"].items())),
-            int(r["value"]),
-        )
+        {
+            "metric": r["metric"],
+            "labels": dict(sorted(r["labels"].items())),
+            "value": int(r["value"]),
+        }
         for r in rows
     ]
-    return spark.createDataFrame(
-        flat, "metric string, labels map<string,string>, value long"
-    )
+    return local_frame(spark, flat, "metric string, labels map<string,string>, value long")
 
 
 def render_exposition(rows: list[dict]) -> str:

@@ -30,6 +30,8 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from vanus_spark.session import local_frame
+
 
 def fs_weights(fields: dict[str, tuple[float, float]]) -> dict[str, tuple[float, float]]:
     """(agree_weight, disagree_weight) per field from (m, u) priors."""
@@ -132,10 +134,17 @@ def fs_em_estimate(
             u[k] = float(row[f"_va_{k}"]) / (n - sw)
         lam = sw / n
     out = [
-        (k, round(m[k], 6), round(u[k], 6), round(lam, 6), n_pairs)
+        {
+            "field": k,
+            "m_est": round(m[k], 6),
+            "u_est": round(u[k], 6),
+            "lambda_est": round(lam, 6),
+            "n_pairs": n_pairs,
+        }
         for k in agree_cols
     ]
-    spark = pairs.sparkSession
-    return spark.createDataFrame(
-        out, "field string, m_est double, u_est double, lambda_est double, n_pairs long"
+    return local_frame(
+        pairs.sparkSession,
+        out,
+        "field string, m_est double, u_est double, lambda_est double, n_pairs long",
     )

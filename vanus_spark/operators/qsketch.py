@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from vanus_spark.session import local_frame
+
 
 def histogram_sketch(
     df: DataFrame,
@@ -70,7 +72,7 @@ def sketch_quantiles(
     cum = sketch.withColumn("cum", F.sum("cnt").over(w)).withColumn(
         "n", F.sum("cnt").over(Window.partitionBy(*group_cols))
     )
-    qdf = spark.createDataFrame([(float(q),) for q in qs], "q double")
+    qdf = local_frame(spark, [{"q": float(q)} for q in qs], "q double")
     hit = cum.join(F.broadcast(qdf)).where(
         F.col("cum") >= F.ceil(F.col("q") * F.col("n"))
     )

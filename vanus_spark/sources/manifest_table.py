@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from vanus_spark import commitlog
 from vanus_spark.commitlog import ConcurrentWriterError
+from vanus_spark.session import local_frame
 
 
 def _buckets(entries: list[str]) -> dict[int, str]:
@@ -151,8 +152,10 @@ class ManifestTable:
         """Point lookup: hash-route the keys to their buckets and read
         ONLY those directories — the O(|keys| buckets) path for "fetch
         these documents by id" instead of a table scan."""
-        kdf = self.spark.createDataFrame(
-            [(k,) for k in keys], f"{self.key_col} {'string' if isinstance(keys[0], str) else 'long'}"
+        kdf = local_frame(
+            self.spark,
+            [{self.key_col: k} for k in keys],
+            f"{self.key_col} {'string' if isinstance(keys[0], str) else 'long'}",
         )
         buckets = [
             r["_b"]
@@ -212,7 +215,7 @@ class ManifestTable:
         pre, post = _side(m1), _side(m2)
         schema = f"{self.key_col} long, _change_type string, row_json string"
         if pre is None and post is None:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         if pre is not None and post is not None:
             cols = sorted(set(pre.columns) & set(post.columns))
         else:

@@ -251,12 +251,16 @@ class DeliveryLoop:
             self.dead = self.spark.read.parquet(dead_dir)
 
     def _persist_state(self, new_dead: DataFrame) -> None:
+        """Write the state and read it back with the schema it was
+        written with (inferring it would be a footer-reading job per
+        read)."""
         self._epoch += 1
         path = self._pending_dir(self._epoch)
+        dead_dir = f"{self.state_dir}/dead"
         self.pending.write.mode("overwrite").parquet(path)
-        self.pending = self.spark.read.parquet(path)
-        new_dead.write.mode("append").parquet(f"{self.state_dir}/dead")
-        self.dead = self.spark.read.parquet(f"{self.state_dir}/dead")
+        self.pending = self.spark.read.schema(self.pending.schema).parquet(path)
+        new_dead.write.mode("append").parquet(dead_dir)
+        self.dead = self.spark.read.schema(new_dead.schema).parquet(dead_dir)
         write_atomic(f"{self.state_dir}/EPOCH", str(self._epoch))
 
     def _data_schema(self, batch_df: DataFrame):
