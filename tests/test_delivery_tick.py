@@ -31,8 +31,11 @@ import uuid
 from collections import Counter
 
 import pytest
+from pyspark.sql import DataFrameWriter
 
 from tests.test_streaming import T0, _envelope, _row
+from vanus_spark import commitlog
+from vanus_spark.commitlog import ConcurrentWriterError
 from vanus_spark.streaming import runner
 from vanus_spark.streaming.runner import DeliveryLoop
 from vanus_spark.subscription import Subscription
@@ -601,39 +604,226 @@ def test_sink_pass_runs_a_task_per_batch_partition_and_one(spark):
     loop.close()
 
 
+def _sorted_rows(df) -> list[str]:
+    return sorted(map(repr, df.collect()))
+
+
 def test_durable_state_is_read_back_with_its_schema(spark, tmp_path):
     """A durable tick reads its pending and dead state back with the
-    schema they were written with, so persisting runs the two writes
-    and no schema-inference job. The read-back schemas equal the
-    inferred ones, and a new loop over the directory restores both."""
+    loop's state schemas, so persisting runs only the writes — one per
+    state with rows — and no schema-inference job. The read-back
+    schemas equal the inferred ones, and a new loop over the directory
+    restores both."""
     state = str(tmp_path / "state")
     loop = DeliveryLoop(
         spark, Subscription.from_spec(COMPILED_SPEC), StatusSink({"101": 404}), state_dir=state
     )
     budget = _Budget(spark)
-    persist, jobs = loop._persist_state, []
+    persist, jobs = loop._commit_state, []
 
-    def counted(new_dead):
-        jobs.append(budget.run(f"persist-{uuid.uuid4().hex}", lambda: persist(new_dead))[1])
+    def counted(*args):
+        jobs.append(budget.run(f"persist-{uuid.uuid4().hex}", lambda: persist(*args))[1])
 
-    loop._persist_state = counted
+    loop._commit_state = counted
     try:
         for k in (1, 2):
             rows = [_conforming(k * 100 + i) for i in range(5)] + _parked(k * 100 + 50, 2)
             loop.process_batch(_envelope(spark, rows), T0 + dt.timedelta(seconds=2 * k))
     finally:
         budget.close()
-    # the pending write and the dead append; each inferred read-back
-    # would be one more job
-    assert jobs == [2, 2]
-    assert loop.pending.schema == spark.read.parquet(loop._pending_dir(loop._epoch)).schema
-    assert loop.dead.schema == spark.read.parquet(f"{state}/dead").schema
+    # tick 1 writes pending and dead, tick 2 (nothing dead) only
+    # pending; each inferred read-back would be one more job
+    assert jobs == [2, 1]
+    entries = commitlog.read(state).entries
+    (pending_dir,) = [f"{state}/data/{e}" for e in entries if e.startswith("p")]
+    (dead_dir,) = [f"{state}/data/{e}" for e in entries if e.startswith("d")]
+    assert loop.pending.schema == spark.read.parquet(pending_dir).schema
+    assert loop.dead.schema == spark.read.parquet(dead_dir).schema
 
     restored = DeliveryLoop(
         spark, Subscription.from_spec(COMPILED_SPEC), StatusSink({}), state_dir=state
     )
-    rows = lambda df: sorted(map(repr, df.collect()))  # noqa: E731
-    assert rows(restored.pending) == rows(loop.pending)
-    assert len(rows(restored.pending)) == 4
-    assert rows(restored.dead) == rows(loop.dead)
+    assert _sorted_rows(restored.pending) == _sorted_rows(loop.pending)
+    assert len(_sorted_rows(restored.pending)) == 4
+    assert _sorted_rows(restored.dead) == _sorted_rows(loop.dead)
     assert [r.id for r in restored.dead.collect()] == ["101"]
+
+
+def test_quiet_durable_tick_runs_two_jobs(spark, tmp_path):
+    """A durable tick that parks nothing and dead-letters nothing
+    writes nothing: it runs the work and sink passes, as an in-memory
+    tick does, and still commits."""
+    state = str(tmp_path / "state")
+    loop = DeliveryLoop(
+        spark, Subscription.from_spec(COMPILED_SPEC), StatusSink({}), state_dir=state
+    )
+    budget = _Budget(spark)
+    jobs = []
+    try:
+        for k in range(1, 4):
+            batch = _envelope(spark, [_conforming(k * 100 + i) for i in range(10)])
+            t = T0 + dt.timedelta(seconds=k)
+            group = f"quiet-{uuid.uuid4().hex}"
+            jobs.append(budget.run(group, lambda: loop.process_batch(batch, t))[1])
+    finally:
+        budget.close()
+    # the first tick also samples the payload schema
+    assert jobs[1:] == [2, 2]
+    assert commitlog.read(state)[:2] == (3, [])
+    loop.close()
+
+
+# two ticks that each dead-letter one id, retry one and park one
+_DURABLE_STATUSES = {"1": 404, "2": 503, "11": 404, "12": 503}
+_DURABLE_TICKS = [
+    ([_row(1), _row(2), _row(3), _row(4, attrs=FAR_FUTURE)], T0),
+    (
+        [_row(11), _row(12), _row(13), _row(14, attrs=FAR_FUTURE)],
+        T0 + dt.timedelta(milliseconds=500),
+    ),
+]
+
+
+@pytest.mark.parametrize(
+    "crash", ["after the pending write", "after the dead write", "at the COMMITTED swap"]
+)
+def test_durable_tick_replayed_after_a_crash_applies_once(spark, tmp_path, monkeypatch, crash):
+    """A tick that crashes after writing its pending rows, after writing
+    its dead letters, or at the manifest swap leaves the state of the
+    last committed tick; replaying its batch on a restarted loop gives
+    the state of a run that never crashed, with one dead letter per
+    404 id."""
+    sub = Subscription.from_spec({})
+
+    def loop_on(state):
+        return DeliveryLoop(spark, sub, StatusSink(_DURABLE_STATUSES), "sub-d", state_dir=state)
+
+    uncrashed = loop_on(str(tmp_path / "uncrashed"))
+    for rows, t in _DURABLE_TICKS:
+        uncrashed.process_batch(_envelope(spark, rows), t)
+
+    state = str(tmp_path / "state")
+    loop = loop_on(state)
+    (rows0, t0), (rows1, t1) = _DURABLE_TICKS
+    loop.process_batch(_envelope(spark, rows0), t0)
+    committed = (_sorted_rows(loop.pending), _sorted_rows(loop.dead))
+    if crash == "at the COMMITTED swap":
+        real_replace = os.replace
+
+        def replace(src, dst):
+            if dst.endswith("COMMITTED"):
+                raise OSError(crash)
+            real_replace(src, dst)
+
+        monkeypatch.setattr(os, "replace", replace)
+    else:
+        kind = "p" if "pending" in crash else "d"
+        real_parquet = DataFrameWriter.parquet
+
+        def parquet(self, path, *args, **kwargs):
+            real_parquet(self, path, *args, **kwargs)
+            if os.path.basename(path).startswith(kind):
+                raise OSError(crash)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(OSError):
+        loop.process_batch(_envelope(spark, rows1), t1)
+    monkeypatch.undo()
+
+    restarted = loop_on(state)
+    assert (_sorted_rows(restarted.pending), _sorted_rows(restarted.dead)) == committed
+    restarted.process_batch(_envelope(spark, rows1), t1)
+    for replayed in (restarted, loop_on(state)):
+        assert sorted(r.id for r in replayed.dead.collect()) == ["1", "11"]
+        assert sorted(r.id for r in replayed.pending.collect()) == ["12", "14", "2", "4"]
+        assert _sorted_rows(replayed.pending) == _sorted_rows(uncrashed.pending)
+        assert _sorted_rows(replayed.dead) == _sorted_rows(uncrashed.dead)
+
+
+def test_durable_replayed_batch_calls_no_sink(spark, tmp_path):
+    """A batch id at or below the committed one is a replay: the tick
+    calls no sink and leaves the state as it is, on the loop that
+    committed it and on a restarted one. The next batch id runs."""
+    spool, state = str(tmp_path / "spool"), str(tmp_path / "state")
+    os.makedirs(spool)
+    sub = Subscription.from_spec({})
+    loop = DeliveryLoop(spark, sub, SpoolSink(spool), "sub-d", state_dir=state)
+    # 7 fails its first attempt, 13 is a 404, 15 is delivered
+    batch = _envelope(spark, [_row(7), _row(13), _row(15)])
+    loop.process_batch(batch, T0, batch_id=3)
+    manifest = commitlog.read(state)
+    assert manifest.meta == {"applied_epoch": "3"}
+
+    def sunk():
+        return sorted(_read_spool(spool, os.listdir(spool)))
+
+    assert sunk() == [["13", 0, 404], ["15", 0, 200], ["7", 0, 503]]
+
+    restarted = DeliveryLoop(spark, sub, SpoolSink(spool), "sub-d", state_dir=state)
+    later = T0 + dt.timedelta(seconds=5)  # 7's retry is due
+    for replayed in (loop, restarted):
+        for batch_id in (2, 3):
+            res = replayed.process_batch(batch, later, batch_id=batch_id)
+            assert res.counts == {
+                "pulled": 0, "delivered": 0, "retried": 0, "dead": 0, "pending": 1
+            }
+        assert len(sunk()) == 3
+        assert commitlog.read(state) == manifest
+        assert [r.id for r in replayed.dead.collect()] == ["13"]
+        assert [r.id for r in replayed.pending.collect()] == ["7"]
+
+    res = restarted.process_batch(_envelope(spark, []), later, batch_id=4)
+    assert [r.id for r in res.delivered.collect()] == ["7"]
+    assert len(sunk()) == 4
+    assert commitlog.read(state).meta == {"applied_epoch": "4"}
+
+
+def test_second_durable_loop_on_a_state_dir_is_fenced(spark, tmp_path):
+    """Two loops over one state_dir: the one that commits second read
+    an older epoch, so its commit raises ``ConcurrentWriterError`` and
+    the first loop's state stands."""
+    state = str(tmp_path / "state")
+    sub = Subscription.from_spec({})
+    first = DeliveryLoop(spark, sub, StatusSink({"1": 404}), "sub-d", state_dir=state)
+    second = DeliveryLoop(spark, sub, StatusSink({"2": 404}), "sub-d", state_dir=state)
+    first.process_batch(_envelope(spark, [_row(1), _row(3, attrs=FAR_FUTURE)]), T0)
+    with pytest.raises(ConcurrentWriterError):
+        second.process_batch(_envelope(spark, [_row(2), _row(4, attrs=FAR_FUTURE)]), T0)
+    restored = DeliveryLoop(spark, sub, StatusSink({}), "sub-d", state_dir=state)
+    assert [r.id for r in restored.dead.collect()] == ["1"]
+    assert [r.id for r in restored.pending.collect()] == ["3"]
+
+
+def test_durable_stream_skips_a_replayed_micro_batch(spark, tmp_path):
+    """``run_stream`` commits each foreachBatch id with the tick. A
+    stream restarted after a crash between that commit and the stream's
+    own re-runs its last batch; the loop skips it, so no row reaches
+    the sink again and no dead letter lands twice."""
+    src, spool, state = (str(tmp_path / d) for d in ("src", "spool", "state"))
+    os.makedirs(spool)
+    for k in range(2):
+        # two 404s (multiples of 13) and one delivered id
+        rows = [_row(13 * (2 * k + j)) for j in (1, 2)] + [_row(100 * k + 1)]
+        _envelope(spark, rows).coalesce(1).write.mode("append").parquet(src)
+    ckpt = str(tmp_path / "ckpt")
+    sub = Subscription.from_spec({})
+
+    def run():
+        loop = DeliveryLoop(spark, sub, SpoolSink(spool), "sub-d", state_dir=state)
+        stream = spark.readStream.schema(_envelope(spark, []).schema)
+        q = loop.run_stream(stream.option("maxFilesPerTrigger", 1).parquet(src), ckpt)
+        q.awaitTermination()
+        assert q.exception() is None
+        return loop
+
+    run()
+    assert commitlog.read(state).meta == {"applied_epoch": "1"}
+    calls = sorted(os.listdir(spool))
+    for name in ("1", ".1.crc"):  # the stream had not committed batch 1
+        os.remove(f"{ckpt}/commits/{name}")
+    loop = run()
+    assert [m["epoch"] for m in loop.metrics] == [1]
+    assert sorted(os.listdir(spool)) == calls
+    dead = sorted(r.id for r in loop.dead.collect())
+    assert dead == sorted(i for name in calls for i, _, s in _read_spool(spool, [name]) if s == 404)
+    assert len(dead) == len(set(dead)) == 4

@@ -138,3 +138,28 @@ def test_worker_run_stream_exports_per_loop_counters(spark, tmp_path):
     assert w.delivered_counts() == {"c": 0, "p": 5}
     last = max(w.loops["c"].metrics_df().collect())
     assert (last.delivered, last.new_dead, last.pending) == (0, 0, 5)
+
+
+def test_worker_run_stream_skips_a_replayed_micro_batch(spark, tmp_path):
+    """The worker's stream passes its foreachBatch id to every loop: a
+    durable loop commits it, and a restarted stream that re-runs the
+    batch (the stream had not committed it) delivers nothing again."""
+    from vanus_spark import commitlog
+    from vanus_spark.sources.streams import read_envelope_stream
+
+    src, ckpt, state = (str(tmp_path / d) for d in ("bus", "ckpt", "state"))
+    _envelope(spark, [_row(i) for i in range(4)]).coalesce(1).write.parquet(src)
+
+    def run():
+        w = TriggerWorker(spark).register("p", {}, Recorder(404), state_dir=state)
+        q = w.run_stream(read_envelope_stream(spark, src, "parquet"), ckpt)
+        q.awaitTermination(120)
+        return w.loops["p"]
+
+    assert run().prom_counters["dead_letter_event_number"] == 4
+    assert commitlog.read(state).meta == {"applied_epoch": "0"}
+    for name in ("0", ".0.crc"):
+        (tmp_path / "ckpt" / "commits" / name).unlink()
+    replayed = run()
+    assert replayed.metrics == [{"epoch": 0, "delivered": 0, "new_dead": 0, "pending": 0}]
+    assert replayed.dead.count() == 4

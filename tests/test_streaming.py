@@ -467,9 +467,10 @@ def test_durable_dead_letter_accumulates(spark, tmp_path):
 
 
 def test_durable_epoch_marker_survives_a_failed_swap(spark, tmp_path, monkeypatch):
-    """The EPOCH marker is replaced atomically: a tick that fails at the
-    marker swap leaves the previous epoch and its pending table
-    restorable (an in-place write could leave an empty marker)."""
+    """The COMMITTED manifest, which holds the epoch, is replaced
+    atomically: a tick that fails at its swap leaves the previous epoch
+    and its pending table restorable, and the failed loop's own state
+    at that epoch."""
     import os
 
     state = str(tmp_path / "state3")
@@ -480,20 +481,23 @@ def test_durable_epoch_marker_survives_a_failed_swap(spark, tmp_path, monkeypatc
 
     real_replace = os.replace
 
-    def crash_at_marker(src, dst):
-        if dst.endswith("EPOCH"):
-            raise OSError("crash at the marker swap")
+    def crash_at_swap(src, dst):
+        if dst.endswith("COMMITTED"):
+            raise OSError("crash at the manifest swap")
         real_replace(src, dst)
 
-    monkeypatch.setattr(os, "replace", crash_at_marker)
+    monkeypatch.setattr(os, "replace", crash_at_swap)
     with pytest.raises(OSError):
+        # "1" is due again and fails again: attempt 2 would park
         loop.process_batch(_envelope(spark, [_row(2)]), T0 + dt.timedelta(seconds=1))
     monkeypatch.undo()
     loop2 = DeliveryLoop(
         spark, Subscription.from_spec({}), FlakySink(set()), "sub-d3", state_dir=state
     )
-    assert loop2._epoch == 1
-    assert [r.id for r in loop2.pending.collect()] == ["1"]
+    for restored in (loop, loop2):
+        assert restored._epoch == 1
+        (parked,) = restored.pending.collect()
+        assert (parked.id, parked.attributes["xvanusretryattempts"]) == ("1", "1")
 
 
 def test_max_uack_caps_each_tick_and_drains_fifo(spark):

@@ -175,10 +175,6 @@ def col_to_int(c: Column) -> Column:
     ).otherwise(F.lit(None).cast("long"))
 
 
-def col_numeric_to_int(c: Column) -> Column:
-    return c.try_cast("double").cast("long")
-
-
 def col_to_string(c: Column) -> Column:
     """Go %v float rendering: integral floats print without '.0'."""
     d = c.try_cast("double")

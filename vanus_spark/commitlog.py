@@ -1,6 +1,6 @@
 """Epoch-fenced commit log: the one commit protocol behind every durable
-store (the control-plane catalog, ``ManifestTable`` and the
-dedup-ingest state).
+store (the control-plane catalog, ``ManifestTable``, the dedup-ingest
+state and the delivery loop's pending and dead-letter state).
 
 The reference makes metadata and log writes atomic and single-writer
 through its Raft-replicated store (server/store/raft/). Here a store
@@ -18,9 +18,10 @@ Manifest stores share one layout and text format:
 
 An entry names a data directory, optionally behind a key and followed
 by a path inside it (``5:g3-1a2b3c4d/_b=5`` maps a table's bucket 5,
-``b3-1a2b3c4d`` is a dedup-ingest batch). A data directory's name
-starts with one letter and its generation number, so generations order
-every write, committed or not.
+``b3-1a2b3c4d`` is a dedup-ingest batch, ``p3-1a2b3c4d`` a delivery
+loop's pending rows). A data directory's name starts with one letter
+and its generation number, so generations order every write,
+committed or not.
 """
 
 from __future__ import annotations
@@ -202,9 +203,10 @@ def vacuum(store_dir: str, data_dirs: list[str], retain_epochs: int = 1) -> int:
     directories deleted.
 
     Only directories whose generation is at most the highest retained
-    one are candidates: an in-flight writer's directories carry a
-    higher generation than anything committed when it started, so a
-    concurrent vacuum never deletes them."""
+    one are candidates, so an in-flight generation above everything
+    committed survives. One that a later commit overtook does not:
+    writer A takes g5, writer B takes g6 and commits, and a vacuum
+    then deletes A's unreferenced g5."""
     eps = epochs(store_dir)
     retained = set(eps[-max(1, retain_epochs) :])
     live = read(store_dir)

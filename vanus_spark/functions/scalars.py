@@ -346,13 +346,6 @@ def condition_if(source: Column, op: str, compare, true_val, false_val) -> Colum
     return F.when(cond, tv).otherwise(fv)
 
 
-def length_of(c: Column, dtype: str = "string") -> Column:
-    """LENGTH of string/array/map (reference: common_function.go:23-39)."""
-    if dtype in ("array", "map"):
-        return F.size(c).cast("long")
-    return F.length(c.cast("string")).cast("long")
-
-
 def unfold_array(arr: Column, prefix: str, max_size: int) -> list[Column]:
     """UNFOLD_ARRAY: element i -> column '<prefix>-<i>'
     (reference: action/array/unfold_array.go:51-75). Static schema needs

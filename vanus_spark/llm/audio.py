@@ -135,28 +135,6 @@ def _decode_audio_bytes(raw: bytes, stub: bool) -> tuple[int, int, int, list[flo
     return rate, 1 + d[2] % 2, n, [b / 255.0 for b in d[3:8]]
 
 
-def attach_audio_metadata(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Decode-free metadata: magic sniffing + byte length as pure
-    Columns (stays JVM-side; bytes never leave the executor)."""
-    c = F.col(content_col)
-    magic = F.substring(c, 1, 4).cast("string")
-    tag = F.substring(c, 9, 4).cast("string")
-    fmt = (
-        F.when((magic == "RIFF") & (tag == "WAVE"), "wav")
-        .when(magic.startswith("ID3"), "mp3")
-        .when(magic == "OggS", "ogg")
-        .when(magic == "fLaC", "flac")
-        .otherwise("unknown")
-    )
-    return df.withColumn(
-        "meta",
-        F.struct(
-            fmt.alias("format"),
-            F.length(c).cast("long").alias("n_bytes"),
-        ),
-    )
-
-
 def decode_audio(
     df: DataFrame,
     content_col: str = "content",

@@ -171,30 +171,6 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_base_hash(c: Column) -> Column:
-    """31-bit base hash of a shingle string (md5-derived, portable)."""
-    return md5_long(c) % MINHASH_P
-
-
-def minhash_signature(c: Column, num_hashes: int = 16, shingle_n: int = 3) -> Column:
-    """Array of `num_hashes` minhashes over word shingles. The base
-    md5 hash is computed once per shingle; each permutation is
-    (a_i*h + b_i) mod p — 16 array_mins over one hashed array."""
-    base = F.transform(shingles(c, shingle_n), lambda s: minhash_base_hash(s))
-
-    def perm_min(hs, a, b):
-        return F.array_min(
-            F.transform(hs, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P))
-        )
-
-    return bound(
-        base,
-        lambda hs: F.array(
-            *[perm_min(hs, a, b) for a, b in minhash_coeffs(num_hashes)]
-        ),
-    )
-
-
 def shingles_df(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:
@@ -449,16 +425,6 @@ def simhash_df(
         ).otherwise(F.lit(0).cast("long"))
         fingerprint = term if fingerprint is None else fingerprint + term
     return hashed.select(F.col(id_col), fingerprint.alias("fingerprint"))
-
-
-def simhash_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16) -> DataFrame:
-    """Group docs by identical simhash fingerprint (the hamming-radius
-    expansion joins on fingerprint splits; radius 0 here)."""
-    return (
-        simhash_df(docs, text_col, id_col, bits)
-        .groupBy("fingerprint")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("dup_count"))
-    )
 
 
 def simhash_near_pairs(

@@ -209,10 +209,6 @@ def sample_video_frames(
 # pure-Column y4m synthesis (real bytes for the parser to walk)
 # ---------------------------------------------------------------------------
 
-def synth_y_value(mid, f, p):
-    """Luma pixel p of frame f for media mid (engine-portable ints)."""
-    return (mid + f * 7 + p) % 256
-
 
 def synthesize_y4m_video(
     docs: DataFrame, id_col: str = "doc_id", max_rows: int | None = None

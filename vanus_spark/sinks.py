@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import json
-from typing import Any, Callable, Sequence
+from typing import Any, Callable
 
 ERR_UNKNOWN = 600  # reference: interface.go:63 errUnknown
 ERR_DELIVERY_TIMEOUT = 601  # reference: interface.go:64 errDeliveryTimeout
@@ -217,15 +217,5 @@ def grpc_batched_sink(
             status = _guard(lambda p=payloads: transport(target, p))
             statuses.extend([status] * len(chunk))
         return statuses
-
-    return sink
-
-
-def sequence_statuses(statuses: Sequence[int]) -> Callable[[list[dict[str, Any]]], list[int]]:
-    """Test helper: a sink that replays a fixed status sequence."""
-    it = iter(list(statuses))
-
-    def sink(rows: list[dict[str, Any]]) -> list[int]:
-        return [next(it, 200) for _ in rows]
 
     return sink

@@ -8,8 +8,8 @@ DeliveryLoop's pluggable sink. This module provides:
 - envelope readers for parquet/JSON-lines directories (the file-bus —
   what the test image supports),
 - a Kafka reader (gated: the connector jar isn't in this image),
-- sink factories: an HTTP webhook sink (gated on ``requests``) and a
-  collecting sink for tests.
+- a collecting sink for tests (the FaaS and gRPC sinks are in
+  ``vanus_spark.sinks``).
 
 At scale the bus IS Kafka (or a cloud log service): `(topic-partition,
 offset)` maps 1:1 to the reference's `(eventlog, offset)`, and
@@ -19,7 +19,7 @@ store.
 
 from __future__ import annotations
 
-from typing import Any, Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -55,44 +55,6 @@ def read_kafka_stream(
         F.col("offset").alias("offset"),
     )
     return parsed.select("e.*", "eventlog", "offset")
-
-
-def http_webhook_sink(url: str, timeout_s: float = 5.0) -> Callable[[list[dict[str, Any]]], list[int]]:
-    """POST each event to a webhook (reference: server/trigger/client/
-    http.go). Returns per-event HTTP status codes, which feed the
-    retry/DLQ router. Gated on ``requests`` being importable."""
-    try:
-        import requests  # noqa: F401
-    except ImportError as e:  # pragma: no cover
-        raise NotImplementedError(
-            "http sink needs the 'requests' package (not in this image); "
-            "use a custom sink_fn"
-        ) from e
-
-    def sink(rows: list[dict[str, Any]]) -> list[int]:
-        import requests
-
-        out = []
-        for r in rows:
-            try:
-                resp = requests.post(
-                    url,
-                    data=r.get("data") or "",
-                    headers={
-                        "Content-Type": r.get("datacontenttype") or "application/json",
-                        "ce-id": str(r.get("id")),
-                        "ce-source": str(r.get("source")),
-                        "ce-type": str(r.get("type")),
-                        "ce-specversion": str(r.get("specversion")),
-                    },
-                    timeout=timeout_s,
-                )
-                out.append(resp.status_code)
-            except Exception:  # noqa: BLE001 — network error == retriable 5xx
-                out.append(503)
-        return out
-
-    return sink
 
 
 class CollectingSink:

@@ -106,7 +106,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cols = ["`" + f.name.replace("`", "``") + "`" for f in schema.fields]
     exprs = [_projection(c, f, events) for c, f in zip(cols, schema.fields)]
     return df if exprs == cols else df.selectExpr(*exprs)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}

@@ -3,14 +3,16 @@
 Each micro-batch of documents is deduplicated (a) within itself —
 exact digest + MinHash-LSH near-dup, the same rules as
 ``llm.pipeline.corpus_clean`` — and (b) against everything already
-accepted, via ``llm.dedup.incremental_dedup`` probing the loop's
-STORED state: the accepted corpus and its signature table. Accepted
-rows and their signatures append to the state, so batch N+1 never
-re-hashes the corpus (reference has no counterpart — this is the
-ingest-time composition of the engine's LLM-pipeline surface, wired
-like ``DeliveryLoop``: a pure function of (batch, state), replayable
-with deterministic batches, attachable to a real stream via
-foreachBatch + checkpoint).
+accepted, by the loop's own probe of its STORED state (the accepted
+corpus and its signature table): the batch's LSH buckets equi-joined
+against buckets derived from the stored signatures, Jaccard verified,
+plus an exact-digest anti-join (the exact-only tier probes the stored
+digests alone). Accepted rows and their signatures append to the
+state, so batch N+1 never re-hashes the corpus (reference has no
+counterpart — this is the ingest-time composition of the engine's
+LLM-pipeline surface, wired like ``DeliveryLoop``: a pure function of
+(batch, state), replayable with deterministic batches, attachable to a
+real stream via foreachBatch + checkpoint).
 
 At 100 TB: state lives as parquet/Delta tables keyed by doc id
 (``state_dir``); the per-batch cost is hash(batch) + two key joins
@@ -219,8 +221,8 @@ class DedupIngestLoop:
         near-dup (drop the higher id of every Jaccard >= t pair) —
         identical rules to corpus_clean. Cross-batch: exact digest
         anti-join + new-bands x stored-bands candidates, Jaccard
-        verified, via incremental_dedup probing the stored signature
-        table."""
+        verified, the stored bands derived from the stored signature
+        table; every drop set applies in one anti-join."""
         # a micro-batch is referenced many times downstream (signature
         # chain, bucket self-join both sides, Jaccard both sides) —
         # materialize the exact-dedup survivors once instead of

@@ -92,10 +92,15 @@ class TriggerWorker:
             loop.close()
 
     def process_batch(
-        self, batch_df: DataFrame, batch_time, tick_seconds: float = 1.0
+        self,
+        batch_df: DataFrame,
+        batch_time,
+        tick_seconds: float = 1.0,
+        batch_id: int | None = None,
     ) -> dict[str, SinkResult]:
         """One shared tick: cache the batch, run every subscription's
-        loop over it, release. Results keyed by sub_id.
+        loop over it, release. Results keyed by sub_id. ``batch_id``
+        reaches every loop (see ``DeliveryLoop.process_batch``).
 
         The unpersist in the finally block is only safe because each
         DeliveryLoop.process_batch EAGERLY materializes its work pass
@@ -107,7 +112,7 @@ class TriggerWorker:
         cached = batch_df.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             return {
-                sub_id: loop.process_batch(cached, batch_time, tick_seconds)
+                sub_id: loop.process_batch(cached, batch_time, tick_seconds, batch_id)
                 for sub_id, loop in sorted(self.loops.items())
             }
         finally:
@@ -131,7 +136,7 @@ class TriggerWorker:
             import datetime as _dt
 
             results = self.process_batch(
-                batch_df, _dt.datetime.now(_dt.timezone.utc), tick_seconds
+                batch_df, _dt.datetime.now(_dt.timezone.utc), tick_seconds, epoch_id
             )
             for sub_id, res in results.items():
                 self.loops[sub_id].record_tick(epoch_id, res.counts)

@@ -45,8 +45,9 @@ exactly like the reference's own unit strategy for the wheel.
 
 At scale: pending is small relative to throughput (only failures and
 delays), so the union is cheap. A tick runs two jobs (the work and sink
-passes), one more when rows die and the dead state is in memory (its
-own checkpoint), and one more on a tick with drift rows (the
+passes), one more when rows die (the in-memory dead state's checkpoint,
+or the durable dead-letter write), one more when a durable tick leaves
+rows pending (their write), and one more on a tick with drift rows (the
 interpreter pass; two with its exchange once there are ``_WIDEN_ROWS``
 of them). Compiled ticks have no exchange. A loop's first tick with
 rows also takes its payload sample (one small job and one more source
@@ -59,14 +60,22 @@ Each pass runs one task per partition of the work pass: the batch's
 own partitions plus the few the carried pending needs, so a sink pass
 starts no Python worker for an empty carried partition. The loop's
 empty frames (its initial state, a gated tick's results) are local
-relations, which run no task at all. For exactly-once
-bookkeeping the delivered/dead tables would be Delta/Iceberg appends
-keyed by (eventlog, offset) — plain parquet appends here since those
-jars aren't in the test image.
+relations, which run no task at all.
+
+With a ``state_dir`` the pending and dead state is durable through the
+shared commit log (``vanus_spark.commitlog``): each tick writes its
+pending rows and its new dead letters, when it has any, to fresh
+generation directories and commits them in one epoch-fenced manifest
+swap, with the stream's batch id as ``applied_epoch``. A crash before
+the swap leaves orphans no restore reads; a replayed batch at or below
+the applied epoch is skipped, so its dead letters never land twice; a
+second writer on the directory is fenced.
 """
 
 from __future__ import annotations
 
+import os
+import uuid
 import weakref
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator
@@ -75,7 +84,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from vanus_spark.commitlog import write_atomic
+from vanus_spark import commitlog
 from vanus_spark.delivery import (
     ERR_TRANSFORM_CODE,
     ORDER_EVENT_CODE,
@@ -174,10 +183,11 @@ class DeliveryLoop:
         catalog=None,
         catalog_sub_id: int | None = None,
     ):
-        """``state_dir`` makes pending/dead state durable: the pending
-        table snapshots per epoch (alternating dirs, so a crash mid-
-        write leaves the previous epoch intact) and the DLQ appends —
-        a restarted loop resumes its parked retries/delays. In-memory
+        """``state_dir`` makes pending/dead state durable through the
+        shared commit log: each tick commits its pending directory and
+        every dead-letter directory so far in one manifest, so a
+        restarted loop resumes its parked retries/delays and a crash
+        mid-tick leaves the last committed tick intact. In-memory
         (localCheckpoint) otherwise — fine for tests, not restarts."""
         self.spark = spark
         self.sub = subscription
@@ -192,7 +202,11 @@ class DeliveryLoop:
         # from where delivery stopped.
         self.catalog = catalog
         self.catalog_sub_id = catalog_sub_id
+        # durable state: the manifest epoch this loop last observed and
+        # the last stream batch id committed with it
         self._epoch = 0
+        self._applied = -1
+        self._writer_id = uuid.uuid4().hex[:8]
         # local relations: reading them runs no task
         self.empty_envelope = local_frame(
             spark,
@@ -205,6 +219,8 @@ class DeliveryLoop:
             "due_ts", F.lit(None).cast("timestamp")
         )
         self.dead: DataFrame = self.empty_envelope
+        # the initial state, whose schemas the durable state is read with
+        self._empty = {"p": self.pending, "d": self.dead}
         # this loop's local checkpoints, each as (RDD ids, weak references
         # to the frames handed out that read them): a tick's passes with
         # its pending and SinkResult frames, the in-memory dead state
@@ -229,39 +245,61 @@ class DeliveryLoop:
             "dead_letter_event_number": 0,
         }
         if state_dir:
+            os.makedirs(state_dir, exist_ok=True)  # the commit lock's home
             self._restore_state()
 
     # ----- durable state ---------------------------------------------------
 
-    def _pending_dir(self, epoch: int) -> str:
-        return f"{self.state_dir}/pending_e{epoch % 2}"
+    # One commit per tick. Its entries name the tick's pending directory
+    # ("p<generation>-<writer>") and every dead-letter directory so far
+    # ("d..."), all under data/. A directory is written only when the
+    # tick has such rows, with mode("error"); the writer token keeps two
+    # live loops out of one directory, and the fence refuses the later
+    # commit. State is read back with the schemas of the loop's initial
+    # state, so no read infers one.
+
+    def _read_state(self, entries: list[str], kind: str) -> DataFrame:
+        dirs = [f"{self.state_dir}/data/{e}" for e in entries if e.startswith(kind)]
+        if not dirs:
+            return self._empty[kind]
+        return self.spark.read.schema(self._empty[kind].schema).parquet(*dirs)
 
     def _restore_state(self) -> None:
-        import os
+        self._epoch, entries, meta = commitlog.read(self.state_dir)
+        self._applied = int(meta.get("applied_epoch", -1))
+        self.pending = self._read_state(entries, "p")
+        self.dead = self._read_state(entries, "d")
 
-        marker = f"{self.state_dir}/EPOCH"
-        if os.path.exists(marker):
-            with open(marker) as f:
-                self._epoch = int(f.read().strip())
-            self.pending = self.spark.read.parquet(self._pending_dir(self._epoch))
-        dead_dir = f"{self.state_dir}/dead"
-        if os.path.isdir(dead_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(dead_dir)
-        ):
-            self.dead = self.spark.read.parquet(dead_dir)
-
-    def _persist_state(self, new_dead: DataFrame) -> None:
-        """Write the state and read it back with the schema it was
-        written with (inferring it would be a footer-reading job per
-        read)."""
-        self._epoch += 1
-        path = self._pending_dir(self._epoch)
-        dead_dir = f"{self.state_dir}/dead"
-        self.pending.write.mode("overwrite").parquet(path)
-        self.pending = self.spark.read.schema(self.pending.schema).parquet(path)
-        new_dead.write.mode("append").parquet(dead_dir)
-        self.dead = self.spark.read.schema(new_dead.schema).parquet(dead_dir)
-        write_atomic(f"{self.state_dir}/EPOCH", str(self._epoch))
+    def _commit_state(
+        self,
+        pending: DataFrame,
+        new_dead: DataFrame,
+        counts: dict[str, int],
+        batch_id: int | None,
+    ) -> None:
+        """Write the tick's pending and new dead rows, commit them (the
+        fence raises ``ConcurrentWriterError`` when another writer
+        committed since this loop read the log), then drop the pending
+        directories the last two commits no longer name."""
+        data = f"{self.state_dir}/data"
+        entries = [e for e in commitlog.read(self.state_dir).entries if e.startswith("d")]
+        written = []
+        gen = commitlog.next_generation([data])
+        for kind, df, rows in (("p", pending, counts["pending"]), ("d", new_dead, counts["dead"])):
+            if rows:
+                name = f"{kind}{gen}-{self._writer_id}"
+                df.write.mode("error").parquet(f"{data}/{name}")
+                written.append(name)
+        applied = self._applied if batch_id is None else batch_id
+        entries += written
+        self._epoch = commitlog.commit(
+            self.state_dir, self._epoch, entries, {"applied_epoch": str(applied)}
+        )
+        self._applied = applied
+        commitlog.vacuum(self.state_dir, [data], retain_epochs=2)
+        self.pending = self._read_state(written, "p")
+        if counts["dead"]:
+            self.dead = self._read_state(entries, "d")
 
     def _data_schema(self, batch_df: DataFrame):
         """The payload schema the compiled tier runs under, frozen for
@@ -342,7 +380,11 @@ class DeliveryLoop:
         }
 
     def process_batch(
-        self, batch_df: DataFrame, batch_time, tick_seconds: float = 1.0
+        self,
+        batch_df: DataFrame,
+        batch_time,
+        tick_seconds: float = 1.0,
+        batch_id: int | None = None,
     ) -> SinkResult:
         """One micro-batch tick; updates pending/dead state and returns
         what happened. The tick is eager: the batch is transformed once
@@ -359,23 +401,20 @@ class DeliveryLoop:
         the sender this tick; the excess parks in pending (due
         immediately) and drains FIFO — by (time, id) — on later ticks,
         exactly the bounded-unacked-window behavior of the reference's
-        offset tracker."""
-        # 0. control-plane gate: a stopped subscription receives nothing
+        offset tracker.
+
+        ``batch_id`` is the stream's micro-batch id (``run_stream``
+        passes foreachBatch's). A durable loop commits it with the
+        tick's state and skips a batch at or below the committed one —
+        a replay after a crash between the commit and the stream's own
+        — without calling the sink or changing the state."""
+        # 0. a replayed batch, or a stopped subscription, receives nothing
+        if batch_id is not None and batch_id <= self._applied:
+            return self._idle(0)
         if self.catalog is not None and self.catalog_sub_id is not None:
             self.catalog.refresh()
             if not self.catalog.subscription_is_active(self.catalog_sub_id):
-                return SinkResult(
-                    delivered=self.empty_envelope,
-                    pending=self.pending,
-                    dead=self.empty_envelope,
-                    counts={
-                        "pulled": batch_df.count(),
-                        "delivered": 0,
-                        "retried": 0,
-                        "dead": 0,
-                        "pending": self.pending.count(),
-                    },
-                )
+                return self._idle(batch_df.count())
         c = self._cols
         now = F.lit(batch_time).cast("timestamp")
         width = self.spark.sparkContext.defaultParallelism
@@ -487,13 +526,15 @@ class DeliveryLoop:
         # session's cores: each carried partition is one more Python task
         # in the next sink pass, and the union would otherwise add the
         # batch's partitions to the carried ones on every tick
-        self.pending = pending.coalesce(self._pending_width(counts["pending"], width))
+        pending = pending.coalesce(self._pending_width(counts["pending"], width))
         if self.state_dir:
-            self._persist_state(new_dead)
-        elif counts["dead"]:
-            self.dead = (
-                self.dead.unionByName(new_dead).coalesce(width).localCheckpoint(eager=True)
-            )
+            self._commit_state(pending, new_dead, counts, batch_id)
+        else:
+            self.pending = pending
+            if counts["dead"]:
+                self.dead = (
+                    self.dead.unionByName(new_dead).coalesce(width).localCheckpoint(eager=True)
+                )
         res = SinkResult(
             delivered=sent.where(c["ok"]).drop("status", "error"),
             pending=self.pending,
@@ -521,6 +562,21 @@ class DeliveryLoop:
         self._held = keep + entries
         self._unpersist(stale)
         return res
+
+    def _idle(self, pulled: int) -> SinkResult:
+        """A tick that delivers nothing and leaves the state as it is."""
+        return SinkResult(
+            delivered=self.empty_envelope,
+            pending=self.pending,
+            dead=self.empty_envelope,
+            counts={
+                "pulled": pulled,
+                "delivered": 0,
+                "retried": 0,
+                "dead": 0,
+                "pending": self.pending.count(),
+            },
+        )
 
     def _pending_width(self, rows: int, width: int) -> int:
         """Partitions for ``rows`` carried rows: one per
@@ -638,7 +694,7 @@ class DeliveryLoop:
             if heartbeat:
                 batch_df = batch_df.where(F.col("id") != self._HEARTBEAT_ID)
             counts = self.process_batch(
-                batch_df, _dt.datetime.now(_dt.timezone.utc), tick_seconds
+                batch_df, _dt.datetime.now(_dt.timezone.utc), tick_seconds, epoch_id
             ).counts
             self.record_tick(epoch_id, counts)
 
