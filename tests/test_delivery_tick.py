@@ -182,29 +182,45 @@ def test_ticks_sink_once_and_count_from_the_spool(spark, tmp_path):
     assert passing == set(delivered) | dead | pending
 
 
-def test_held_rdds_stay_flat_over_ticks(spark, tmp_path):
-    """In memory, a tick releases the previous tick's passes: the
-    loop's persisted RDDs are the same number after 5 and 20 ticks."""
+def _held_over_ticks(spark, tmp_path, ids, state_dir=None) -> tuple[dict, DeliveryLoop]:
+    """20 ticks of fresh events ``k * 91 + i`` for i in ``ids`` (k*91 is
+    a multiple of 7 and 13: i = 0 is a 404 after a 503, and the 503
+    parks once); the loop's persisted RDD count after each tick."""
     sc = spark.sparkContext
     first_id = sc.parallelize([0]).id()
-
-    def held() -> int:
-        return sum(1 for i in sc._jsc.getPersistentRDDs().keySet() if i > first_id)
-
-    # per tick of 8 fresh events (k*91 is a multiple of 7 and 13):
-    # one dead (404), one parked once (503)
-    loop = DeliveryLoop(spark, Subscription.from_spec({}), SpoolSink(str(tmp_path)))
+    spool = str(tmp_path / "spool")
+    os.makedirs(spool)
+    loop = DeliveryLoop(spark, Subscription.from_spec({}), SpoolSink(spool), state_dir=state_dir)
     t = T0
     sizes = {}
     for k in range(1, 21):
-        rows = [_row(k * 91 + i) for i in range(8)]
-        loop.process_batch(_envelope(spark, rows), t)
-        sizes[k] = held()
+        loop.process_batch(_envelope(spark, [_row(k * 91 + i) for i in ids]), t)
+        sizes[k] = sum(1 for i in sc._jsc.getPersistentRDDs().keySet() if i > first_id)
         t += dt.timedelta(seconds=2)
+    return sizes, loop
+
+
+def test_held_rdds_stay_flat_over_ticks(spark, tmp_path):
+    """In memory, a tick releases the previous tick's passes: the
+    loop's persisted RDDs are the same number after 5 and 20 ticks."""
+    # per tick of 8 events: one dead (404), one parked once (503)
+    sizes, loop = _held_over_ticks(spark, tmp_path, range(8))
     assert sizes[5] == sizes[20] <= 3
     # and the state still reads: 503s drained on the next tick, 404s dead
     assert loop.pending.count() == 1
     assert loop.dead.count() == 20
+    loop.close()
+
+
+def test_held_rdds_stay_flat_over_quiet_durable_ticks(spark, tmp_path):
+    """A durable loop whose ticks leave nothing pending and nothing dead
+    releases each tick's passes too: its pending is the loop's empty
+    frame from tick 1 on, and reads none of them."""
+    # per tick of 6 events, all delivered
+    sizes, loop = _held_over_ticks(spark, tmp_path, range(1, 7), str(tmp_path / "state"))
+    assert sizes[5] == sizes[20] <= 3
+    assert loop.pending.count() == loop.dead.count() == 0
+    loop.close()
 
 
 def test_a_held_frame_keeps_its_passes(spark, tmp_path):
@@ -817,7 +833,9 @@ def test_durable_stream_skips_a_replayed_micro_batch(spark, tmp_path):
         return loop
 
     run()
-    assert commitlog.read(state).meta == {"applied_epoch": "1"}
+    with open(f"{ckpt}/metadata") as f:
+        query_id = json.load(f)["id"]
+    assert commitlog.read(state).meta == {"applied_epoch": "1", "stream": query_id}
     calls = sorted(os.listdir(spool))
     for name in ("1", ".1.crc"):  # the stream had not committed batch 1
         os.remove(f"{ckpt}/commits/{name}")
@@ -827,3 +845,71 @@ def test_durable_stream_skips_a_replayed_micro_batch(spark, tmp_path):
     dead = sorted(r.id for r in loop.dead.collect())
     assert dead == sorted(i for name in calls for i, _, s in _read_spool(spool, [name]) if s == 404)
     assert len(dead) == len(set(dead)) == 4
+
+
+def test_new_checkpoint_on_a_durable_state_dir_delivers(spark, tmp_path):
+    """Batch ids count within one stream: a stream started with a new
+    checkpoint over a ``state_dir`` that an older stream committed
+    batch 1 to restarts its ids at 0, and the loop delivers its batches
+    rather than skipping them as replays."""
+    spool, state = str(tmp_path / "spool"), str(tmp_path / "state")
+    os.makedirs(spool)
+    sub = Subscription.from_spec({})
+    schema = _envelope(spark, []).schema
+
+    def run(name: str, files: list[list[int]]) -> DeliveryLoop:
+        # one file a batch, every id delivered on its first attempt
+        src = str(tmp_path / f"src-{name}")
+        for ids in files:
+            _envelope(spark, [_row(i) for i in ids]).coalesce(1).write.mode("append").parquet(src)
+        loop = DeliveryLoop(spark, sub, SpoolSink(spool), "sub-d", state_dir=state)
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+        q = loop.run_stream(stream.parquet(src), str(tmp_path / f"ckpt-{name}"))
+        q.awaitTermination()
+        assert q.exception() is None
+        assert commitlog.read(state).meta == {"applied_epoch": "1", "stream": str(q.id)}
+        return loop
+
+    run("a", [[101, 102], [103, 106]])
+    loop = run("b", [[201, 202], [204, 205]])
+    assert [m["epoch"] for m in loop.metrics] == [0, 1]
+    assert loop.delivered_count == 4
+    sunk = sorted(i for i, _, _ in _read_spool(spool, os.listdir(spool)))
+    assert sunk == ["101", "102", "103", "106", "201", "202", "204", "205"]
+
+
+def test_dead_letter_directories_fold_at_the_listing_threshold(spark, tmp_path):
+    """A durable loop adds a dead-letter directory on each tick with
+    dead rows; at Spark's parallel-listing threshold the next such tick
+    folds them all into its own, so a dead tick keeps its job count
+    and the dead letters read back once each, on the loop and on a
+    restored one."""
+    state = str(tmp_path / "state")
+    key = runner._LISTING_THRESHOLD
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    budget = _Budget(spark)
+    try:
+        statuses = {str(13 * k): 404 for k in range(1, 9)}
+        loop = DeliveryLoop(
+            spark, Subscription.from_spec({}), StatusSink(statuses), "sub-d", state_dir=state
+        )
+        jobs, dead_dirs = [], []
+        for k in range(1, 9):
+            batch = _envelope(spark, [_row(13 * k), _row(13 * k + 1)])
+            t = T0 + dt.timedelta(seconds=k)
+            group = f"fold-{uuid.uuid4().hex}"
+            jobs.append(budget.run(group, lambda: loop.process_batch(batch, t))[1])
+            dead_dirs.append(sum(e.startswith("d") for e in commitlog.read(state).entries))
+        restored = DeliveryLoop(spark, Subscription.from_spec({}), StatusSink({}), state_dir=state)
+        restored_dead = sorted(r.id for r in restored.dead.collect())
+    finally:
+        budget.close()
+        spark.conf.set(key, threshold)
+    # the work and sink passes and the dead-letter write; a listing job
+    # would make it 4
+    assert jobs == [3] * 8
+    assert dead_dirs == [1, 2, 3, 1, 2, 3, 1, 2]
+    expected = sorted(str(13 * k) for k in range(1, 9))
+    assert sorted(r.id for r in loop.dead.collect()) == restored_dead == expected
+    loop.close()

@@ -157,7 +157,9 @@ def test_worker_run_stream_skips_a_replayed_micro_batch(spark, tmp_path):
         return w.loops["p"]
 
     assert run().prom_counters["dead_letter_event_number"] == 4
-    assert commitlog.read(state).meta == {"applied_epoch": "0"}
+    with open(f"{ckpt}/metadata") as f:
+        query_id = json.load(f)["id"]
+    assert commitlog.read(state).meta == {"applied_epoch": "0", "stream": query_id}
     for name in ("0", ".0.crc"):
         (tmp_path / "ckpt" / "commits" / name).unlink()
     replayed = run()

@@ -66,10 +66,13 @@ With a ``state_dir`` the pending and dead state is durable through the
 shared commit log (``vanus_spark.commitlog``): each tick writes its
 pending rows and its new dead letters, when it has any, to fresh
 generation directories and commits them in one epoch-fenced manifest
-swap, with the stream's batch id as ``applied_epoch``. A crash before
-the swap leaves orphans no restore reads; a replayed batch at or below
-the applied epoch is skipped, so its dead letters never land twice; a
-second writer on the directory is fenced.
+swap, with the stream's batch id as ``applied_epoch`` and its query id
+as ``stream``. A crash before the swap leaves orphans no restore reads;
+a replayed batch of the same stream at or below the applied epoch is
+skipped, so its dead letters never land twice; a second writer on the
+directory is fenced. Once the dead-letter directories reach Spark's
+parallel-listing threshold, the tick that adds one folds them all into
+it, so no read of them runs a listing job.
 """
 
 from __future__ import annotations
@@ -135,6 +138,11 @@ _SAMPLE_ROWS = 1000
 # cores (the interpreter alone, one partition vs widened): 2,000 rows
 # 0.31 vs 0.45 s, 5,000 rows 0.48 vs 0.50 s, 20,000 rows 1.02 vs 0.66 s.
 _WIDEN_ROWS = 5000
+# the id Structured Streaming gives a query and keeps in its checkpoint,
+# set on the thread that runs the query's batches
+_QUERY_ID = "sql.streaming.queryId"
+# the number of paths above which Spark lists a read's files with a job
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
 _STATUS_SCHEMA_SUFFIX = ", status int, error string"
@@ -202,10 +210,12 @@ class DeliveryLoop:
         # from where delivery stopped.
         self.catalog = catalog
         self.catalog_sub_id = catalog_sub_id
-        # durable state: the manifest epoch this loop last observed and
-        # the last stream batch id committed with it
+        # durable state: the manifest epoch this loop last observed, and
+        # the last stream batch id committed with it and the query id of
+        # its stream (None outside a stream)
         self._epoch = 0
         self._applied = -1
+        self._stream: str | None = None
         self._writer_id = uuid.uuid4().hex[:8]
         # local relations: reading them runs no task
         self.empty_envelope = local_frame(
@@ -256,7 +266,9 @@ class DeliveryLoop:
     # tick has such rows, with mode("error"); the writer token keeps two
     # live loops out of one directory, and the fence refuses the later
     # commit. State is read back with the schemas of the loop's initial
-    # state, so no read infers one.
+    # state, so no read infers one; the dead-letter directories are
+    # folded into one before a read of them would take Spark's listing
+    # job.
 
     def _read_state(self, entries: list[str], kind: str) -> DataFrame:
         dirs = [f"{self.state_dir}/data/{e}" for e in entries if e.startswith(kind)]
@@ -267,6 +279,7 @@ class DeliveryLoop:
     def _restore_state(self) -> None:
         self._epoch, entries, meta = commitlog.read(self.state_dir)
         self._applied = int(meta.get("applied_epoch", -1))
+        self._stream = meta.get("stream")
         self.pending = self._read_state(entries, "p")
         self.dead = self._read_state(entries, "d")
 
@@ -276,13 +289,19 @@ class DeliveryLoop:
         new_dead: DataFrame,
         counts: dict[str, int],
         batch_id: int | None,
+        stream: str | None,
     ) -> None:
         """Write the tick's pending and new dead rows, commit them (the
         fence raises ``ConcurrentWriterError`` when another writer
-        committed since this loop read the log), then drop the pending
-        directories the last two commits no longer name."""
+        committed since this loop read the log), then drop the
+        directories the last two commits no longer name. A tick whose
+        dead letters would take the dead-letter directories past
+        Spark's listing threshold writes them with all the committed
+        ones, and its commit names that directory alone."""
         data = f"{self.state_dir}/data"
         entries = [e for e in commitlog.read(self.state_dir).entries if e.startswith("d")]
+        if counts["dead"] and len(entries) >= int(self.spark.conf.get(_LISTING_THRESHOLD)):
+            new_dead, entries = self._read_state(entries, "d").unionByName(new_dead), []
         written = []
         gen = commitlog.next_generation([data])
         for kind, df, rows in (("p", pending, counts["pending"]), ("d", new_dead, counts["dead"])):
@@ -290,12 +309,12 @@ class DeliveryLoop:
                 name = f"{kind}{gen}-{self._writer_id}"
                 df.write.mode("error").parquet(f"{data}/{name}")
                 written.append(name)
-        applied = self._applied if batch_id is None else batch_id
+        if batch_id is None:
+            batch_id, stream = self._applied, self._stream
+        meta = {"applied_epoch": str(batch_id), **({"stream": stream} if stream else {})}
         entries += written
-        self._epoch = commitlog.commit(
-            self.state_dir, self._epoch, entries, {"applied_epoch": str(applied)}
-        )
-        self._applied = applied
+        self._epoch = commitlog.commit(self.state_dir, self._epoch, entries, meta)
+        self._applied, self._stream = batch_id, stream
         commitlog.vacuum(self.state_dir, [data], retain_epochs=2)
         self.pending = self._read_state(written, "p")
         if counts["dead"]:
@@ -405,12 +424,18 @@ class DeliveryLoop:
 
         ``batch_id`` is the stream's micro-batch id (``run_stream``
         passes foreachBatch's). A durable loop commits it with the
-        tick's state and skips a batch at or below the committed one —
-        a replay after a crash between the commit and the stream's own
-        — without calling the sink or changing the state."""
+        tick's state, and with the query id Structured Streaming sets
+        on the thread running the batch. It skips a batch of the same
+        query at or below the committed id — a replay after a crash
+        between the commit and the stream's own — without calling the
+        sink or changing the state. A batch of another query (a new
+        checkpoint, whose ids restart at 0) runs."""
         # 0. a replayed batch, or a stopped subscription, receives nothing
-        if batch_id is not None and batch_id <= self._applied:
-            return self._idle(0)
+        stream = None
+        if self.state_dir and batch_id is not None:
+            stream = self.spark.sparkContext.getLocalProperty(_QUERY_ID)
+            if stream == self._stream and batch_id <= self._applied:
+                return self._idle(0)
         if self.catalog is not None and self.catalog_sub_id is not None:
             self.catalog.refresh()
             if not self.catalog.subscription_is_active(self.catalog_sub_id):
@@ -528,7 +553,7 @@ class DeliveryLoop:
         # batch's partitions to the carried ones on every tick
         pending = pending.coalesce(self._pending_width(counts["pending"], width))
         if self.state_dir:
-            self._commit_state(pending, new_dead, counts, batch_id)
+            self._commit_state(pending, new_dead, counts, batch_id, stream)
         else:
             self.pending = pending
             if counts["dead"]:
@@ -542,12 +567,11 @@ class DeliveryLoop:
             retried=retry,
             counts=counts,
         )
-        entries = [
-            (
-                [rdd_id(df) for df in passes],
-                [weakref.ref(df) for df in (self.pending, res.delivered, new_dead, retry)],
-            )
-        ]
+        handed = [res.delivered, new_dead, retry]
+        if not self.state_dir:
+            # a durable pending reads its parquet, not this tick's passes
+            handed.append(self.pending)
+        entries = [([rdd_id(df) for df in passes], [weakref.ref(df) for df in handed])]
         if not self.state_dir and counts["dead"]:
             entries.append(([rdd_id(self.dead)], [weakref.ref(self.dead)]))
         # release what no frame reads any more: the state now reads this
